@@ -167,7 +167,8 @@ def main() -> None:
                 "sf": sf,
                 "calibration_scan_sec": calib,
                 "master": spark.sparkContext.master,
-                "cpus": int(cpus),
+                # the raw string when not an integer (e.g. "*")
+                "cpus": int(cpus) if cpus.isdigit() else cpus,
                 "parallel_probe_sec": probe,
                 "queries_normalized": norm,
                 "normalized_total": round(total / calib, 2) if calib else None,

@@ -148,28 +148,6 @@ class Max(Alg):
 
 
 @dataclass
-class MinBy(Alg):
-    """argmin — free capability beyond the reference's fold list."""
-
-    e: ColumnLike = None
-    ord: ColumnLike = None
-    name: str = "min_by"
-
-    def exprs(self) -> list[Column]:
-        return [F.min_by(_c(self.e), _c(self.ord)).alias(self.name)]
-
-
-@dataclass
-class MaxBy(Alg):
-    e: ColumnLike = None
-    ord: ColumnLike = None
-    name: str = "max_by"
-
-    def exprs(self) -> list[Column]:
-        return [F.max_by(_c(self.e), _c(self.ord)).alias(self.name)]
-
-
-@dataclass
 class Avg(Alg):
     """Mean — the reference expresses it as Sum/Size (e.g.
     ``emma-lib/.../lib/stats/stat.scala:23-62``); built-in here."""
@@ -225,19 +203,6 @@ class CollectList(Alg):
 
     def exprs(self) -> list[Column]:
         col = F.collect_list(_c(self.e))
-        if self.sort:
-            col = F.sort_array(col)
-        return [col.alias(self.name)]
-
-
-@dataclass
-class CollectSet(Alg):
-    e: ColumnLike = None
-    name: str = "value_set"
-    sort: bool = False
-
-    def exprs(self) -> list[Column]:
-        col = F.collect_set(_c(self.e))
         if self.sort:
             col = F.sort_array(col)
         return [col.alias(self.name)]

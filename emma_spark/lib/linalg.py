@@ -37,24 +37,6 @@ def sqdist(x: Column, y: Column) -> Column:
     )
 
 
-def norm2(x: Column) -> Column:
-    return F.sqrt(dot(x, x))
-
-
-def axpy(a: Column | float, x: Column, y: Column) -> Column:
-    """a*x + y elementwise."""
-    a = F.lit(float(a)) if not isinstance(a, Column) else a
-    return F.zip_with(x, y, lambda xi, yi: a * xi + yi)
-
-
 def scale(a: Column | float, x: Column) -> Column:
     a = F.lit(float(a)) if not isinstance(a, Column) else a
     return F.transform(x, lambda v: a * v)
-
-
-def vadd(x: Column, y: Column) -> Column:
-    return F.zip_with(x, y, lambda a, b: a + b)
-
-
-def vsub(x: Column, y: Column) -> Column:
-    return F.zip_with(x, y, lambda a, b: a - b)

@@ -86,16 +86,6 @@ def encode_freq_hash(toks: Column, n: int = 1 << 10) -> Column:
     )
 
 
-def encode_bin_hash(toks: Column, n: int = 1 << 10) -> Column:
-    """Binary presence vector (``encode.bin``)."""
-    idx = F.array_distinct(
-        F.transform(toks, lambda t: F.pmod(F.xxhash64(t), F.lit(n)).cast("int"))
-    )
-    return F.map_from_entries(
-        F.transform(idx, lambda k: F.struct(k.alias("k"), F.lit(1.0).alias("v")))
-    )
-
-
 def encode_freq_dict(df: DataFrame, vocab: DataFrame, toks_col: str = "toks",
                      id_cols: tuple[str, ...] = ("doc_id",)) -> DataFrame:
     """Dictionary frequency encode: explode + join vocab + re-group to

@@ -128,6 +128,13 @@ def lsh_candidate_pairs(
     (a, b) with a < b; NULL signatures (empty docs) drop out of the
     equi-join exactly like the oracle's `=` comparisons.
 
+    PRECONDITION: ``sigs`` holds exactly ONE signature row per
+    ``id_col`` value (``minhash_signature`` groups by the id, so its
+    output qualifies). The first-matching-band filter below dedups a
+    pair by comparing the two rows' signatures, which names the pair
+    uniquely only under this precondition: two rows for one id would
+    emit that pair more than once.
+
     FIRST-MATCHING-BAND dedup, not DISTINCT (r13 optimization, guide
     §2.4 — remove shuffles outright): a pair that collides in several
     bands used to be emitted once per band and collapsed by a
@@ -190,6 +197,9 @@ def lsh_candidate_pairs(
         for bp in range(b):
             m = F.lit(True)
             for r in range(rows):
+                # band bp's key k{r} is column mh{bp * rows + r} (the
+                # `structs` above), so this conjunction is exactly
+                # "band bp's bucket key matches"
                 c = f"mh{bp * rows + r}"
                 m = m & (F.col(c) == F.col(f"{c}_r"))
             prior = prior | m

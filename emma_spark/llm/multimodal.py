@@ -58,17 +58,6 @@ VIDEO_META = T.StructType(
 )
 
 
-def image_table_schema(id_type: T.DataType = T.LongType()) -> T.StructType:
-    """The canonical multimodal table shape: (id, blob, meta)."""
-    return T.StructType(
-        [
-            T.StructField("id", id_type),
-            T.StructField("blob", T.BinaryType()),
-            T.StructField("meta", IMAGE_META),
-        ]
-    )
-
-
 # ---------------------------------------------------------------- metadata ops
 def filter_by_meta(df: DataFrame, predicate: Column) -> DataFrame:
     """Metadata-only filter — never touches the blob; with parquet the

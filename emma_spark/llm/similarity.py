@@ -56,7 +56,7 @@ def nonzero(vec: Column) -> Column:
     """Zero-norm gate: TRUE iff any coordinate is nonzero.
 
     Cosine of a zero-norm vector is undefined — under ANSI the 0/0
-    raises DIVIDE_BY_ZERO (found by tools/fuzzcheck_embeddings.py; a
+    raises DIVIDE_BY_ZERO (found by ``tools/fuzz.py embeddings``; a
     100 TB corpus WILL contain zero embeddings from empty documents or
     padding rows). Every similarity entry point EXCLUDES zero vectors:
     the algebraic form of the ingest-time reject production vector

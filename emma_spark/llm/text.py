@@ -185,18 +185,6 @@ def fingerprint(text: Column) -> Column:
     return md5_long(norm)
 
 
-def with_text_features(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Attach the full feature block + lang guess + fingerprint."""
-    t = F.col(text_col)
-    out = df
-    for name, col in quality_metrics(t).items():
-        out = out.withColumn(name, col)
-    return (
-        out.withColumn("lang_guess", lang_id(t))
-        .withColumn("fp", fingerprint(t))
-    )
-
-
 def kmv_distinct_estimate(
     df, group_col: str, value_col: str, k: int = 32, id_salt: str = "kmv"
 ):

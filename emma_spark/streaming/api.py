@@ -26,7 +26,7 @@ time (ms-parsed-as-s lands in ~2100) advances it past all real data
 and every later row in a restart-resume deployment drops silently.
 ``quarantine_future_skew`` / ``quarantine_out_of_band`` enforce the
 bound ahead of ``with_watermark``; the restart-resume differential
-tier (tools/fuzzcheck_restart.py) certifies the class.
+tier (``tools/fuzz.py restart``) certifies the class.
 
 The COLUMN face of the same ingest contract (r11 judge find, closed
 r12): a producer renaming/dropping a measure column mid-stream is
@@ -58,10 +58,6 @@ def read_stream_parquet(
     for k, v in options.items():
         r = r.option(k, v)
     return r.parquet(path)
-
-
-def read_stream_rate(spark: SparkSession, rows_per_sec: int = 100) -> DataFrame:
-    return spark.readStream.format("rate").option("rowsPerSecond", rows_per_sec).load()
 
 
 def with_watermark(df: DataFrame, ts_col: str, delay: str) -> DataFrame:
@@ -402,29 +398,43 @@ def run_to_memory(
     per-partition store setup; an unbounded production run with many
     millions of keys should pass a number sized to the cluster.
 
-    CHECKPOINT PLACEMENT (r13 optimization, guide §5/§6): the memory
-    sink is non-fault-tolerant by definition and Spark deletes the
-    drain's temporary checkpoint at stop — the checkpoint here is pure
-    scratch. On a LOCAL master (driver and executors share one
-    machine) it goes to a RAM-backed dir when one exists
+    CHECKPOINT PLACEMENT: the memory sink is non-fault-tolerant by
+    definition, so the drain's checkpoint is always scratch — it is
+    deleted when the drain ends, wherever it was placed; a drain is
+    never resumable. On a LOCAL master (every process on one machine)
+    it goes to a RAM-backed dir when one exists
     (``/dev/shm``): the HDFS-backed state store writes one delta file
     per partition per batch plus offset/commit WAL files, and on a
     disk-backed ``java.io.tmpdir`` that file churn was ~30% of the
     whole drain (measured sf0.1: 1.47 s → 1.10 s). On a cluster
     master the default placement is unchanged (executors must reach
-    the checkpoint; node-local RAM would break that), and
-    ``SPARK_GRAFT_STREAM_CKPT`` overrides the base dir everywhere
-    (set it to shared storage for a durable-drain deployment)."""
+    the checkpoint; node-local RAM would break that).
+    ``SPARK_GRAFT_STREAM_CKPT`` overrides the base dir everywhere; it
+    must be a local directory (a plain path or a ``file:`` URI) —
+    any other URI scheme raises ``ValueError``, because the scratch
+    checkpoint could not be deleted there. Durable, resumable
+    streaming output is ``foreach_batch_parquet`` with a
+    caller-provided checkpoint."""
     import os
     import shutil
     import tempfile
     import uuid as _uuid
+    from urllib.parse import urlparse
 
     spark = stream_df.sparkSession
+    base = os.environ.get("SPARK_GRAFT_STREAM_CKPT")
+    if base is not None:
+        url = urlparse(base)
+        if url.scheme not in ("", "file"):
+            raise ValueError(
+                f"SPARK_GRAFT_STREAM_CKPT={base!r}: the drain checkpoint "
+                "is scratch deleted after the drain, so it must be a "
+                f"local directory, not a {url.scheme!r} URI"
+            )
+        base = url.path if url.scheme else base
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     if state_partitions is not None:
         spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    base = os.environ.get("SPARK_GRAFT_STREAM_CKPT")
     if base is None and spark.sparkContext.master.startswith("local"):
         base = "/dev/shm" if os.path.isdir("/dev/shm") else tempfile.gettempdir()
     ckpt = (

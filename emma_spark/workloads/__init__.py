@@ -30,7 +30,7 @@ def rd(col, dp: int):
     where DuckDB's floor keeps them — without the guard a stray NaN
     quietly becomes a zero (and an inf a garbage clamp) in the output
     instead of loudly poisoning it (r8 NaN/inf fuzz,
-    tools/fuzzcheck_nan.py).
+    ``tools/fuzz.py nan``).
 
     Returns DOUBLE for ANY input type (the non-finite branch forces
     the CASE's type unification to double) — callers quantizing a

@@ -25,7 +25,7 @@ def sql_cos(a: str = "qv", b: str = "cv") -> str:
 
 SQL_COS = sql_cos("qv", "cv")
 
-# zero-norm gate (the fuzzcheck_embeddings finding): cosine of a zero
+# zero-norm gate (the tools/fuzz.py embeddings finding): cosine of a zero
 # vector is 0/0 — every similarity oracle excludes zero vectors exactly
 # like the engine side (llm/similarity.nonzero)
 NZ = S.sql_nonzero

@@ -142,7 +142,7 @@ def stream_watermark_append(spark, sf_dir):
     which the oracle mirrors (IS NOT NULL in the window sum AND the
     watermark subquery — the watermark advances on VALID rows only).
     Certified by the restart tier's DRIFT pass
-    (tools/fuzzcheck_restart.py)."""
+    (``tools/fuzz.py restart``)."""
     staged = _stage_events(spark, sf_dir)
     stream = S.read_stream_parquet(spark, staged, _staged_schema(spark, staged))
     valid, _quarantine = S.quarantine_out_of_band(stream, "ts", "7 days")

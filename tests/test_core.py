@@ -83,6 +83,21 @@ def test_empty_bag_fold_contracts(spark):
     assert e.forall(lambda x: x.value > 0) is True
 
 
+def test_alg_is_empty(spark):
+    """IsEmpty as a fold (api/DataBag.scala:216-219): True on the empty
+    bag, False otherwise, and fusable with other algs in one pass."""
+    assert DataBag.empty(spark, "value double").fold(alg.IsEmpty()) is True
+    b = DataBag.apply(spark, [1, 2])
+    assert b.fold(alg.IsEmpty(), alg.Size()) == (False, 2)
+
+
+def test_alg_collect_list_groups(spark):
+    """CollectList as the grouped value bag (api/DataBag.scala:106)."""
+    b = DataBag.apply(spark, [("a", 3), ("a", 1), ("b", 2)], schema="k string, v int")
+    rows = b.group_by(["k"]).agg(alg.CollectList("v", sort=True)).collect()
+    assert {r["k"]: list(r["values"]) for r in rows} == {"a": [1, 3], "b": [2]}
+
+
 def test_count_find_top_bottom(spark):
     b = DataBag.apply(spark, [5, 3, 1, 4, 1, 5, 9, 2, 6])
     assert b.count(lambda x: x.value > 4) == 4

@@ -16,15 +16,8 @@ import sys
 
 sys.path.insert(0, "/root/repo")
 
-from tools import (  # noqa: E402
-    fuzzcheck,
-    fuzzcheck_cross,
-    fuzzcheck_embeddings,
-    fuzzcheck_events,
-    fuzzcheck_joins,
-    fuzzcheck_orders,
-)
-from tools.fuzzcore import run_fuzz  # noqa: E402
+from tools import fuzz  # noqa: E402
+from tools.fuzz import run_fuzz  # noqa: E402
 
 # contract-heavy picks: tokenization/case-fold (the r5 seam), cumsum
 # packing (the r6 red), array HOFs on empty docs (two r6 crashes),
@@ -48,8 +41,8 @@ _EVENT_SUBSET = {
 
 
 def test_fuzz_documents_subset(spark):
-    path = fuzzcheck.build_corpus()
-    con = fuzzcheck.connect(path)
+    path = fuzz.corpus("documents")
+    con = fuzz.connect(path, {"documents"})
     n_ok, n_skip, failures = run_fuzz(
         spark, con, path, {"documents"}, only=_DOC_SUBSET, quiet=True
     )
@@ -71,8 +64,8 @@ _ORD_SUBSET = {
 
 
 def test_fuzz_orders_subset(spark):
-    path = fuzzcheck_orders.build_corpus()
-    con = fuzzcheck_orders.connect(path)
+    path = fuzz.corpus("orders")
+    con = fuzz.connect(path, {"orders"})
     n_ok, n_skip, failures = run_fuzz(
         spark, con, path, {"orders"}, only=_ORD_SUBSET, quiet=True
     )
@@ -97,10 +90,10 @@ _JOIN_SUBSET = {
 
 
 def test_fuzz_joins_subset(spark):
-    path = fuzzcheck_joins.build_corpus()
-    con = fuzzcheck_joins.connect(path)
+    path = fuzz.corpus("joins")
+    con = fuzz.connect(path, fuzz.JOIN_TABLES)
     n_ok, n_skip, failures = run_fuzz(
-        spark, con, path, set(fuzzcheck_joins.TABLES),
+        spark, con, path, set(fuzz.JOIN_TABLES),
         only=_JOIN_SUBSET, quiet=True
     )
     assert not failures, "\n".join(failures)
@@ -119,8 +112,8 @@ _EMB_SUBSET = {
 
 
 def test_fuzz_embeddings_subset(spark):
-    path = fuzzcheck_embeddings.build_corpus()
-    con = fuzzcheck_embeddings.connect(path)
+    path = fuzz.corpus("embeddings")
+    con = fuzz.connect(path, {"embeddings"})
     n_ok, n_skip, failures = run_fuzz(
         spark, con, path, {"embeddings"}, only=_EMB_SUBSET, quiet=True
     )
@@ -130,8 +123,8 @@ def test_fuzz_embeddings_subset(spark):
 
 
 def test_fuzz_events_subset(spark):
-    path = fuzzcheck_events.build_corpus()
-    con = fuzzcheck_events.connect(path)
+    path = fuzz.corpus("events")
+    con = fuzz.connect(path, {"events"})
     n_ok, n_skip, failures = run_fuzz(
         spark, con, path, {"events"}, only=_EVENT_SUBSET, quiet=True
     )
@@ -154,8 +147,8 @@ def test_fuzz_events_constant_tier(spark):
     """Zero-variance daily series: every ratio-of-moments denominator
     is exactly 0 (r8 VERDICT ask #2 — this corpus shape found three
     real one-sided divergences on first run, all fixed in r9)."""
-    path = fuzzcheck_events.build_corpus_constant()
-    con = fuzzcheck_events.connect(path)
+    path = fuzz.corpus("events_const")
+    con = fuzz.connect(path, {"events"})
     n_ok, n_skip, failures = run_fuzz(
         spark, con, path, {"events"}, only=_EVENT_CONST_SUBSET, quiet=True
     )
@@ -186,12 +179,10 @@ def test_fuzz_sparse_subset(spark):
     p*n = 0 AUC, NULL-poisoned SGD batches, empty file-staging globs.
     One-sided crashes are differential FAILs here (both-sides
     contract raises remain SKIPs)."""
-    from tools import fuzzcheck_sparse
-
-    path = fuzzcheck_sparse.build_corpus()
-    con = fuzzcheck_sparse.connect(path)
+    path = fuzz.corpus("sparse")
+    con = fuzz.connect(path, fuzz.ALL_TABLES)
     n_ok, n_skip, failures = run_fuzz(
-        spark, con, path, set(fuzzcheck_sparse.ALL_TABLES),
+        spark, con, path, set(fuzz.ALL_TABLES),
         only=_SPARSE_SUBSET, quiet=True,
     )
     assert not failures, "\n".join(failures)
@@ -202,8 +193,8 @@ def test_fuzz_orders_constant_tier(spark):
     """Constant prices + rigid weekday rhythm: within-group variance
     and m2 are exactly 0 for the orders moment statistics (the r9
     try_divide guards on ANOVA F and Jarque-Bera are pinned here)."""
-    path = fuzzcheck_orders.build_corpus_constant()
-    con = fuzzcheck_orders.connect(path)
+    path = fuzz.corpus("orders_const")
+    con = fuzz.connect(path, {"orders"})
     n_ok, n_skip, failures = run_fuzz(
         spark, con, path, {"orders"}, only=_ORDER_CONST_SUBSET, quiet=True
     )
@@ -225,11 +216,11 @@ def test_fuzz_cross_family(spark):
     adversarial warehouse (the corpus that found search_hybrid_rrf's
     zero-norm crash and the fingerprint NULL-content divergence) —
     plus the excluded-family regressions only this corpus covers."""
-    path = fuzzcheck_cross.build_corpus()
-    con = fuzzcheck_cross.connect(path)
-    wanted = fuzzcheck_cross.CROSS_QUERIES | _UNIFIED_EXTRAS
+    path = fuzz.corpus("cross")
+    con = fuzz.connect(path, fuzz.ALL_TABLES)
+    wanted = fuzz.CROSS_QUERIES | _UNIFIED_EXTRAS
     n_ok, n_skip, failures = run_fuzz(
-        spark, con, path, set(fuzzcheck_cross.TABLES),
+        spark, con, path, set(fuzz.ALL_TABLES),
         only=wanted, quiet=True
     )
     assert not failures, "\n".join(failures)
@@ -244,14 +235,11 @@ def test_fuzz_nan_subset(spark):
     fold_global must MATCH (NaN-propagating qsum both engines); the
     domain-error names must be loud engine-errors (both engines
     reject, or a user fold fn is not NaN-total), never silent FAILs."""
-    from tools import fuzzcheck_nan as N
     from tools.diffcheck import compare_one
     from emma_spark.workloads import load_all
 
-    from tools import fuzzcheck_joins as J
-
-    path = N.build_corpus()
-    con = J.connect(N.FUZZ_DIR)
+    path = fuzz.corpus("nan")
+    con = fuzz.connect(path, fuzz.JOIN_TABLES)
     qs = load_all()
     for name in ("fold_global", "fold_histogram_pandas_udaf",
                  "fold_reduce_option", "agg_stats_moments"):
@@ -297,12 +285,10 @@ def test_fuzz_empty_facts_subset(spark):
     x//0, literal map/array seeds built from empty collects must not
     fail analysis, and driver-side model fits return typed empty
     frames instead of None-arithmetic crashes."""
-    from tools import fuzzcheck_empty
-
-    path = fuzzcheck_empty.build_corpus()
-    con = fuzzcheck_empty.connect(path)
+    path = fuzz.corpus("empty")
+    con = fuzz.connect(path, fuzz.ALL_TABLES)
     n_ok, n_skip, failures = run_fuzz(
-        spark, con, path, set(fuzzcheck_empty.ALL_TABLES),
+        spark, con, path, set(fuzz.ALL_TABLES),
         only=_EMPTY_SUBSET, quiet=True,
     )
     assert not failures, "\n".join(failures)
@@ -322,12 +308,10 @@ def test_fuzz_monokey_skew_subset(spark):
     one value — single-group aggregates (kappa's zero chance-correction
     denominator), one user's giant session window, maximal tie density
     under the widened-slot argmax rule, worst-case LSH bucket load."""
-    from tools import fuzzcheck_skew
-
-    path = fuzzcheck_skew.build_corpus()
-    con = fuzzcheck_skew.connect(path)
+    path = fuzz.corpus("skew")
+    con = fuzz.connect(path, fuzz.ALL_TABLES)
     n_ok, n_skip, failures = run_fuzz(
-        spark, con, path, set(fuzzcheck_skew.ALL_TABLES),
+        spark, con, path, set(fuzz.ALL_TABLES),
         only=_SKEW_SUBSET, quiet=True,
     )
     assert not failures, "\n".join(failures)
@@ -351,12 +335,10 @@ def test_fuzz_epoch_straddle_subset(spark):
     calendar truncation, and gap arithmetic must agree cross-engine
     (the tier's first run caught unix_timestamp landing one second
     late of the calendar second on pre-1970 fractional timestamps)."""
-    from tools import fuzzcheck_epoch
-
-    path = fuzzcheck_epoch.build_corpus()
-    con = fuzzcheck_epoch.connect(path)
+    path = fuzz.corpus("epoch")
+    con = fuzz.connect(path, fuzz.ALL_TABLES)
     n_ok, n_skip, failures = run_fuzz(
-        spark, con, path, set(fuzzcheck_epoch.ALL_TABLES),
+        spark, con, path, set(fuzz.ALL_TABLES),
         only=_EPOCH_SUBSET, quiet=True, exclude_prefixes=("stream_",),
     )
     assert not failures, "\n".join(failures)
@@ -379,12 +361,10 @@ def test_fuzz_domain_max_subset(spark):
     DECIMAL(38,0)/HUGEINT-lifted overflows LONG. First full-registry
     run was 397/397 clean; this subset keeps the bound-regime canaries
     in the default gate."""
-    from tools import fuzzcheck_domainmax
-
-    path = fuzzcheck_domainmax.build_corpus()
-    con = fuzzcheck_domainmax.connect(path)
+    path = fuzz.corpus("domainmax")
+    con = fuzz.connect(path, fuzz.ALL_TABLES)
     n_ok, n_skip, failures = run_fuzz(
-        spark, con, path, set(fuzzcheck_domainmax.ALL_TABLES),
+        spark, con, path, set(fuzz.ALL_TABLES),
         only=_DMAX_SUBSET, quiet=True,
     )
     assert not failures, "\n".join(failures)
@@ -411,18 +391,10 @@ def test_fuzz_negzero_subset(spark):
     """First full run was 317/317 clean registry-wide (a negative
     result: quantize-before-compare covers every output); this subset
     keeps signed-zero canaries in the default gate."""
-    from tools import fuzzcheck_negzero
-    from tools import fuzzcheck_joins as J
-
-    path = fuzzcheck_negzero.build_corpus()
-    con = J.connect(path)
-    for extra in ("events", "embeddings"):
-        con.execute(
-            f"CREATE VIEW {extra} AS SELECT * FROM "
-            f"read_parquet('{path}/{extra}.parquet')"
-        )
+    path = fuzz.corpus("negzero")
+    con = fuzz.connect(path, fuzz.TIERS["negzero"].tables)
     n_ok, n_skip, failures = run_fuzz(
-        spark, con, path, set(J.TABLES) | {"events", "embeddings"},
+        spark, con, path, set(fuzz.JOIN_TABLES) | {"events", "embeddings"},
         only=_NEGZERO_SUBSET, quiet=True,
     )
     assert not failures, "\n".join(failures)
@@ -452,12 +424,10 @@ def test_fuzz_matched_subset(spark):
     ml_grouped_ols_slopes DIVIDE_BY_ZERO fix (r9 judge repro: three
     n=1 brands -> Spark crash vs DuckDB NULL) and its mechanism
     class."""
-    from tools import fuzzcheck_matched
-
-    path = fuzzcheck_matched.build_corpus()
-    con = fuzzcheck_matched.connect(path)
+    path = fuzz.corpus("matched")
+    con = fuzz.connect(path, fuzz.ALL_TABLES)
     n_ok, n_skip, failures = run_fuzz(
-        spark, con, path, set(fuzzcheck_matched.ALL_TABLES),
+        spark, con, path, set(fuzz.ALL_TABLES),
         only=_MATCHED_SUBSET, quiet=True,
     )
     assert not failures, "\n".join(failures)
@@ -484,12 +454,10 @@ def test_fuzz_ties_subset(spark):
     ambiguity. A pass certifies the selection is pinned to a
     deterministic total order on both engines (i.e. results at scale
     are partition-layout-independent even when the data ties)."""
-    from tools import fuzzcheck_ties
-
-    path = fuzzcheck_ties.build_corpus()
-    con = fuzzcheck_ties.connect(path)
+    path = fuzz.corpus("ties")
+    con = fuzz.connect(path, fuzz.ALL_TABLES)
     n_ok, n_skip, failures = run_fuzz(
-        spark, con, path, set(fuzzcheck_ties.ALL_TABLES),
+        spark, con, path, set(fuzz.ALL_TABLES),
         only=_TIES_SUBSET, quiet=True,
     )
     assert not failures, "\n".join(failures)
@@ -516,12 +484,10 @@ def test_fuzz_nullmeasures_subset(spark):
     mixed joins corpus and the zero-row empty tier (sum/avg/corr NULL,
     count(col)=0 while count(*) is large). Pins the five first-contact
     fixes of the r10 sweep."""
-    from tools import fuzzcheck_nullmeasures
-
-    path = fuzzcheck_nullmeasures.build_corpus()
-    con = fuzzcheck_nullmeasures.connect(path)
+    path = fuzz.corpus("nullmeasures")
+    con = fuzz.connect(path, fuzz.ALL_TABLES)
     n_ok, n_skip, failures = run_fuzz(
-        spark, con, path, set(fuzzcheck_nullmeasures.ALL_TABLES),
+        spark, con, path, set(fuzz.ALL_TABLES),
         only=_NULLM_SUBSET, quiet=True,
     )
     assert not failures, "\n".join(failures)
@@ -544,13 +510,11 @@ def test_fuzz_props_subset(spark):
     parser-quarantine contract: both engines SKIP bad documents whole
     (json.loads worker crash and DuckDB first-occurrence duplicate
     reads were one-sided before the fix)."""
-    from tools import fuzzcheck_props
-
-    path = fuzzcheck_props.build_corpus()
-    con = fuzzcheck_props.connect(path)
+    path = fuzz.corpus("props")
+    con = fuzz.connect(path, {"events"})
     n_ok, n_skip, failures = run_fuzz(
         spark, con, path, {"events"}, only=_PROPS_SUBSET, quiet=True,
-        exclude_prefixes=fuzzcheck_props.EXCLUDE_PREFIXES,
+        exclude_prefixes=fuzz.EVENT_EXCLUDES,
     )
     assert not failures, "\n".join(failures)
     assert n_ok + n_skip == len(_PROPS_SUBSET), (n_ok, n_skip)
@@ -582,9 +546,7 @@ def test_fuzz_restart_resume_subset(spark):
     null-filled rows, leaving the output equal to the part1-only
     oracle), and the unguarded drift control must show the silent
     NULL-absorption class the pass exists to catch."""
-    from tools import fuzzcheck_restart
-
-    n_ok, n_skip, failures = fuzzcheck_restart.run_restart(
+    n_ok, n_skip, failures = fuzz.run_restart(
         spark, only=_RESTART_SUBSET, quiet=True
     )
     assert not failures, "\n".join(failures)
@@ -592,3 +554,54 @@ def test_fuzz_restart_resume_subset(spark):
     # GUARDED) + 1 drift-control (stream_tumbling_counts is in subset)
     assert n_ok == len(_RESTART_SUBSET) + 3, (n_ok, n_skip)
     assert n_skip == 0, n_skip
+
+
+# ----------------------------------------------------------------------
+# the tier table itself (Spark-free)
+# ----------------------------------------------------------------------
+def test_fuzz_tier_builders_write_declared_tables(tmp_path):
+    """Each TIERS row's builders write exactly the tables its oracle
+    filter allows — a table the row forgets is never read, and a
+    declared table nobody writes fails every view at run time."""
+    for name, tier in fuzz.TIERS.items():
+        d = tmp_path / name
+        d.mkdir()
+        for build in tier.build:
+            build(str(d))
+        written = {p.name for p in d.iterdir()}
+        assert written == {f"{t}.parquet" for t in tier.tables}, name
+
+
+def test_fuzz_tier_scopes_select_registry_queries(monkeypatch):
+    from emma_spark.workloads import load_all
+
+    monkeypatch.setattr(fuzz, "compare_one", lambda *a: ("ok", ""))
+    for name, tier in fuzz.TIERS.items():
+        if tier.runner:
+            n = len(fuzz.eligible_workloads(load_all()))
+        else:
+            n, _, _ = run_fuzz(
+                None, None, tier.path, set(tier.tables), only=tier.scope,
+                exclude_prefixes=tier.exclude, quiet=True,
+            )
+        assert n > 0, name
+
+
+def test_fuzz_cli_list_prints_the_table(capsys):
+    assert fuzz.main(["--list"]) == 0
+    assert capsys.readouterr().out.split("\n") == [*fuzz.TIERS, ""]
+
+
+def test_fuzz_cli_rejects_unknown_input_before_spark(monkeypatch):
+    def no_spark(*a, **k):
+        raise AssertionError("Spark started")
+
+    monkeypatch.setattr("emma_spark.session.get_spark", no_spark)
+    for argv in (
+        [],
+        ["no_such_tier"],
+        ["joins", "no_such_query"],
+        ["joins", "--bogus"],
+        ["sparse", "--all", "fold_global", "--list"],
+    ):
+        assert fuzz.main(argv) == 2, argv

@@ -292,7 +292,7 @@ def test_watermark_epoch_floor_contract(spark, tmp_path):
     post-epoch windows from the same corpus emit. If this test ever
     fails with pre-1970 rows PRESENT, Spark lifted the bound: delete
     the with_watermark domain note and re-admit stream_* to
-    tools/fuzzcheck_epoch.py."""
+    ``tools/fuzz.py epoch``."""
     import uuid
 
     from emma_spark.streaming import api as S
@@ -1422,3 +1422,23 @@ def test_no_data_microbatches_off_suppresses_final_flush(spark, tmp_path):
         assert drain() == 0  # same corpus, same query: NOTHING emits
     finally:
         spark.conf.set(conf, "true")
+
+
+def test_run_to_memory_checkpoint_is_local_scratch(
+    spark, staged_events, tmp_path, monkeypatch
+):
+    """The drain checkpoint is always scratch: under a
+    SPARK_GRAFT_STREAM_CKPT ``file:`` URI it is deleted after the
+    drain, and a non-file URI scheme (where it could not be deleted)
+    is refused before the query starts."""
+    batch = spark.read.parquet(staged_events)
+    stream = S.read_stream_parquet(spark, staged_events, batch.schema)
+    agg = stream.groupBy("event_type").count()
+    name = f"ck_{uuid.uuid4().hex[:8]}"
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_CKPT", "emma-remote://bucket/ckpt")
+    with pytest.raises(ValueError, match="SPARK_GRAFT_STREAM_CKPT"):
+        S.run_to_memory(agg, name, output_mode="complete")
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_CKPT", f"file://{tmp_path}")
+    S.run_to_memory(agg, name, output_mode="complete")
+    assert spark.table(name).count() == batch.select("event_type").distinct().count()
+    assert list(tmp_path.iterdir()) == []

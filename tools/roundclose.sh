@@ -11,6 +11,7 @@
 #   2. staleness audit                  (changed tier empty / staged)
 #   3. cross-family fuzz --all          (every table-backed oracle on
 #                                        the unified adversarial corpus)
+#   3b. every other fuzz tier           (tools/fuzz.py --list)
 #   4. tri-SF vanilla sweep, window     (what the driver will run)
 #   5. full-registry sf0.001 sweep      (nothing outside the window
 #                                        regressed)
@@ -32,32 +33,12 @@ note "2/7 staleness"
 python tools/staleness.py 2>&1 | head -1 | tee -a "$LOG"
 
 note "3/7 cross-family fuzz --all"
-python tools/fuzzcheck_cross.py --all 2>/dev/null | tail -2 | tee -a "$LOG"
+python tools/fuzz.py cross --all 2>/dev/null | tail -1 | tee -a "$LOG"
 
-note "3b/7 shape tiers (empty / monokey-skew / epoch-straddle / matched)"
-python tools/fuzzcheck_empty.py 2>/dev/null | tail -1 | sed 's/^/empty: /' | tee -a "$LOG"
-python tools/fuzzcheck_skew.py 2>/dev/null | tail -1 | sed 's/^/skew:  /' | tee -a "$LOG"
-python tools/fuzzcheck_epoch.py 2>/dev/null | tail -1 | sed 's/^/epoch: /' | tee -a "$LOG"
-python tools/fuzzcheck_domainmax.py 2>/dev/null | tail -1 | sed 's/^/dmax:  /' | tee -a "$LOG"
-python tools/fuzzcheck_negzero.py 2>/dev/null | tail -1 | sed 's/^/negz:  /' | tee -a "$LOG"
-# matched-sparse (r10): facts sliced WITH FKs rewritten onto kept keys
-# — degenerate MATCHED groups, the shape sparse/monokey cannot produce
-python tools/fuzzcheck_matched.py 2>/dev/null | tail -1 | sed 's/^/match: /' | tee -a "$LOG"
-# ties (r10): full-cardinality constant measures/timestamps/text/
-# vectors — every selection-among-equals must be deterministically
-# pinned on both engines
-python tools/fuzzcheck_ties.py 2>/dev/null | tail -1 | sed 's/^/ties:  /' | tee -a "$LOG"
-# all-NULL measures (r10): rows exist, values don't — the aggregate-
-# NULL regime between the 4%-mixed joins corpus and the empty tier
-python tools/fuzzcheck_nullmeasures.py 2>/dev/null | tail -1 | sed 's/^/nullm: /' | tee -a "$LOG"
-# exotic props (r10): corrupt/duplicate-key/path-colliding JSON
-# documents — the parser-quarantine contract on both engines
-python tools/fuzzcheck_props.py 2>/dev/null | tail -1 | sed 's/^/props: /' | tee -a "$LOG"
-# restart-resume (r11): every stream workload drained in TWO
-# checkpointed availableNow runs (split staged corpus) vs the batch
-# oracle — watermark carry-over / state recovery / the far-future
-# poison class no single-run tier can reach
-python tools/fuzzcheck_restart.py 2>/dev/null | tail -1 | sed 's/^/rstrt: /' | tee -a "$LOG"
+note "3b/7 every other fuzz tier (python tools/fuzz.py --list; docs/TIERS.md)"
+for TIER in $(python tools/fuzz.py --list | grep -vx cross); do
+  python tools/fuzz.py "$TIER" 2>/dev/null | tail -1 | tee -a "$LOG"
+done
 
 note "4/7 tri-SF window sweep"
 WINDOW=$(python -c "from emma_spark.workloads import _PRIORITY; print(' '.join(_PRIORITY))" 2>/dev/null)
