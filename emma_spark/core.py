@@ -276,7 +276,7 @@ class DataBag:
             # ENGINE-side (isNotNull), not with pandas dropna(), which
             # would also drop genuine float NaN values that ARE present
             # bag elements and that a SQL aggregate over the same
-            # column would see (r7 ADVICE)
+            # column would see
             df = (
                 self._df.select(_cols(self._df, e)[0].alias("value"))
                 .where(F.col("value").isNotNull())
@@ -516,8 +516,11 @@ class DataBag:
         return DataBag(self._df.cache())
 
     def local_checkpoint(self) -> "DataBag":
-        """Truncate lineage inside driver loops (SURVEY §2.8)."""
-        return DataBag(self._df.localCheckpoint(eager=True))
+        """Truncate lineage inside driver loops (SURVEY §2.8): an eager
+        :func:`plans.cache.pin` under the engine-wide pin mode."""
+        from .plans.cache import pin
+
+        return DataBag(pin(self._df, eager=True))
 
     def unpersist(self) -> "DataBag":
         self._df.unpersist()
@@ -660,8 +663,8 @@ class GroupedBag:
             _v.alias("__v"),
             # NULL-presence decided ENGINE-side: pandas cannot tell a
             # SQL NULL from a float NaN once Arrow converts the batch,
-            # and a NaN is a PRESENT bag element the fold must see
-            # (r7 ADVICE). Rows can't just be filtered out: an
+            # and a NaN is a PRESENT bag element the fold must see.
+            # Rows can't just be filtered out: an
             # all-NULL group still emits acc == zero.
             _v.isNotNull().alias("__present"),
             F.spark_partition_id().alias("__pid"),

@@ -6,7 +6,7 @@ Reference: ``emma-lib/.../lib/graphs/transitiveClosure.scala:22-44``,
 (workloads/graph.py) runs these same shapes against recursive-CTE
 DuckDB oracles; this module is the reusable API surface.
 
-Scale notes: every iteration localCheckpoints through
+Scale notes: every iteration pins its state through
 ``plans.iterate.fixpoint`` (lineage truncation — emma's auto-cache,
 ``Caching.scala:57-130``); closure uses path doubling (O(log d)
 rounds); components propagate min labels with one shuffle per round.
@@ -18,7 +18,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..core import DataBag
-from ..plans.iterate import carry_ckpt, fixpoint
+from ..plans.cache import pin
+from ..plans.iterate import fixpoint, release
 
 
 def transitive_closure(edges: DataFrame, max_iter: int = 20) -> DataFrame:
@@ -32,7 +33,7 @@ def transitive_closure(edges: DataFrame, max_iter: int = 20) -> DataFrame:
         return p.union(ext).distinct()
 
     bag = fixpoint(paths, step, max_iter=max_iter)
-    return carry_ckpt(bag.df, bag)
+    return bag.df
 
 
 def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
@@ -58,7 +59,7 @@ def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
 
     bag = fixpoint(labels, step, converged=converged, max_iter=max_iter)
     ue.unpersist()
-    return carry_ckpt(bag.df, bag)
+    return bag.df
 
 
 def page_rank_int(
@@ -84,24 +85,10 @@ def page_rank_int(
     step is a plan. Every node here must have out-edges (no
     dangling-mass term).
 
-    Each iteration's rank table is PINNED (lineage truncation): pr_i
-    is consumed twice per round (the contribution join and the node
-    left-join), so an unpinned chain re-evaluates pr_{i-1} twice per
-    level — a 2^iters blowup that is invisible on a toy graph and
-    fatal on an sf-scaled one. The edge and degree tables are pinned
-    once (consumed every round). Pinning is SIZE-GATED on the node
-    count we compute anyway: under ~1000 nodes the 2^iters recompute
-    of toy-sized joins costs microseconds while each localCheckpoint
-    costs a fixed materialization round — the blowup only wins past
-    that.
-
-    Pins are RELEASED deterministically (r8, same block-manager
-    accounting as plans/iterate.fixpoint — DataFrame.unpersist is a
-    no-op for checkpoint blocks): each iteration's pin is eager, the
-    superseded rank table's blocks are freed as soon as its successor
-    is materialized, and the structural edge/degree pins are freed
-    once the FINAL rank table exists — so the block manager holds one
-    rank table at exit, not iters+2 tables until JVM GC."""
+    Pins are SIZE-GATED on the node count we compute anyway (under
+    ~1000 nodes each pin's materialization round costs more than the
+    recompute it saves) and released as described in _power_iterate,
+    so the block manager holds one rank table at exit."""
     n = nodes.count()
     if n == 0:
         # an empty node set has no rank distribution: zero rows (every
@@ -119,49 +106,33 @@ def page_rank_int(
 def _power_iterate(edges, nodes, pr0, teleport_col, d100, iters, gate):
     """Shared exact-integer power-iteration loop (uniform and
     personalized PageRank): one contribution join + hash-agg per
-    round. Size-gated pins with DETERMINISTIC release (same block-
-    manager accounting as plans/iterate.fixpoint — DataFrame.unpersist
-    is a no-op for checkpoint blocks).
+    round. Each rank table feeds only the next round's contribution
+    join, so there is no recompute blowup to prevent; when ``gate`` is
+    set the loop pins anyway, because it pays on sf-scaled graphs
+    (graph_pagerank_sf in same-seed traced iterative_sf01 runs, one run
+    each on 4 cores: 2.30-2.54 s per pass pinned, 2.67-3.31 s
+    unpinned). The edge and degree tables are pinned once (read every
+    round); each rank table gets a LAZY pin — the logical plan is cut at
+    call time, the blocks are written by the next eager job — and only
+    every _FLUSH_EVERY-th and the final table is eager, so a shallow
+    loop runs as one pipelined Spark job while a deep one holds at most
+    _FLUSH_EVERY·|V| rank rows in the block manager.
 
-    r12 (optimization): intermediate pins are LAZY localCheckpoints —
-    each still truncates the LOGICAL plan at call time (so the
-    2^iters branch blowup never forms) and still carries a storage
-    level (so the doubly-consumed rank table computes once, not
-    twice) — but only the FINAL rank table is materialized eagerly.
-    One pipelined Spark job therefore computes the whole chain where
-    the r8 design ran iters+2 serial jobs with a driver barrier and a
-    physical-planning round each (measured at sf0.1: five 0.17-0.38 s
-    barrier jobs per pagerank call, execution itself 0.04 s). Release
-    accounting is unchanged in outcome — every superseded block is
-    freed as soon as a materialization makes it unreachable — but the
-    free point moves to the single job boundary, so the block manager
-    briefly holds all `iters` rank tables (iters·|V| rows) instead of
-    2·|V|; the structural edge/degree pins, the footprint that scales
-    with DATA (|E|), are held for exactly as long as before."""
-    from ..plans.cache import pin as _pin
-    from ..plans.iterate import _persistent_ids, _release_ids
-
-    sc = edges.sparkSession.sparkContext
-
-    def pin(df, eager=False):
-        if not gate:
-            return df, set()
-        before = _persistent_ids(sc)
-        out = _pin(df, eager=eager)
-        return out, _persistent_ids(sc) - before
-
-    edges, e_ids = pin(edges)
-    deg, d_ids = pin(edges.groupBy("src").agg(F.count(F.lit(1)).alias("__d")))
-    pr = pr0
-    last_ids: set = set()
-    superseded: set = set()
-    # r13 (r12 ADVICE): lazy-chained pins mean the block manager holds
-    # every in-flight rank table until the next EAGER barrier, so a
-    # deep iteration would peak at iters·|V| rows. An eager flush every
-    # _FLUSH_EVERY rounds bounds the peak at _FLUSH_EVERY·|V| while
-    # keeping the single-pipelined-job win for the shallow loops every
-    # current consumer runs (3-5 iters → still exactly one barrier).
+    Release: every pin is released once an eager materialization makes
+    it unreachable, except the returned rank table, which carries its
+    own ``_ckpt_ids`` handle for the caller."""
     _FLUSH_EVERY = 8
+    pinned = []  # pins made here and not yet released, oldest first
+
+    def cut(df, eager=False):
+        if gate:
+            df = pin(df, eager=eager)
+            pinned.append(df)
+        return df
+
+    edges = cut(edges)
+    deg = cut(edges.groupBy("src").agg(F.count(F.lit(1)).alias("__d")))
+    pr = pr0
     for i in range(iters):
         contrib = (
             edges.join(pr, edges["src"] == pr["id"])
@@ -170,9 +141,8 @@ def _power_iterate(edges, nodes, pr0, teleport_col, d100, iters, gate):
             .groupBy("id")
             .agg(F.sum("__c").alias("__c"))
         )
-        superseded |= last_ids
         eager = (i == iters - 1) or ((i + 1) % _FLUSH_EVERY == 0)
-        pr, last_ids = pin(
+        pr = cut(
             nodes.join(contrib, "id", "left").select(
                 F.col("id"),
                 (
@@ -180,25 +150,18 @@ def _power_iterate(edges, nodes, pr0, teleport_col, d100, iters, gate):
                     + F.expr(f"({d100} * coalesce(__c, 0)) div 100")
                 ).cast("bigint").alias("pr"),
             ),
-            # eager tables pay a materialization barrier; the lazy
-            # predecessors' blocks are written by that same job — and
-            # once an eager table exists, every superseded block is
-            # unreachable and can be freed immediately
             eager=eager,
         )
-        if eager and superseded:
-            _release_ids(sc, superseded)
-            superseded = set()
-    # the final pr is checkpoint-backed and materialized: every
-    # intermediate rank table and the structural pins are no longer
-    # needed by anything reachable
-    _release_ids(sc, superseded | e_ids | d_ids)
-    # hand the caller the final pin's release handle (mirrors
-    # fixpoint's _ckpt_ids contract — r8 ADVICE): without it each
-    # large-graph pagerank call leaves one checkpointed rank table
-    # pinned until JVM GC. Empty when the size gate never pinned.
-    if last_ids:
-        pr._ckpt_ids = last_ids
+        if eager:
+            # this job wrote every lazy predecessor's blocks, and no
+            # live plan reads them any more
+            for df in pinned[2:-1]:
+                release(df)
+            del pinned[2:-1]
+    # the final pr is materialized: the edge and degree pins are done
+    for df in pinned:
+        if df is not pr:
+            release(df)
     return pr
 
 
@@ -267,9 +230,7 @@ def personalized_page_rank_int(
     oracle unrolls the iterations. At scale the per-iteration plan is
     unchanged from uniform PageRank (one join + one hash-agg); only
     the teleport vector differs — it shares _power_iterate and thus
-    the same size-gated pin + deterministic-release discipline (r8:
-    previously this variant never pinned, a 2^iters recompute blowup
-    waiting for the first large caller)."""
+    the same size-gated pins and release."""
     d100 = round(damping * 100)
     teleport = unit - d100 * unit // 100
     n = nodes.count()

@@ -83,8 +83,9 @@ def cached_count(df=None) -> int:
 
 
 # ---------------------------------------------------------------- pinning
-# One policy knob for every lineage-truncation pin in the engine (the
-# LSH bucket bag, the curation pipeline's `kept`, zip/pack offsets...).
+# The one lineage cut in the engine: every pin (fixpoint states, the LSH
+# bucket bag, the curation pipeline's `kept`, zip/pack offsets...) goes
+# through pin(), so one policy knob selects how all of them are stored.
 
 _pin_conf = {"reliable": False, "checkpoint_dir": None}
 
@@ -93,15 +94,14 @@ def configure_pinning(reliable: bool = False, checkpoint_dir: str | None = None)
     """Select the engine-wide pin mode.
 
     Default (``reliable=False``): ``localCheckpoint`` — executor-local
-    blocks, freed by GC, zero HDFS/DFS traffic; an executor loss FAILS
-    the job (fail-and-rerun). Right for short jobs and local mode.
+    blocks, zero DFS traffic; an executor loss FAILS the job
+    (fail-and-rerun). Right for short jobs and local mode.
 
     ``reliable=True``: ``checkpoint()`` to ``checkpoint_dir`` (or a
     checkpoint dir already set on the SparkContext) — survives executor
     loss at the cost of a DFS write per pin. Right for multi-hour
     cluster runs where re-running from scratch costs more than the
-    write. This makes the tradeoff documented on every pin site
-    SELECTABLE instead of prose (r4 verdict item #5)."""
+    write."""
     _pin_conf["reliable"] = bool(reliable)
     _pin_conf["checkpoint_dir"] = checkpoint_dir
 
@@ -125,7 +125,19 @@ def pin(df, eager: bool = False):
     Reliable mode is always eager — Spark's ``checkpoint(eager=False)``
     only checkpoints if the plan is later executed via an action on the
     SAME object, which a pin-then-reuse-both-sides pattern does not
-    guarantee."""
+    guarantee.
+
+    Release handle: a local pin persists exactly one RDD — the one its
+    ``LogicalRDD`` scans — and the returned frame carries that id as
+    ``_ckpt_ids``; :func:`emma_spark.plans.iterate.release` frees those
+    blocks (``DataFrame.unpersist`` cannot: checkpoint blocks live in
+    the block manager, not the CacheManager). Unreleased blocks are
+    freed by the ContextCleaner once the frame is garbage. A reliable
+    pin persists nothing and carries no handle; its checkpoint files
+    are deleted by the ContextCleaner once their RDD is unreachable
+    (``get_spark`` sets ``spark.cleaner.referenceTracking.
+    cleanCheckpoints``), so a loop that pins every round does not pile
+    up one directory per round."""
     if _pin_conf["reliable"]:
         sc = df.sparkSession.sparkContext
         cdir = _pin_conf["checkpoint_dir"]
@@ -138,4 +150,6 @@ def pin(df, eager: bool = False):
                 "sparkContext.setCheckpointDir(...)"
             )
         return df.checkpoint(eager=True)
-    return df.localCheckpoint(eager=eager)
+    out = df.localCheckpoint(eager=eager)
+    out._ckpt_ids = {out._jdf.logicalPlan().rdd().id()}
+    return out

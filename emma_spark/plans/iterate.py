@@ -7,35 +7,28 @@ loop argument, or referenced from a loop closure); the Spark runtime
 combinator is ``SparkOps.cache`` (``SparkOps.scala:54-59``).
 
 Spark never auto-caches, so this module is the rebuild of that pass as
-a *runtime service*: :func:`fixpoint` owns persistence of the loop-
-carried bag, truncates lineage each iteration (localCheckpoint — long
-lineage chains are the classic iterative-Spark failure mode), and
-releases superseded states (an improvement over the reference, which
-never unpersists — SURVEY §7.3).
+a *runtime service*: :func:`fixpoint` pins every loop-carried state
+through :func:`emma_spark.plans.cache.pin` (lineage truncation — long
+lineage chains are the classic iterative-Spark failure mode — under the
+engine-wide pin mode) and releases superseded states (an improvement
+over the reference, which never unpersists — SURVEY §7.3).
 
 Release is RDD-level, not ``DataFrame.unpersist()``: a local
 checkpoint persists the Dataset's *internal RDD* in the block manager,
 and ``DataFrame.unpersist()`` only evicts CacheManager entries — it is
-a silent no-op for checkpoint blocks (r8 audit: a 6-iteration loop
-left 7 RDDs persisted until JVM GC; on a long-lived 100×-scale driver
-that is unbounded executor-memory growth). We therefore diff the
-SparkContext's persistent-RDD registry around each checkpoint call and
-unpersist the captured ids when — and only when — a newer materialized
-checkpoint makes them unreachable. A state is never released while a
-LAZY successor might still recompute from its blocks (unpersisting a
-local checkpoint destroys the only copy: the lineage was truncated).
+a silent no-op for checkpoint blocks. Every local pin therefore carries
+its RDD id as a ``_ckpt_ids`` handle, and :func:`release` unpersists
+it. Unpersisting a local checkpoint destroys the only copy (the lineage
+was truncated), so a handle is released only once nothing lazy can
+still read it.
 """
 
 from __future__ import annotations
 
 from typing import Callable
 
-from ..core import DataBag  # noqa: F401  (re-export for callers)
-
-
-def _persistent_ids(sc) -> set[int]:
-    """Ids of every RDD currently persisted in this SparkContext."""
-    return {int(i) for i in sc._jsc.getPersistentRDDs().keySet().toArray()}
+from ..core import DataBag
+from .cache import pin
 
 
 def _release_ids(sc, ids) -> None:
@@ -48,29 +41,35 @@ def _release_ids(sc, ids) -> None:
             rdd.unpersist(False)
 
 
+def _frame(x):
+    """The DataFrame behind a DataBag or DataFrame (``getattr(x, "df")``
+    would return a Column on a frame with a column named ``df``)."""
+    return x.df if isinstance(x, DataBag) else x
+
+
 def release(bag) -> None:
-    """Free the checkpoint blocks backing a bag/DataFrame carrying a
-    ``_ckpt_ids`` handle (returned by :func:`fixpoint`,
-    ``lib.graphs`` iterative algorithms, or propagated with
-    :func:`carry_ckpt`). Call it only AFTER the final output has been
-    materialized (collected / written / re-checkpointed): the handle's
-    blocks are the only copy of the state — any still-lazy plan over
-    them would recompute into nothing. No-op for anything else."""
-    ids = getattr(bag, "_ckpt_ids", None)
+    """Free the checkpoint blocks behind a bag/DataFrame's ``_ckpt_ids``
+    handle (set by :func:`emma_spark.plans.cache.pin`, so carried by
+    :func:`fixpoint` results, ``lib.graphs`` results and anything
+    passed through :func:`carry_ckpt`). Call it only AFTER the final
+    output has been materialized (collected / written / re-pinned):
+    the handle's blocks are the only copy of the state — any still-lazy
+    plan over them would recompute into nothing. No-op for anything
+    else."""
+    df = _frame(bag)
+    ids = getattr(df, "_ckpt_ids", None)
     if ids:
-        df = getattr(bag, "df", bag)  # DataBag or plain DataFrame
         _release_ids(df.sparkSession.sparkContext, ids)
 
 
 def carry_ckpt(df, src):
-    """Propagate the checkpoint-release handle from ``src`` (a
-    fixpoint result bag, or anything else carrying ``_ckpt_ids``) onto
-    a DataFrame DERIVED from it, so the eventual consumer — who alone
-    knows when the result has been materialized — can free the state
-    blocks via :func:`release`. Without this, lib functions returning
-    ``bag.df`` would drop the only handle and leak one pinned state
-    table per invocation on a long-lived driver (r8 VERDICT ask #8)."""
-    ids = getattr(src, "_ckpt_ids", None)
+    """Copy the release handle of ``src`` (a pinned bag/DataFrame)
+    onto a DataFrame DERIVED from it, so the eventual consumer — who
+    alone knows when the result has been materialized — can free the
+    pinned blocks via :func:`release`. A function returning a derived
+    frame without it drops the only handle, and each call leaves one
+    pinned table behind until JVM GC."""
+    ids = getattr(_frame(src), "_ckpt_ids", None)
     if ids:
         df._ckpt_ids = ids
     return df
@@ -94,7 +93,6 @@ def fixpoint(
     step: Callable[["DataBag"], "DataBag"],
     converged: Callable[["DataBag", "DataBag"], bool] | None = None,
     max_iter: int = 50,
-    checkpoint_every: int = 1,
 ) -> "DataBag":
     """Iterate ``state = step(state)`` until ``converged(old, new)``.
 
@@ -106,65 +104,24 @@ def fixpoint(
     Pass ``converged`` for a cheaper problem-specific probe (e.g. the
     monotone label-sum in connected components).
 
-    Persistence contract: the returned bag is always checkpoint-backed
-    (materialized, lineage-truncated); every INTERMEDIATE state's
-    blocks have been released by the time this returns, so the block
-    manager holds exactly one state table afterwards. Free that last
-    one with :func:`release` when done."""
-    from ..core import DataBag as DB
-
-    sc = init.df.sparkSession.sparkContext
-
-    def ckpt(df):
-        before = _persistent_ids(sc)
-        out = df.localCheckpoint(eager=True)
-        return out, _persistent_ids(sc) - before
-
-    def finish(bag, bag_ids, superseded_ids):
-        """Return path: hand back a checkpoint-backed bag and release
-        everything else."""
-        if bag_ids is None:  # not checkpointed this iteration
-            df2, bag_ids = ckpt(bag.df)  # materializes; prior now safe
-            bag = DB(df2)
-        _release_ids(sc, superseded_ids)
-        bag._ckpt_ids = bag_ids
-        return bag
-
-    # cur_ids: the most recent MATERIALIZED checkpoint — the anchor
-    # every lazy successor plan hangs from; never released while any
-    # live plan might recompute through it. state_backed: whether
-    # `state` IS that checkpoint (false only between boundaries when
-    # checkpoint_every > 1).
-    state_df, cur_ids = ckpt(init.df)
-    state = DB(state_df)
-    state_backed = True
+    Persistence contract: every state, the returned one included, is an
+    eager :func:`~emma_spark.plans.cache.pin` (materialized,
+    lineage-truncated, stored under the engine-wide pin mode). A state
+    is released once its successor is materialized and the convergence
+    probe has read both, so the block manager holds exactly one state
+    table afterwards. Free that last one with :func:`release` when
+    done."""
+    state = DataBag(pin(init.df, eager=True))
     prev_sig = _content_sig(state.df) if converged is None else None
-    for i in range(max_iter):
-        nxt = step(state)
-        nxt_backed, new_ids = False, None
-        if (i + 1) % checkpoint_every == 0:
-            ndf, new_ids = ckpt(nxt.df)
-            nxt = DB(ndf)
-            nxt_backed = True
-        done = (
-            converged(state, nxt)
-            if converged is not None
-            else (sig := _content_sig(nxt.df)) == prev_sig
-        )
+    for _ in range(max_iter):
+        nxt = DataBag(pin(step(state).df, eager=True))
         if converged is None:
-            prev_sig = sig
+            sig = _content_sig(nxt.df)
+            done, prev_sig = sig == prev_sig, sig
+        else:
+            done = converged(state, nxt)
+        release(state)
+        state = nxt
         if done:
-            # finish() materializes a lazy nxt off cur_ids FIRST, so
-            # releasing cur_ids afterwards is safe in both shapes
-            return finish(nxt, new_ids if nxt_backed else None, cur_ids)
-        if nxt_backed:
-            # nxt is materialized and independent of state: the old
-            # anchor is unreachable — release it NOW (with
-            # checkpoint_every=k only every k-th iteration swaps)
-            _release_ids(sc, cur_ids)
-            cur_ids = new_ids
-        state, state_backed = nxt, nxt_backed
-    if state_backed:
-        state._ckpt_ids = cur_ids
-        return state
-    return finish(state, None, cur_ids)
+            break
+    return state

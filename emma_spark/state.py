@@ -9,10 +9,10 @@ Spark impl is a right-outer join + multiput against IndexedRDD
 
 Spark-first rebuild: state is a DataFrame ``(key, val)``; ``update`` is
 a full-outer-join merge expressed entirely in Columns. Each update
-localCheckpoints the new state to truncate lineage (the reference's
-IndexedRDD kept state materialized; same role). Semantics caveat kept
-from the reference (``MutableBag.scala:40-43``): message keys must be
-unique per update call.
+pins the new state (``plans.cache.pin``, eager) to truncate lineage
+(the reference's IndexedRDD kept state materialized; same role).
+Semantics caveat kept from the reference (``MutableBag.scala:40-43``):
+message keys must be unique per update call.
 """
 
 from __future__ import annotations
@@ -23,6 +23,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .core import DataBag
+from .plans.cache import pin
 
 UpdateFn = Callable[[Column, Column, Column], Column]
 
@@ -44,10 +45,8 @@ class MutableBag:
     def __init__(self, state: DataFrame, key: str = "key", val: str = "val"):
         self.key = key
         self.val = val
-        self._state = (
-            state.select(key, val)
-            .filter(F.col(val).isNotNull())
-            .localCheckpoint(eager=True)
+        self._state = pin(
+            state.select(key, val).filter(F.col(val).isNotNull()), eager=True
         )
 
     @classmethod
@@ -60,7 +59,11 @@ class MutableBag:
 
         Plan shape at scale: shuffle-hash/sort-merge join on the key; with
         a stable key partitioning both sides co-locate. No driver
-        materialization."""
+        materialization.
+
+        The superseded state is not released here: a :meth:`bag`
+        snapshot taken before this update still reads its blocks. The
+        ContextCleaner frees it once no snapshot references it."""
         mdf = msgs.df if isinstance(msgs, DataBag) else msgs
         k, v = self.key, self.val
         s = self._state.alias("s")
@@ -76,18 +79,16 @@ class MutableBag:
             old_val.alias("__old"),
             msg_col.isNotNull().alias("__had_msg"),
         )
-        next_state = (
+        next_state = pin(
             merged.filter(F.col("__new").isNotNull() | F.col("__old").isNotNull())
-            .select(F.col(k), F.coalesce(F.col("__new"), F.col("__old")).alias(v))
-            .localCheckpoint(eager=True)
+            .select(F.col(k), F.coalesce(F.col("__new"), F.col("__old")).alias(v)),
+            eager=True,
         )
         delta = merged.filter(F.col("__had_msg") & F.col("__new").isNotNull()).select(
             F.col(k), F.col("__new").alias(v)
         )
-        old = self._state
         self._state = next_state
-        old.unpersist()
-        return DataBag(delta.localCheckpoint(eager=True))
+        return DataBag(pin(delta, eager=True))
 
     def bag(self) -> DataBag:
         """State snapshot (``MutableBag.scala:46-47``)."""

@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..core import DataBag
+from ..plans.cache import pin
 from ..plans.iterate import carry_ckpt, fixpoint
 from ..sources import io
 from . import query
@@ -51,7 +52,7 @@ def graph_transitive_closure(spark, sf_dir):
     """Transitive closure (emma-lib/.../graphs/transitiveClosure.scala:
     22-44: self-join + union + distinct + size fixpoint). Uses path
     DOUBLING (paths⋈paths) — O(log diameter) rounds instead of the
-    reference's linear O(diameter); each round localCheckpoints via
+    reference's linear O(diameter); each round pins its state via
     fixpoint() (the auto-cache service, Caching.scala:57-130 analog)."""
     paths = _chain_edges(spark, sf_dir)
 
@@ -62,7 +63,7 @@ def graph_transitive_closure(spark, sf_dir):
         return p.union(ext).distinct()
 
     bag = fixpoint(paths, step, max_iter=10)
-    return carry_ckpt(bag.df, bag)
+    return bag.df
 
 
 @query(
@@ -108,7 +109,7 @@ def graph_connected_components(spark, sf_dir):
         )
 
     bag = fixpoint(labels, step, converged=converged, max_iter=30)
-    return carry_ckpt(bag.df, bag)
+    return bag.df
 
 
 SQL_HASH_EDGES = """
@@ -222,7 +223,7 @@ def _pagerank_iter_sql(prev: str, out: str) -> str:
 
 @query(
     "graph_pagerank",
-    # bench headliner since r6 (verdict ask #8): the iterative-fixpoint
+    # bench headliner: the iterative-fixpoint
     # representative — measures driver-loop + auto-cache overhead per
     # round, the reference's signature execution pattern
     headline=True,
@@ -275,7 +276,7 @@ def _spr_iter_sql(prev: str, out: str) -> str:
 
 @query(
     "graph_pagerank_sf",
-    # bench headliner (r6 verdict ask #6): the 25-node graph_pagerank
+    # bench headliner: the 25-node graph_pagerank
     # measures driver-loop + auto-cache OVERHEAD; this one's node set
     # is every customer and its edge set grows with sf (two synthetic
     # out-edges per customer so no node dangles, plus one order-derived
@@ -316,9 +317,9 @@ def graph_pagerank_sf(spark, sf_dir):
     no-dangling-mass contract) plus one order-derived edge per order
     row (o_custkey -> o_orderkey mod C), so |E| ~ 2|customer| +
     |orders| and every iteration's contribution join + hash-agg
-    shuffles data proportional to sf. Per-iteration rank tables are
-    pinned (lineage truncation — pr is consumed twice per round), the
-    structural tables once; the C scalar rides a 1-row broadcast,
+    shuffles data proportional to sf. Per-iteration rank tables and
+    the structural tables are pinned (see lib/graphs._power_iterate
+    for the measured reason); the C scalar rides a 1-row broadcast,
     never a collect. Exact integer micro-units end to end, so the SQL
     oracle replays all three iterations bit-for-bit."""
     from ..lib.graphs import page_rank_int
@@ -496,7 +497,6 @@ def graph_label_propagation(spark, sf_dir):
     three rounds."""
     n = io.read_parquet(spark, f"{sf_dir}/nation.parquet").df
     k = F.col("n_nationkey")
-    from ..plans.cache import pin
 
     base = n.select(k.alias("src"), ((k + 1) % 25).alias("dst")).unionByName(
         n.select(k.alias("src"), ((k * 7 + 3) % 25).alias("dst"))
@@ -651,7 +651,6 @@ def graph_jaccard_neighbors(spark, sf_dir):
     dominate, so a web-scale run caps or samples super-node
     adjacency first (same Σ|bucket|² discipline as every LSH path
     here); the pair agg is one hash-shuffle with map-side combine."""
-    from ..plans.cache import pin
 
     # ONE events pass builds the undirected adjacency (explode of both
     # directions, not a self-union that scans the source twice), and
@@ -788,8 +787,8 @@ def graph_hits(spark, sf_dir):
         # policy, plans/iterate): otherwise every total-broadcast
         # subquery re-derives the whole previous round and the final
         # plan grows multiplicatively
-        a = half_round(h, "src", "dst").localCheckpoint(eager=True)
-        h = half_round(a, "dst", "src").localCheckpoint(eager=True)
+        a = pin(half_round(h, "src", "dst"), eager=True)
+        h = pin(half_round(a, "dst", "src"), eager=True)
     return (
         nodes.join(a.withColumnRenamed("v", "auth"), "id")
         .join(h.withColumnRenamed("v", "hub"), "id")
@@ -978,8 +977,6 @@ def graph_random_walks(spark, sf_dir):
     training exactly like sentence corpora feed word2vec."""
     from pyspark.sql import Window
 
-    from ..plans.cache import pin
-
     # ONE events pass builds the undirected edge set (explode of both
     # directions — not a self-union, which scans the source twice),
     # and the ranked adjacency is PINNED: every walk step joins it, so
@@ -1155,13 +1152,16 @@ def graph_pagerank_weighted(spark, sf_dir):
             .groupBy(F.col("dst").alias("id"))
             .agg(F.sum(F.expr("(pr * w) div wt")).alias("c"))
         )
-        pr = nodes.join(flow, "id", "left").select(
-            "id",
-            (
-                F.lit(6000000000)
-                + F.expr("(85 * coalesce(c, 0)) div 100")
-            ).cast("bigint").alias("pr"),
-        ).localCheckpoint(eager=True)
+        pr = pin(
+            nodes.join(flow, "id", "left").select(
+                "id",
+                (
+                    F.lit(6000000000)
+                    + F.expr("(85 * coalesce(c, 0)) div 100")
+                ).cast("bigint").alias("pr"),
+            ),
+            eager=True,
+        )
     return pr
 
 
@@ -1276,7 +1276,7 @@ def graph_assortativity(spark, sf_dir):
     cycle) zeroes both variance terms: unguarded, ANSI Spark raises
     DIVIDE_BY_ZERO where DuckDB returns NULL. Gated on positive
     variance of BOTH endpoint-degree series with the row-level CASE
-    idiom (r10 mechanism sweep; today's 25-node corpus is
+    idiom (today's 25-node corpus is
     degree-irregular, so the guard is latent armor, not a behavior
     change)."""
     n = io.read_parquet(spark, f"{sf_dir}/nation.parquet").df
@@ -1369,7 +1369,7 @@ def graph_scc_closure(spark, sf_dir):
     graph (nation keys) has a 10-cycle, a 3-cycle, feeder chains and
     a bridge, so the answer exercises cycles of different sizes AND
     singleton SCCs. Closure by path doubling (O(log d) fixpoint
-    rounds, localCheckpointed); the mutual-reach join is a
+    rounds, pinned); the mutual-reach join is a
     self-equi-join on the (src, dst)<->(dst, src) composite — a hash
     join on the closure relation, no per-node BFS. Exact integer ids;
     the oracle replays via recursive CTE."""
@@ -1647,7 +1647,6 @@ def graph_greedy_matching(spark, sf_dir):
             ),
         )
     )
-    from ..plans.cache import pin
 
     matched = None
     e = pin(edges)  # each round reads e 4x (two endpoint views, the
@@ -1732,8 +1731,6 @@ def graph_degree_distribution(spark, sf_dir):
     # endpoint view in ONE pass (explode, not a self-union scanning e
     # twice); the degree table is pinned — both the histogram and the
     # vertex total consume it (4 compiled events scans unpinned, 1 now)
-    from ..plans.cache import pin
-
     deg = pin(
         e.select(F.explode(F.array(F.col("u"), F.col("v"))).alias("vtx"))
         .groupBy("vtx")
@@ -1803,7 +1800,6 @@ def graph_clustering_coefficient(spark, sf_dir):
         .filter(F.col("u") != F.col("v"))
         .distinct()
     )
-    from ..plans.cache import pin
 
     e = pin(e)  # feeds degree + three triangle-join sides
     deg = (
@@ -1884,7 +1880,6 @@ def graph_reciprocity(spark, sf_dir):
         .filter(F.col("src") != F.col("dst"))
         .distinct()
     )
-    from ..plans.cache import pin
 
     e = pin(e)  # both join sides + the total
     rev = e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
@@ -1970,7 +1965,6 @@ def graph_random_walk_corpus(spark, sf_dir):
     (seed, cur) pairs hash-partitioned by cur against a
     pre-partitioned adjacency — L shuffles for length-L walks,
     independent of walker count."""
-    from ..plans.cache import pin
 
     und = _hash_edges(spark, sf_dir)
     # adjacency built in ONE pass (explode of both directions, not a
@@ -2077,7 +2071,6 @@ def graph_temporal_reachability(spark, sf_dir):
     plans/iterate.py fixpoints. Oracle replays the identical
     relaxation with MATERIALIZED CTEs."""
     ev = io.read_parquet(spark, f"{sf_dir}/events.parquet").df
-    from ..plans.cache import pin
 
     tedges = pin(ev.select(
         (F.col("user_id") % 30).alias("src"),

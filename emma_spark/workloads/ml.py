@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from ..lib import stats
 from ..lib.ml import features as feat
 from ..lib.ml.naive_bayes import naive_bayes
+from ..plans.cache import pin
 from ..sources import io
 from . import query, rd, regr_mask, sum_long_exact
 
@@ -266,7 +267,7 @@ def quantized_kmeans_fit(emb, iters: int = 2, k: int = 4, dims: int = 8):
     out = cent.select(
         "cid", "pos", (F.floor(F.col("c") * 1000000 + F.lit(0.5)) / 1000000).alias("value")
     )
-    out = out.localCheckpoint(eager=True)
+    out = pin(out, eager=True)
     pts.unpersist()
     return out
 
@@ -506,7 +507,6 @@ def _quantized_sgd_fit(spark, li, logistic: bool, lr: float = 0.05):
                 # gradient -> NULL weights -> every later batch's
                 # residuals NULL, no recovery): emit NULL weights
                 # instead of crashing on None arithmetic driver-side
-                # (r9 sparse-tier find)
                 w = [None] * nf
                 break
             lrit = lr / math.sqrt(it)
@@ -939,7 +939,7 @@ def ml_auc_exact(spark, sf_dir):
             (
                 # try_divide: an all-positive or all-negative corpus
                 # makes p*n = 0 — DuckDB `/` NULLs, ANSI `/` crashes
-                # Spark one-sidedly (r9 sparse-tier find)
+                # Spark one-sidedly
                 F.floor(
                     F.try_divide(F.col("auc_num"), 2 * F.col("p") * F.col("n"))
                     * 1000000
@@ -1013,8 +1013,6 @@ def _weighted_stump(pts):
     28 compiled embeddings scans). Pinned, one stump costs exactly two
     pts passes: the range scan and the histogram scan."""
     from pyspark.sql import Window
-
-    from ..plans.cache import pin
 
     mm = pin(
         pts.groupBy("dim").agg(F.min("v_c").alias("lo"), F.max("v_c").alias("hi"))
@@ -1132,7 +1130,6 @@ def ml_boosted_stumps(spark, sf_dir):
         F.floor(F.col("v") * 1000000 + F.lit(0.5)).cast("bigint").alias("v_c"),
         F.lit(1).cast("bigint").alias("wt"),
     )
-    from ..plans.cache import pin
 
     # the round-1 model is a 1-row table consumed by the reweighting
     # join AND the report row — pinned so neither reference recompiles
@@ -1497,7 +1494,7 @@ def ml_gridsearch_ridge(spark, sf_dir):
     # sum_long_exact, not F.sum(col.cast(dec)): same exact DECIMAL(38,0)
     # values (bit-identical, verified), but three long accumulators per
     # sum instead of a per-row BigDecimal path — the decimal partial
-    # aggregate was 0.77 s vs 0.30 s for this scan at sf0.1 (r12), and
+    # aggregate was 0.77 s vs 0.30 s for this scan at sf0.1, and
     # the per-row products stay in overflow-checked long arithmetic
     # (xq, yq <= ~2^20, so xq*xq, xq*yq <= 2^40 << 2^63).
     fs = r.groupBy("fold").agg(
@@ -1545,7 +1542,7 @@ def ml_gridsearch_ridge(spark, sf_dir):
         # try_divide: an unregularized fold (lam = 0) over a
         # degenerate train split (zero rows / zero variance) zeroes
         # the normal-equation determinant — DuckDB `/` NULLs, plain
-        # ANSI `/` crashes Spark one-sidedly (r9 sparse-tier find)
+        # ANSI `/` crashes Spark one-sidedly
         F.expr(
             "try_divide(sxy * (nt + lam) - sx * sy,"
             " (sxx + lam) * (nt + lam) - sx * sx)"
@@ -1749,7 +1746,7 @@ def ml_learning_curve(spark, sf_dir):
     # try_divide: a 1-row or zero-variance train slice (the smallest
     # learning-curve fraction on a sparse corpus) zeroes the OLS
     # denominator — DuckDB `/` NULLs, plain ANSI `/` crashes Spark
-    # one-sidedly (r9 sparse-tier find)
+    # one-sidedly
     b = u.select(
         "k", "n_train",
         F.expr(
@@ -1830,8 +1827,6 @@ def ml_pinball_quantile_eval(spark, sf_dir):
 
     # value histogram pinned — the totals and the cumsum both consume
     # it (3 compiled orders scans unpinned, 2 now: histogram + eval)
-    from ..plans.cache import pin
-
     h = pin(o.groupBy("pri", "y").agg(F.count(F.lit(1)).alias("cnt")))
     tot = h.groupBy("pri").agg(F.sum("cnt").alias("n"))
     w = Window.partitionBy("pri").orderBy("y").rowsBetween(
@@ -1914,8 +1909,8 @@ def ml_grouped_ols_slopes(spark, sf_dir):
     whole 100 TB job for one constant-x brand) where DuckDB returns
     NULL. Both engines now gate slope AND intercept on positive
     x-variance with the row-level CASE idiom of
-    events_daily_autocorr (r9 VERDICT "what's wrong" #1 — the shape
-    the matched-sparse tier now generates)."""
+    events_daily_autocorr (the matched-sparse fuzz tier generates
+    this shape)."""
     t = io.load_tables(spark, sf_dir, "lineitem", "part")
     li, p = t["lineitem"].df, t["part"].df
     dec = "decimal(38,0)"
@@ -2131,7 +2126,7 @@ def ml_kmeans_elbow(spark, sf_dir):
         "k", "sse_q8",
         # the CASE guards a fully-converged predecessor (sse 0 on a
         # degenerate corpus): 0 div 0 crashes ANSI Spark where DuckDB
-        # `//` NULLs into the same coalesce (r9 sparse-tier find)
+        # `//` NULLs into the same coalesce
         F.coalesce(
             F.expr(
                 "CASE WHEN (lag(sse_q8) OVER (ORDER BY k)) = 0 THEN NULL"
@@ -2300,7 +2295,6 @@ def ml_isotonic_calibration(spark, sf_dir):
         .cast("bigint")
         .alias("sc"),
     )
-    from ..plans.cache import pin
 
     mm = pts.agg(F.min("sc").alias("lo"), F.max("sc").alias("hi"))
     # the bin table is PINNED: the cumsum view below is referenced
@@ -2459,7 +2453,6 @@ def ml_cohens_kappa(spark, sf_dir):
         .groupBy("vec_id", F.col("label").alias("actual"))
         .agg((F.min("slot") % 16).alias("pred"))
     )
-    from ..plans.cache import pin
 
     dec = "DECIMAL(38,0)"
     # the confusion-cell table is PINNED: it fans out to the row
@@ -2556,7 +2549,6 @@ def ml_feature_hash_collision_audit(spark, sf_dir):
             )
         ).alias("feat")
     ).distinct()
-    from ..plans.cache import pin
 
     f = pin(f)  # feeds the bucket histogram and the total
     b = f.select(
@@ -2651,8 +2643,6 @@ def ml_lift_gains_bands(spark, sf_dir):
     # the 1-row range/census table feeds the binning AND the final
     # ppm arithmetic — pinned so each reference reads the row instead
     # of recompiling the scan (3 compiled orders scans unpinned, 2 now)
-    from ..plans.cache import pin
-
     mm = pin(scored.agg(
         F.min("score_c").alias("lo"), F.max("score_c").alias("hi"),
         F.count(F.lit(1)).alias("n_all"), F.sum("label").alias("n_pos"),
@@ -2779,10 +2769,9 @@ def ml_gbdt_residual_boost(spark, sf_dir):
     values, MSE before/after per round) is the output — at 100 TB
     rounds add one scan each, and the candidate agg is map-side
     combined."""
-    from ..plans.cache import pin
 
     li = io.read_parquet(spark, f"{sf_dir}/lineitem.parquet").df
-    # r12 (optimization): every multi-column block in this body is
+    # every multi-column block in this body is
     # built as SQL STRINGS (one F.expr/selectExpr call per output
     # column) instead of nested Column operator trees. The expression
     # TREES are identical — literal forms included (0.5D = the double
@@ -3029,7 +3018,6 @@ def ml_als_rank1(spark, sf_dir):
     rat = li.groupBy(
         F.col("l_suppkey").alias("s"), F.col("l_partkey").alias("p")
     ).agg(F.sum("l_quantity").cast("bigint").alias("qty"))
-    from ..plans.cache import pin
 
     rat = pin(rat)  # the ratings matrix feeds every half-step
     v = rat.select("p").distinct().select(

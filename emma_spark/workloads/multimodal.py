@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..llm import multimodal as M
+from ..plans.cache import pin
 from . import query
 
 # FNV-1a (32-bit) over the synthesized blob string, written as a DuckDB
@@ -509,7 +510,7 @@ def io_binaryfile_ingest(spark, sf_dir):
 
     d = eio.read_parquet(spark, f"{sf_dir}/documents.parquet").df
     # empty documents are excluded from the roundtrip contract: Spark's
-    # binaryFile source silently skips zero-byte files (r6 fuzz), so an
+    # binaryFile source silently skips zero-byte files, so an
     # empty blob cannot round-trip on any engine
     sample = d.filter(
         (F.col("doc_id") % 29 == 0) & (F.length("text") > 0)
@@ -528,6 +529,6 @@ def io_binaryfile_ingest(spark, sf_dir):
         F.conv(F.substring(F.md5(F.col("content")), 1, 14), 16, 10)
          .cast("bigint").alias("h56"),
     )
-    out = out.localCheckpoint(eager=True)  # detach from the temp dir
+    out = pin(out, eager=True)  # detach from the temp dir
     shutil.rmtree(base, ignore_errors=True)
     return out

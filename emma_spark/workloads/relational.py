@@ -21,6 +21,7 @@ from ..core import DataBag
 from ..llm.text import ascii_lower, WS_RE
 from ..functions import alg
 from ..operators import rollup as RU
+from ..plans.cache import pin
 from ..sources import io
 from . import (
     _nonfinite,
@@ -563,7 +564,7 @@ def fold_histogram_pandas_udaf(spark, sf_dir):
     one key shuffle."""
 
     def init(q):
-        # TOTAL over doubles (r8 NaN/inf fuzz): the oracle's CASE
+        # TOTAL over doubles (NaN and ±inf included): the oracle's CASE
         # chain routes NaN and +inf to b4 (both engines compare NaN
         # greater than any number) and -inf to b0; int() of a
         # non-finite raises, so branch before converting
@@ -633,7 +634,7 @@ def fold_reduce_option(spark, sf_dir):
     )
     n, sq, bad = li.fold_py(
         zero=(0, 0, 0),
-        # TOTAL init (r8 NaN/inf fuzz): finite values feed the exact
+        # TOTAL init (NaN and ±inf included): finite values feed the exact
         # integer sum, non-finite PRESENT elements are counted, never
         # int()-cast (which raises) and never silently dropped
         init=lambda q: (1, int(q), 0) if math.isfinite(q) else (1, 0, 1),
@@ -1025,7 +1026,7 @@ def events_sessionize(spark, sf_dir):
         F.lag("ts").over(w).isNull()
         # exact-microsecond gap: the oracle compares ts - lag(ts) >
         # INTERVAL 30 MINUTE at full precision; a second-floored diff
-        # disagrees in the 1800.0-1801.0s band (r6 events fuzz)
+        # disagrees in the 1800.0-1801.0s band
         | (
             F.expr("unix_micros(ts)") - F.lag(F.expr("unix_micros(ts)")).over(w)
             > 1800000000
@@ -1040,7 +1041,7 @@ def events_sessionize(spark, sf_dir):
     )
 
 
-# events_tumbling_hourly was retired in r3: it duplicated
+# there is no events_tumbling_hourly: it would duplicate
 # stream_tumbling_counts' oracle (same grouping, same aggregate) and
 # hyper_rollup_daily covers batch time-bucket aggregation — one driver
 # slot freed for a never-checked query.
@@ -1642,7 +1643,7 @@ def array_hof_surface(spark, sf_dir):
     Array-typed outputs are serialized to ','-joined strings
     (``concat_ws`` / ``array_to_string``) so every output column is a
     scalar that external pandas-based canonicalizers can hash/sort —
-    array cells broke the r4 driver compare (unhashable ``list``)."""
+    array cells break pandas-based compares (unhashable ``list``)."""
     li = T(spark, sf_dir, "lineitem")["lineitem"]
     base = (
         li.filter(lambda x: x.l_orderkey % 97 == 0)
@@ -1896,7 +1897,7 @@ def agg_stats_moments(spark, sf_dir):
     emma-lib/.../stats/stat.scala:23-62); both engines' moment
     formulations agree to the 4dp quantization on this data.
 
-    POISON CONTRACT (r9, found by the one-sided fuzz status): a
+    POISON CONTRACT: a
     non-finite value anywhere in a group makes that group's four
     moments NaN — explicitly, on both engines. The aggregates
     themselves only ever see FINITE inputs (non-finite masked to NULL
@@ -2508,8 +2509,6 @@ def events_funnel(spark, sf_dir):
     # so the cascade costs one filtered events scan per stage instead
     # of recompiling every upstream stage per reference (6 FileScans
     # unpinned)
-    from ..plans.cache import pin
-
     v = pin(
         ev.filter(F.col("event_type") == "view")
         .groupBy("user_id")
@@ -2635,8 +2634,8 @@ def agg_argmax_surface(spark, sf_dir):
     key (price quantized to integer then orderkey mixed in), because
     max_by's choice among equal keys is engine-defined. The orderkey
     slot is 10^7 — wider than TPC-H's max orderkey at sf1 (6·10^6) —
-    so a lower price can never outrank a higher one (r4 ADVICE: the
-    old 10^5 slot collided); the oracle CASTs floor()'s double to
+    so a lower price can never outrank a higher one (a 10^5 slot
+    collides); the oracle CASTs floor()'s double to
     BIGINT before the multiply because price_c·10^7 exceeds 2^53."""
     li = T(spark, sf_dir, "lineitem")["lineitem"].df
     price_c = F.floor(F.col("l_extendedprice") * 10000 + F.lit(0.5))
@@ -2808,14 +2807,12 @@ def graph_sssp_bounded(spark, sf_dir):
     depth-bounded walk enumeration reproduces (integer weights, so
     both engines agree bit-for-bit). The §2.8 iteration pattern with
     per-round relaxation instead of CC's label broadcast: each round
-    is one join + groupBy-min, lineage cut by localCheckpoint."""
+    is one join + groupBy-min, lineage cut by a pin."""
     n = T(spark, sf_dir, "nation")["nation"].df
     k = F.col("n_nationkey")
     mk = lambda d: [(k).alias("src"), d.alias("dst"), (1 + (k + d) % 5).alias("w")]
-    edges = (
-        n.select(*mk((k + 1) % 25))
-        .unionByName(n.select(*mk((k * 6 + 1) % 25)))
-        .localCheckpoint(eager=False)
+    edges = pin(
+        n.select(*mk((k + 1) % 25)).unionByName(n.select(*mk((k * 6 + 1) % 25)))
     )
     dist = n.sparkSession.createDataFrame([(0, 0)], "id bigint, dist bigint")
     for _ in range(6):
@@ -2823,11 +2820,8 @@ def graph_sssp_bounded(spark, sf_dir):
             dist.join(edges, dist["id"] == edges["src"])
             .select(F.col("dst").alias("id"), (F.col("dist") + F.col("w")).alias("dist"))
         )
-        dist = (
-            dist.unionByName(relaxed)
-            .groupBy("id")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=False)
+        dist = pin(
+            dist.unionByName(relaxed).groupBy("id").agg(F.min("dist").alias("dist"))
         )
     return dist
 
@@ -3603,7 +3597,7 @@ def layout_zorder_clustering(spark, sf_dir):
 
 @query(
     "udtf_expand_props",
-    # Portability contract (r5 driver red, hardened r6): the oracle
+    # Portability contract: the oracle
     # extracts with a BARE-KEY path (json_extract_string(j, k) treats a
     # non-$ path as one literal key — no '$.' || k concat, which breaks
     # on keys containing '.' or quotes), and numeric coercion follows
@@ -3616,7 +3610,7 @@ def layout_zorder_clustering(spark, sf_dir):
     # double round-trip); TRY_CAST on the result turns int64 overflow
     # into NULL. CAST(json AS BIGINT) is banned: DuckDB ROUNDS there
     # while Python int() truncates.
-    # Quarantine contract (exotic-props tier, r10): a 100 TB ingest
+    # Quarantine contract (exotic-props fuzz tier): a 100 TB ingest
     # contains corrupt props; the parser must SKIP those documents on
     # both engines, never kill the job. Quarantined: malformed JSON /
     # empty string / NULL (json_valid gate vs Python json.loads
@@ -4123,8 +4117,6 @@ def basket_brand_affinity(spark, sf_dir):
     # BOTH pair-join legs — PINNED per the used-more-than-once policy
     # (two narrow columns; unpinned this plan compiled the fact join
     # five times)
-    from ..plans.cache import pin
-
     ob = pin(
         li.join(F.broadcast(p), li["l_partkey"] == p["p_partkey"])
         .select("l_orderkey", "p_brand")
@@ -4418,8 +4410,7 @@ def events_user_ltv_decay(spark, sf_dir):
         F.expr(
             # clamped to [0, 62]: events AFTER the observation day would
             # otherwise shift by a NEGATIVE amount — DuckDB errors,
-            # Spark masks (the r5 MTA ADVICE class, found again by the
-            # r6 events fuzz)
+            # Spark masks
             "greatest(least((19753 - unix_micros(ts) div 86400000000)"
             " div 7, 62), 0)"
         ).alias("w"),
@@ -4750,7 +4741,7 @@ def parquet_schema_evolution(spark, sf_dir):
     # TRUNCATE toward zero (never CAST(json AS BIGINT), which rounds in
     # DuckDB), booleans map to 1/0, strings convert only when they are
     # integer literals (Spark nulls "9.5"), everything else is NULL.
-    # Hardened r6 with the udtf_expand_props driver-red class.
+    # Same validity gate as udtf_expand_props.
     oracle="""
     WITH kv AS (
       -- validity gate (exotic-props tier, r10): malformed / empty /
@@ -5517,8 +5508,6 @@ def orders_rfm_segmentation(spark, sf_dir):
     # used-more-than-once policy (unpinned, this plan compiled 14
     # orders FileScans; pinned it is one customer-keyed shuffle
     # materialized once)
-    from ..plans.cache import pin
-
     m = pin(c.crossJoin(F.broadcast(mx)).select(
         "ck",
         F.datediff("maxd", "last_d").cast("bigint").alias("r_days"),
@@ -5682,7 +5671,7 @@ def events_point_in_interval(spark, sf_dir):
         F.lag("ts").over(w).isNull()
         # exact-microsecond gap: the oracle compares ts - lag(ts) >
         # INTERVAL 30 MINUTE at full precision; a second-floored diff
-        # disagrees in the 1800.0-1801.0s band (r6 events fuzz)
+        # disagrees in the 1800.0-1801.0s band
         | (
             F.expr("unix_micros(ts)") - F.lag(F.expr("unix_micros(ts)")).over(w)
             > 1800000000
@@ -5724,7 +5713,7 @@ def events_point_in_interval(spark, sf_dir):
     # null-safe restore join: anonymous (NULL user_id) sessions are a
     # real group on both engines — the oracle never re-joins on
     # user_id (it GROUPs), so a plain `=` here silently zeroed their
-    # purchase counts (r10 NULL-user_id events fuzz)
+    # purchase counts
     return iv.join(
         matched,
         iv["user_id"].eqNullSafe(F.col("mu"))
@@ -6204,7 +6193,7 @@ def events_cuped_adjusted_lift(spark, sf_dir):
         F.sum(F.col("x_c").cast(dec) * F.col("y_c")).alias("sxy"),
         F.sum(F.col("x_c").cast(dec) * F.col("x_c")).alias("sxx"),
     )
-    # try_divide: a constant pre-period covariate (var(x) = 0 — the r9
+    # try_divide: a constant pre-period covariate (var(x) = 0 — the
     # constant-series fuzz shape) makes theta 0/0, where plain ANSI `/`
     # crashes Spark one-sidedly vs the oracle's NULL; try_divide ==
     # DuckDB `/` on zero divisors, and the NULL theta then propagates
@@ -6354,7 +6343,6 @@ def events_conversion_delay(spark, sf_dir):
     matching percentile_disc on both engines. Two user-keyed aggs
     reusing one partitioning + a <=1440-row histogram; conversion
     rate as an exact integer ppm rational."""
-    from ..plans.cache import pin
 
     e = io.read_parquet(spark, f"{sf_dir}/events.parquet").df
     # first-signup and delay tables are PINNED: s fans out to the
@@ -6562,7 +6550,7 @@ def events_gap_histogram(spark, sf_dir):
     w = Window.partitionBy("user_id", "event_type").orderBy("ts", "event_id")
     # unix_micros div 1000000, NOT cast(ts AS long): the cast floors
     # toward -inf while DuckDB's epoch_us // truncates toward zero —
-    # they disagree on pre-1970 timestamps (r6 events fuzz); the repo
+    # they disagree on pre-1970 timestamps; the repo
     # epoch convention (exactness rules) uses div on microseconds
     sec = F.expr("unix_micros(ts) div 1000000")
     g = e.select(
@@ -6855,7 +6843,6 @@ def lineitem_ship_latency(spark, sf_dir):
                        F.col("o_orderdate").cast("date")).alias("lat"),
         )
     )
-    from ..plans.cache import pin
 
     # the latency histogram fans out to the totals, the cumsum, and
     # (via totals) the final report — PINNED (pri × bounded day-span
@@ -7079,7 +7066,6 @@ def orders_price_drift_chi2(spark, sf_dir):
     monitoring readout every scoring pipeline schedules against its
     training distribution. Two hash-aggs + one full outer join on
     (priority, bin) — all domain-bounded."""
-    from ..plans.cache import pin
 
     o = io.read_parquet(spark, f"{sf_dir}/orders.parquet").df
     dec = "decimal(38,0)"
@@ -7089,7 +7075,7 @@ def orders_price_drift_chi2(spark, sf_dir):
     # compiled unpinned
     # non-finite prices bin to NULL (the corruption bucket) on BOTH
     # engines: Spark's floor silently maps NaN→0 / ±inf→±Long.MaxValue
-    # (the r8 fuzz class) where DuckDB raises casting NaN to BIGINT —
+    # where DuckDB raises casting NaN to BIGINT —
     # without the guard a NaN-priced order lands in the $0 bin on one
     # engine and crashes the other. A drifting corruption RATE is
     # itself drift, so the NULL bucket participates in the statistic.
@@ -7119,9 +7105,8 @@ def orders_price_drift_chi2(spark, sf_dir):
     # bin joins NULL-SAFELY (<=> / IS NOT DISTINCT FROM on both
     # engines): the NULL corruption bucket present in both periods is
     # ONE (p-q)^2 comparison, not two one-sided bins — plain equality
-    # never matched NULL to itself, inflating n_bins by 2 and
-    # contributing p^2+q^2 (r9 ADVICE; cross-engine parity held, the
-    # semantics were just not what the docstring claimed)
+    # never matches NULL to itself, which would inflate n_bins by 2 and
+    # contribute p^2+q^2
     w = (
         a.join(c, (F.col("pri") == F.col("pri2"))
                & F.col("bin").eqNullSafe(F.col("bin2")),
@@ -7321,7 +7306,6 @@ def orders_seasonal_mase_eval(spark, sf_dir):
     ONE exact integer rational in ppm — no division until the final
     integral one, no floats anywhere. Monthly pre-agg + two slim
     self-joins on the (bounded) month index."""
-    from ..plans.cache import pin
 
     o = io.read_parquet(spark, f"{sf_dir}/orders.parquet").df
     dec = "decimal(38,0)"
@@ -7478,8 +7462,7 @@ def events_daily_autocorr(spark, sf_dir):
     A zero-variance series (constant daily counts — degenerate but
     reachable) makes the denominator 0: the raw Spark ``floor`` would
     silently map the resulting NaN to 0 where DuckDB keeps NULL/NaN
-    (the r8 fuzz class, r8 VERDICT "what's wrong" #1). Both sides now
-    gate the whole expression on positive variance with a ROW-level
+    (the NaN/inf fuzz class). Both sides gate the whole expression on positive variance with a ROW-level
     CASE over the exact DECIMAL moments (row-level CASE does
     short-circuit — only CASE around an AGGREGATE doesn't), returning
     NULL for degenerate lags on both engines."""
@@ -7702,7 +7685,7 @@ def orders_weekday_anova(spark, sf_dir):
         # try_divide == DuckDB `/` on every degenerate shape (k=1
         # group, zero within-group variance, one row per group): both
         # yield NULL where a plain ANSI `/` would crash Spark
-        # one-sidedly (r9 zero-denominator sweep).
+        # one-sidedly.
         F.expr(
             "floor(try_divide("
             "try_divide(CAST(sgm - (ts * ts) div tn AS DOUBLE),"
@@ -7791,8 +7774,8 @@ def orders_jarque_bera(spark, sf_dir):
     )
     # try_divide mirrors DuckDB `/`-yields-NULL on the degenerate
     # shapes (empty table: nd = 0; constant x: m2s = 0) where a plain
-    # ANSI `/` would crash Spark one-sidedly (r9 zero-denominator
-    # sweep); on every non-degenerate input it is bit-identical to `/`.
+    # ANSI `/` would crash Spark one-sidedly; on every non-degenerate
+    # input it is bit-identical to `/`.
     v = "try_divide(m2s, nd)"
     skew = (f"try_divide(try_divide(m3s, nd),"
             f" sqrt(try_divide({v} * {v} * {v}, nd)))")
@@ -7848,7 +7831,7 @@ def io_wholetext_documents(spark, sf_dir):
     if not os.listdir(d):
         # zero sampled docs -> zero staged files, and a glob read over
         # an empty dir raises PATH_NOT_FOUND where the oracle returns
-        # zero rows (r9 sparse-tier find). Local listdir is sound here:
+        # zero rows. Local listdir is sound here:
         # this file-per-doc staging demo is local-mode by construction
         # (executors write into the driver's tempdir).
         return spark.createDataFrame(
@@ -8186,7 +8169,7 @@ def orders_ks_drift(spark, sf_dir):
         F.col("n2").cast("bigint").alias("n_1997"),
         F.col("dmax").cast("bigint").alias("d_scaled"),
         # empty year-split -> n1*n2 = 0: DuckDB `//` NULLs, ANSI div
-        # crashes (r9 sparse-tier find)
+        # crashes
         F.expr(
             "CAST(CASE WHEN n1 * n2 = 0 THEN NULL"
             " ELSE dmax * 1000000 div (n1 * n2) END AS BIGINT)"
@@ -8507,8 +8490,8 @@ def orders_holt_trend_fold(spark, sf_dir):
     # get() (0-based, NULL out-of-range) + greatest-clamped slice
     # length: a single-month series made element_at(xs, 2) raise and
     # slice's length go -1 under ANSI where the oracle's xs[2]/xs[3:]
-    # just return NULL/[] and the fold NULL-propagates (r9 sparse-tier
-    # find) — the NULL seed flows through identically now.
+    # just return NULL/[] and the fold NULL-propagates — the NULL
+    # seed flows through identically.
     fold = (
         f"aggregate(slice(xs, 3, greatest(size(xs) - 2, 0)),"
         f" CAST(get(xs, 0) AS DECIMAL(38,0)) * {_HOLT_D}"
@@ -9062,7 +9045,6 @@ def events_alert_debounce(spark, sf_dir):
         .groupBy(F.expr("unix_micros(ts) div 3600000000").alias("hr"))
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    from ..plans.cache import pin
 
     h = pin(h)  # feeds threshold, candidates, and the final join-back
     thr = h.agg(F.expr("sum(n) div count(*) + 2").alias("t"))
@@ -9074,7 +9056,7 @@ def events_alert_debounce(spark, sf_dir):
         ).alias("hrs"))
     )
     # the empty-candidate guard is load-bearing: with ZERO candidate
-    # hours (every hour below threshold — the r9 constant-series fuzz
+    # hours (every hour below threshold — the constant-series fuzz
     # shape) ``element_at(hrs, 1)`` raises INVALID_ARRAY_INDEX under
     # ANSI where the oracle's recursive CTE just emits no rows; a
     # row-level CASE short-circuits the seed access and explode of an
@@ -9248,8 +9230,8 @@ def agg_mode_exact(spark, sf_dir):
     engine- and partitioning-independent (engine-native mode()
     functions leave ties implementation-defined — unusable under a
     differential oracle). Two hash-aggs, both map-side combinable;
-    the slot multiplier exceeds the code domain, the ADVICE-hardened
-    argmax rule. The same shape yields any 'most frequent X per Y'
+    the slot multiplier exceeds the code domain (the packed-argmax
+    rule). The same shape yields any 'most frequent X per Y'
     (top referrer, dominant language) without a ranking window."""
     o = io.read_parquet(spark, f"{sf_dir}/orders.parquet").df
     c = o.groupBy("o_orderpriority", "o_orderstatus").agg(
@@ -9575,8 +9557,7 @@ def events_power_analysis_mde(spark, sf_dir):
             " + 0.5) AS BIGINT)"
         ).alias("mde_abs_c2"),
         # try_divide: an all-zero metric makes mean_c = 0, where plain
-        # ANSI `/` crashes Spark one-sidedly vs DuckDB's NULL (r9
-        # zero-denominator sweep).
+        # ANSI `/` crashes Spark one-sidedly vs DuckDB's NULL.
         F.expr(
             "CAST(floor(try_divide(2.8024 * sqrt(2.0 * var_c2 / n_per_arm),"
             " mean_c) * 1000000 * 100 + 0.5) AS BIGINT)"
@@ -9744,7 +9725,7 @@ def supplier_herfindahl_index(spark, sf_dir):
     # sum_long_exact, not F.sum(rev_c.cast(decimal)): same exact
     # DECIMAL(38,0) total, three long accumulators instead of the
     # per-row BigDecimal path (measured 2.5x cheaper on the ridge
-    # shape, r12). Bounds: rev_c is one supplier's revenue in cents —
+    # shape). Bounds: rev_c is one supplier's revenue in cents —
     # at TPC-H sf100k (~100 TB) ~6e4 lineitem rows/supplier x ~1.1e7
     # max cents ≈ 6.6e11 per row, << the 2^53 per-row bound; rows per
     # group = suppliers per nation (~4e5 at sf100k) << 2^43.
@@ -10741,8 +10722,6 @@ def orders_forecast_reconcile(spark, sf_dir):
     now coherent multi-level publication."""
     from pyspark.sql import Window
 
-    from ..plans.cache import pin
-
     o = io.read_parquet(spark, f"{sf_dir}/orders.parquet").df
     # the month aggregate fans out to the per-priority SES fit AND the
     # total-level series; the bottom forecasts feed their sum and the
@@ -10764,8 +10743,8 @@ def orders_forecast_reconcile(spark, sf_dir):
         # exactly DuckDB's list_reduce (and the family convention,
         # orders_ses_level_fold). The zero seed this previously used
         # matched the oracle only because a long month series decays
-        # the seed by 0.7^n below cent resolution; the r9 constant
-        # corpus (2-3 months) exposed it as a 0.51x divergence. The
+        # the seed by 0.7^n below cent resolution; the constant
+        # fuzz corpus (2-3 months) exposed it as a 0.51x divergence. The
         # size guard covers the empty-input global fold (element_at
         # on [] raises under ANSI; DuckDB list_reduce([]) is NULL).
         arr = df.groupBy(*keys).agg(
@@ -11170,8 +11149,8 @@ def events_mta_linear_credit(spark, sf_dir):
     # left-join sentinel, NOT tid: a real touch row whose event_id is
     # NULL would otherwise be misclassified as 'direct' (full val_c)
     # and dropped from n_touch, diverging from the oracle's
-    # inner+anti form (r9 ADVICE — the corpus emits non-null
-    # event_id today, but that is a schema assumption, not a contract)
+    # inner+anti form (the corpus emits non-null event_id today, but
+    # that is a schema assumption, not a contract)
     touch = e.filter(F.col("event_type") != "purchase").select(
         F.col("event_id").alias("tid"), F.col("user_id").alias("tu"),
         F.expr("unix_micros(ts)").alias("tt"), "event_type",
@@ -11190,7 +11169,7 @@ def events_mta_linear_credit(spark, sf_dir):
         "left",
     )
     # tid asc_nulls_last mirrors the oracle's NULLS LAST pin — the
-    # NULL-event_id tie-break seam (r10 ADVICE; see oracle comment)
+    # NULL-event_id tie-break seam (see oracle comment)
     wr = Window.partitionBy("cid").orderBy("tt", F.col("tid").asc_nulls_last())
     wc = Window.partitionBy("cid")
     credited = tw.select(

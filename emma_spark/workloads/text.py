@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from ..llm import text as X
 from ..llm.text import ascii_lower, WS_RE, WS_RE_EXPR, WS_SET
+from ..plans.cache import pin
 from ..sources import io
 from . import query
 
@@ -181,8 +182,7 @@ def text_vocab_coverage(spark, sf_dir):
 
     Scale: a web corpus has 10^8–10^9 DISTINCT whitespace tokens, so
     the rank/cumsum window must never see the full vocabulary (a
-    global-order window is a one-task sort — the r4 verdict flagged
-    exactly that here). The top-25 is carved out first with
+    global-order window is a one-task sort). The top-25 is carved out first with
     orderBy().limit(25), which Spark executes as TakeOrderedAndProject
     (per-partition top-k, merge k·#parts rows on the driver — no
     global sort ever materializes); the window then runs over 25 rows.
@@ -367,7 +367,7 @@ def text_bm25_scores(spark, sf_dir):
     hang cross-engine equality on libm's last ulp; the rational form
     is the same monotone relevance ordering and bit-deterministic).
 
-    Plan (rewritten r5, was 14 exchanges / two token explodes): for a
+    Plan (2 exchanges; the explode+join form compiled 14): for a
     FIXED literal query the per-term tf is an array-HOF count — no
     token explode, no (doc,term) shuffle, no join. One narrow pass
     computes (dl, tf_spark, tf_table, tf_hash) per doc; one 1-row agg
@@ -379,25 +379,20 @@ def text_bm25_scores(spark, sf_dir):
     the explode+join shape only wins for large/dynamic query
     vocabularies.
 
-    r12 (optimization): `base` feeds BOTH the corpus-stats aggregate
-    and the scoring pass, so it is PINNED — unpinned, the tokenize +
-    3-term HOF count pass over every document ran TWICE (two scans,
-    two fan-out exchanges; measured 0.65 s vs 0.45 s at sf0.1,
-    results bit-identical). At 100 TB the pin holds 5 ints per doc
-    (~40 B) where the re-derivation would re-read and re-tokenize the
-    corpus text — the auto-cache used-more-than-once policy. The
-    pin's blocks ride a ``_ckpt_ids`` release handle on the returned
-    DataFrame (r12 ADVICE: deterministic release instead of
-    wait-for-GC), so a long-lived driver can
+    `base` feeds BOTH the corpus-stats aggregate and the scoring pass,
+    so it is PINNED — unpinned, the tokenize + 3-term HOF count pass
+    over every document ran TWICE (two scans, two fan-out exchanges;
+    measured 0.65 s vs 0.45 s at sf0.1, results bit-identical). At
+    100 TB the pin holds 5 ints per doc (~40 B) where the re-derivation
+    would re-read and re-tokenize the corpus text — the auto-cache
+    used-more-than-once policy. The returned DataFrame carries the
+    pin's release handle, so a long-lived driver can
     ``plans.iterate.release(result)`` after materializing."""
-    from ..plans.cache import pin
-    from ..plans.iterate import _persistent_ids
+    from ..plans.iterate import carry_ckpt
 
     docs = io.fan_out(io.read_parquet(spark, f"{sf_dir}/documents.parquet").df)
     tk = X.tokens(F.col("text"))
     t1, t2, t3 = _BM25_TERMS
-    sc = spark.sparkContext
-    _before_ids = _persistent_ids(sc)
     base = pin(docs.select(
         "doc_id",
         F.size(tk).alias("dl"),
@@ -405,7 +400,6 @@ def text_bm25_scores(spark, sf_dir):
         F.size(F.filter(tk, lambda x: x == t2)).alias("tf2"),
         F.size(F.filter(tk, lambda x: x == t3)).alias("tf3"),
     ))
-    _pin_ids = _persistent_ids(sc) - _before_ids
     stats = base.filter(F.col("dl") > 0).agg(
         F.count(F.lit(1)).alias("n"),
         (F.sum("dl") * 1.0 / F.count(F.lit(1))).alias("avgdl"),
@@ -434,9 +428,7 @@ def text_bm25_scores(spark, sf_dir):
             (F.floor(score * 1000000 + F.lit(0.5)) / 1000000).alias("bm25"),
         )
     )
-    if _pin_ids:
-        out._ckpt_ids = _pin_ids
-    return out
+    return carry_ckpt(out, base)
 
 
 @query(
@@ -723,7 +715,6 @@ def text_bpe_train(spark, sf_dir):
 def _bpe_chain(spark, sf_dir):
     """Build the lazy 5-level merge chain; returns (merges, w_final) —
     the learned merge table and the fully-fused word table."""
-    from ..plans.cache import pin
 
     docs = io.fan_out(io.read_parquet(spark, f"{sf_dir}/documents.parquet").df)
     words = (
@@ -1383,8 +1374,6 @@ def text_dsir_importance(spark, sf_dir):
     # used-more-than-once policy (three narrow columns, one
     # tokenize+hash pass instead of the five this plan compiled
     # unpinned)
-    from ..plans.cache import pin
-
     bg = pin(pairs.select(
         "doc_id", "lang",
         F.explode(
@@ -2073,8 +2062,8 @@ def text_pair_lcs_similarity(spark, sf_dir):
         F.size("tb").cast("bigint").alias("nb"),
         # empty-side short-circuit: sequence(1, 0) in Spark is the
         # DESCENDING [1, 0], so an empty token list would drive
-        # element_at(ta, 1)/element_at(row, 0) out of bounds (found by
-        # the r6 registry-wide unicode fuzz); LCS with an empty side
+        # element_at(ta, 1)/element_at(row, 0) out of bounds; LCS with
+        # an empty side
         # is 0 by definition, matching the oracle's empty-fold result
         F.expr("""
           IF(size(ta) = 0 OR size(tb) = 0, CAST(0 AS BIGINT),
@@ -2150,8 +2139,6 @@ def text_length_outliers_mad(spark, sf_dir):
     domain per language, the repo's quantile discipline — then one
     counting pass. The robust sibling of embedding_outlier_zscore."""
     from pyspark.sql import Window
-
-    from ..plans.cache import pin
 
     docs = io.fan_out(io.read_parquet(spark, f"{sf_dir}/documents.parquet").df)
     # the length table fans out to both median passes and the final
@@ -2455,7 +2442,6 @@ def text_source_vocab_overlap(spark, sf_dir):
         docs.select("source", F.explode(X.tokens(F.col("text"))).alias("tok"))
         .distinct()
     )
-    from ..plans.cache import pin
 
     v = pin(v)  # feeds sizes + both join sides
     sz = v.groupBy("source").agg(F.count(F.lit(1)).alias("n"))
@@ -2817,7 +2803,6 @@ def text_collocation_lift(spark, sf_dir):
         ).alias("b")
     ).select(F.col("b.w1").alias("w1"), F.col("b.w2").alias("w2"))
     bc = bg.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("n12"))
-    from ..plans.cache import pin
 
     bc = pin(bc)  # feeds marginals, totals, and the final join
     uni = (

@@ -345,6 +345,37 @@ def test_pin_sites_run_under_reliable_mode(spark, tables, tmp_path):
     assert rel == baseline and baseline
 
 
+def test_get_spark_resolves_master_at_call_time(monkeypatch):
+    """Spark-free: the master comes from ``master=``, then
+    $SPARK_GRAFT_MASTER, then local[$SPARK_GRAFT_CPUS] — read when
+    get_spark is called, not when the module is imported — and
+    $SPARK_MASTER leaves it to Spark."""
+    from emma_spark import session
+
+    class Builder:
+        def __getattr__(self, name):
+            return lambda *a: self
+
+        def master(self, m):
+            self.chosen = m
+            return self
+
+        def getOrCreate(self):
+            return self.__dict__.pop("chosen", None)
+
+    monkeypatch.setattr(session.SparkSession, "builder", Builder(), raising=False)
+    for var in ("SPARK_GRAFT_MASTER", "SPARK_MASTER"):
+        monkeypatch.delenv(var, raising=False)
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert session.get_spark() == "local[3]"
+    monkeypatch.setenv("SPARK_GRAFT_MASTER", "local[5]")
+    assert session.get_spark() == "local[5]"
+    assert session.get_spark(master="local[7]") == "local[7]"
+    monkeypatch.delenv("SPARK_GRAFT_MASTER")
+    monkeypatch.setenv("SPARK_MASTER", "spark://h:7077")
+    assert session.get_spark() is None
+
+
 # ---------------------------------------------------------------- reduceOption
 def test_reduce_option_nonempty_and_empty(tables):
     """reduceOption (api/DataBag.scala:245-246): combine without a zero;

@@ -512,21 +512,89 @@ def _persistent_ids(spark) -> set:
     evictions lands mid-test (observed twice, r9 — both times the test
     passed in isolation). RDD ids are monotonic and never reused, so
     the new-id set is immune to background evictions."""
-    from emma_spark.plans.iterate import _persistent_ids as _ids
+    jmap = spark.sparkContext._jsc.getPersistentRDDs()
+    return {int(i) for i in jmap.keySet().toArray()}
 
-    return _ids(spark.sparkContext)
+
+def test_pin_carries_its_release_handle(spark):
+    """A local pin persists exactly one RDD, eager or lazy, and the
+    returned frame's ``_ckpt_ids`` names it — the handle release()
+    frees, with no registry diff around the pin."""
+    from pyspark.sql import functions as F
+
+    from emma_spark.plans.cache import pin
+    from emma_spark.plans.iterate import release
+
+    for eager in (True, False):
+        base_ids = _persistent_ids(spark)
+        df = spark.range(50).groupBy((F.col("id") % 7).alias("k")).count()
+        out = pin(df, eager=eager)
+        assert out._ckpt_ids == _persistent_ids(spark) - base_ids, eager
+        assert out.count() == 7
+        release(out)
+        assert not (_persistent_ids(spark) - base_ids), eager
+
+
+def test_fixpoint_follows_reliable_pinning(spark, tmp_path):
+    """fixpoint's states are pins, so reliable mode covers the loops:
+    the iteration writes checkpoint files into the configured dir."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from emma_spark.core import DataBag
+    from emma_spark.plans.cache import pinning
+    from emma_spark.plans.iterate import fixpoint
+
+    cdir = tmp_path / "ckpt"
+    init = DataBag(spark.range(3).select(F.col("id").cast("long").alias("x")))
+    step = lambda b: DataBag(
+        b.df.select(F.least(F.col("x") + 1, F.lit(5)).alias("x"))
+    )
+    with pinning(reliable=True, checkpoint_dir=str(cdir)):
+        out = fixpoint(init, step, max_iter=20)
+        assert sorted(r["x"] for r in out.df.collect()) == [5, 5, 5]
+    files = [f for _, _, fs in os.walk(cdir) for f in fs]
+    assert files, "fixpoint wrote no reliable checkpoint"
+
+
+def test_only_plans_cache_cuts_lineage():
+    """Every lineage cut goes through plans.cache.pin (so the pin mode
+    and the release handle cover the whole engine): as code — not in
+    comments or docstrings — ``localCheckpoint(`` and ``.checkpoint(``
+    appear only in plans/cache.py."""
+    import io
+    import pathlib
+    import tokenize
+
+    root = pathlib.Path(__file__).resolve().parents[1] / "emma_spark"
+    found = set()
+    for path in root.rglob("*.py"):
+        toks = [
+            t
+            for t in tokenize.generate_tokens(io.StringIO(path.read_text()).readline)
+            if t.type in (tokenize.NAME, tokenize.OP)
+        ]
+        for prev, t, nxt in zip(toks, toks[1:], toks[2:]):
+            if nxt.string != "(":
+                continue
+            if t.string == "localCheckpoint" or (
+                t.string == "checkpoint" and prev.string == "."
+            ):
+                found.add(path.relative_to(root).as_posix())
+    assert found == {"plans/cache.py"}, found
 
 
 def test_fixpoint_releases_superseded_checkpoints(spark):
-    """SURVEY §7.3 / r7 verdict ask: DataFrame.unpersist() is a silent
-    no-op for localCheckpoint BLOCKS (they live in the block manager,
-    not the CacheManager), so before the r8 RDD-level release a
-    6-iteration loop left every iteration's state pinned until JVM GC
-    — unbounded executor-memory growth on a long-lived driver. The
-    contract now: after fixpoint returns, exactly ONE state table
+    """SURVEY §7.3: DataFrame.unpersist() is a silent no-op for
+    localCheckpoint BLOCKS (they live in the block manager, not the
+    CacheManager), so without an RDD-level release a 6-iteration loop
+    leaves every iteration's state pinned until JVM GC — unbounded
+    executor-memory growth on a long-lived driver. The contract:
+    after fixpoint returns, exactly ONE state table
     (the returned, checkpoint-backed one) is persisted above baseline,
-    in EVERY cadence (checkpoint_every 1/2/3, custom converged probe,
-    max_iter exhaustion), and release() frees that last one."""
+    in every shape (default probe, custom converged probe, max_iter
+    exhaustion), and release() frees that last one."""
     from pyspark.sql import functions as F
 
     from emma_spark.core import DataBag
@@ -539,13 +607,10 @@ def test_fixpoint_releases_superseded_checkpoints(spark):
     )
 
     shapes = [
-        dict(max_iter=20, checkpoint_every=1),
-        dict(max_iter=20, checkpoint_every=2),
-        dict(max_iter=20, checkpoint_every=3),
-        dict(max_iter=2, checkpoint_every=3),  # exhaustion, state lazy
+        dict(max_iter=20),
+        dict(max_iter=2),  # exhaustion
         dict(
             max_iter=20,
-            checkpoint_every=2,
             converged=lambda a, b: b.df.agg(F.min("x")).collect()[0][0] >= 5,
         ),
     ]

@@ -80,12 +80,17 @@ def test_changed_deps_detects_one_sided_and_differing():
 
 
 def test_release_handle_change_marks_graph_queries():
-    """The r9 carry_ckpt edit must appear in the fixpoint consumers'
-    closures — the property that let the tool catch graph_ppr_seed
-    when the hand-derived verdict list missed it."""
+    """An edit to the release-handle code must appear in the fixpoint
+    consumers' closures — the property that let the tool catch
+    graph_ppr_seed when a hand-derived verdict list missed it. The
+    handle is made by plans.cache.pin (reached through fixpoint) and
+    copied onto derived frames by carry_ckpt."""
     idx = ModuleIndex(None)
     qsrc = query_sources(idx)
     mod, seg = qsrc["graph_transitive_closure"]
     parts = closure_parts(idx, mod, seg)
-    assert "emma_spark.plans.iterate.carry_ckpt" in parts
+    assert "emma_spark.plans.cache.pin" in parts
     assert "emma_spark.plans.iterate.fixpoint" in parts
+    mod, seg = qsrc["graph_kcore"]
+    parts = closure_parts(idx, mod, seg)
+    assert "emma_spark.plans.iterate.carry_ckpt" in parts

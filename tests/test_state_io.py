@@ -46,6 +46,22 @@ def test_mutable_bag_copy_isolated(spark):
     assert state.bag().collect()[0]["val"] == 2
 
 
+def test_mutable_bag_snapshot_survives_updates(spark):
+    """A bag() snapshot reads the state blocks it was taken from; later
+    updates must not free them."""
+    state = MutableBag(spark.createDataFrame([(1, 1), (2, 2)], ["key", "val"]))
+    snap = state.bag()
+    for v in (10, 20):
+        state.update(
+            DataBag(spark.createDataFrame([(1, v), (3, v)], ["key", "val"])),
+            lambda k, old, m: m,
+        )
+    assert as_bag(snap.collect()) == as_bag([(1, 1), (2, 2)], ["key", "val"])
+    assert as_bag(state.bag().collect()) == as_bag(
+        [(1, 20), (2, 2), (3, 20)], ["key", "val"]
+    )
+
+
 def test_mutable_bag_loop_clickcount_shape(spark):
     """ClickCountDiffs.scala:21-52 shape: per-round counts merged into
     keyed state across iterations."""
