@@ -258,6 +258,10 @@ def read_parquet(spark: SparkSession, path: str, schema=None) -> DataBag:
     Column pruning + predicate pushdown reach the scan via Catalyst —
     check ``.explain`` shows PushedFilters/ReadSchema.
 
+    Without ``schema``, the schema Spark infers for ``path`` is
+    memoized per content stamp (:func:`parquet_schema`), so a path read
+    before costs no schema-inference job and no analysis round trip.
+
     timestamp[ns] parquet columns (Spark reads them as long under
     ``spark.sql.legacy.parquet.nanosAsLong``) are converted to
     microsecond timestamps, matching DuckDB's truncation.
@@ -272,52 +276,44 @@ def read_parquet(spark: SparkSession, path: str, schema=None) -> DataBag:
     string↔timestamp parsing/rendering in the same session also
     happens in UTC, not the JVM-local zone. Pin your own zone AFTER
     the reads if you need different rendering semantics."""
-    ns_cols = _ns_timestamp_columns(path)
-    if ns_cols:
-        # Session-independent: the driver harness provides its own vanilla
-        # SparkSession, so the conf must be set here (runtime-settable SQL
-        # conf), not only in emma_spark.session.get_spark. The conf is
-        # deliberately NOT restored after the read: the returned plan is
-        # lazy and physical planning re-reads the conf at action time, so
-        # a save/restore would break execution of the very frame built
-        # here. Leaving it set is harmless within this engine — every ns
-        # read goes through this helper, which always applies the
-        # matching div-1000 micros fixup; without the conf the same read
-        # would hard-error (PARQUET_TYPE_ILLEGAL), not change meaning.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    reader = spark.read
     if isinstance(schema, type) and dataclasses.is_dataclass(schema):
-        reader = reader.schema(schema_of(schema))
-    elif schema is not None:
-        reader = reader.schema(schema)
-    df = reader.parquet(path)
-    for col in ns_cols:
-        # integer `div`, NOT `/`: float division of int64 nanos loses
-        # precision past 2^53 and lands ±1µs off after floor
-        df = df.withColumn(col, F.timestamp_micros(F.expr(f"`{col}` div 1000")))
+        schema = schema_of(schema)
+    ns_cols, inferred = _parquet_meta(spark, path, infer=schema is None)
+    df = spark.read.schema(schema or inferred).parquet(path)
     # Naive (isAdjustedToUTC=false) µs/ms parquet timestamps infer as
     # TIMESTAMP_NTZ under Spark's default inferTimestampNTZ — but NTZ
     # is rejected by withWatermark (EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE)
     # and diverges from this engine's timestamp contract: naive wall
     # times are TIMESTAMP_LTZ in a UTC session (exactly what the ns
-    # shim above produces), so DuckDB's naive TIMESTAMP and Spark
-    # render identical instants. Normalize here, at the IO layer, so a
+    # fixup produces), so DuckDB's naive TIMESTAMP and Spark render
+    # identical instants. Normalize here, at the IO layer, so a
     # vanilla driver session gets the same types as get_spark's; the
     # TZ pin makes the NTZ→LTZ cast read the naive value AS UTC on any
     # machine (cast interprets NTZ in the session zone). Like
-    # nanosAsLong above, the confs stay set — restoring them would
-    # change the meaning of the lazy plan built here.
-    ntz_casts = [
-        (f.name, rewritten)
-        for f in df.schema.fields
-        for rewritten in (_ntz_to_ltz(f.dataType),)
-        if rewritten is not f.dataType
-    ]
-    if ntz_casts:
+    # nanosAsLong, the conf stays set — restoring it would change the
+    # meaning of the lazy plan built here.
+    fields = inferred or schema
+    if not isinstance(fields, T.StructType):  # a DDL string
+        fields = df.schema
+    fixes, ntz = {}, False
+    for f in fields.fields:
+        if f.name in ns_cols:
+            # integer `div`, NOT `/`: float division of int64 nanos
+            # loses precision past 2^53 and lands ±1µs off after floor
+            fixes[f.name] = F.timestamp_micros(F.expr(f"{_quote(f.name)} div 1000"))
+        elif (dt := _ntz_to_ltz(f.dataType)) is not f.dataType:
+            fixes[f.name], ntz = F.col(_quote(f.name)).cast(dt), True
+    if ntz:
         spark.conf.set("spark.sql.session.timeZone", "UTC")
-        for c, dt in ntz_casts:
-            df = df.withColumn(c, F.col(c).cast(dt))
+    if fixes:
+        df = df.select(
+            *(fixes[n].alias(n) if n in fixes else F.col(_quote(n)) for n in fields.names)
+        )
     return DataBag(df)
+
+
+def _quote(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
 
 
 def _ntz_to_ltz(dt):
@@ -347,31 +343,125 @@ def _ntz_to_ltz(dt):
     return dt
 
 
-_NS_COLS_MEMO: dict = {}
+# Parquet metadata memo: (content stamp, inference confs) ->
+# (timestamp[ns] column names, inferred Spark schema or None). Pure
+# metadata — a rewritten file or directory gets a new stamp, and a
+# changed conf a new key, so an entry never outlives what it describes.
+_PARQUET_META: dict = {}
+
+# session confs that change what Spark infers for a parquet path
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.caseSensitive",
+)
 
 
-def _ns_timestamp_columns(path: str) -> list[str]:
-    """Memoized per (path, mtime, size): the pyarrow footer probe costs
-    tens of ms and every query re-opens its tables — across a
-    50-query harness run that is seconds of pure metadata re-reading."""
+def parquet_schema(spark: SparkSession, path: str) -> T.StructType:
+    """The schema ``spark.read.parquet(path)`` infers (before
+    :func:`read_parquet`'s timestamp fixups), memoized per content
+    stamp: one inference job per file or directory version and conf
+    set, none after."""
+    return _parquet_meta(spark, path, infer=True)[1]
+
+
+def _parquet_meta(spark, path: str, infer: bool):
+    """``(ns_cols, schema)`` for a parquet path; ``schema`` is None
+    unless ``infer``. Sets ``nanosAsLong`` when the data has
+    timestamp[ns] columns, before inferring — Spark rejects those
+    columns without it (PARQUET_TYPE_ILLEGAL). The conf is
+    deliberately NOT restored: the returned plan is lazy and physical
+    planning re-reads the conf at action time. Leaving it set is
+    harmless within this engine — every ns read goes through
+    :func:`read_parquet`, which always applies the matching div-1000
+    micros fixup. Globs, non-``file`` URIs and missing paths are
+    probed on every call, not memoized."""
+    stamped = _content_stamp(path)
+    key = None
+    if stamped is not None:
+        key = (stamped[0], tuple(spark.conf.get(k) for k in _INFERENCE_CONFS))
+        hit = _PARQUET_META.get(key)
+        # an entry holding ns columns was stored under nanosAsLong=true,
+        # so a hit needs no conf write
+        if hit is not None and (hit[1] is not None or not infer):
+            return hit
+    ns_cols = _ns_timestamp_columns(path if stamped is None else stamped[1])
+    if ns_cols:
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    schema = spark.read.parquet(path).schema if infer else None
+    if key is not None:
+        key = (key[0], tuple(spark.conf.get(k) for k in _INFERENCE_CONFS))
+        _PARQUET_META[key] = (ns_cols, schema)
+    return ns_cols, schema
+
+
+def _content_stamp(path: str):
+    """``(stamp, probe_file)`` for a local parquet file or directory,
+    or None for a glob, a non-``file`` URI or a missing path. A file's
+    stamp is (absolute path, mtime_ns, size); a directory's adds the
+    sorted (relative name, mtime_ns, size) of every file Spark lists
+    in it (hidden ``_``/``.`` names skipped, like Spark's file index).
+    ``probe_file`` is the first data file, whose footer the ns probe
+    reads (None for an empty directory)."""
     import os
+    from urllib.parse import urlparse
 
+    if any(ch in path for ch in "*?[{\\"):
+        return None
+    uri = urlparse(path)
+    if uri.scheme not in ("", "file"):
+        return None
+    local = os.path.abspath(uri.path if uri.scheme else path)
     try:
-        st = os.stat(path)
-        key = (path, st.st_mtime_ns, st.st_size)
+        st = os.stat(local)
     except OSError:
-        key = (path, None, None)
-    if key in _NS_COLS_MEMO:
-        return _NS_COLS_MEMO[key]
-    try:
-        import pyarrow.parquet as pq
+        return None
+    if not os.path.isdir(local):
+        return (local, st.st_mtime_ns, st.st_size), local
+    files = []
+    for root, dirs, names in os.walk(local):
+        dirs[:] = sorted(d for d in dirs if not _hidden(d))
+        for n in names:
+            if not _hidden(n):
+                fst = os.stat(os.path.join(root, n))
+                rel = os.path.relpath(os.path.join(root, n), local)
+                files.append((rel, fst.st_mtime_ns, fst.st_size))
+    files.sort()
+    data = [rel for rel, _, _ in files if not os.path.basename(rel).startswith("_")]
+    probe = os.path.join(local, data[0]) if data else None
+    return (local, tuple(files)), probe
 
-        schema = pq.read_schema(path)
-        cols = [f.name for f in schema if str(f.type) == "timestamp[ns]"]
-    except Exception:
-        cols = []
-    _NS_COLS_MEMO[key] = cols
-    return cols
+
+def _hidden(name: str) -> bool:
+    """Spark's ``shouldFilterOutPathName``: ``_``/``.``-prefixed names
+    are not data, except partition dirs (``_x=1``) and the parquet
+    summary files."""
+    if name.startswith(("_metadata", "_common_metadata")):
+        return False
+    return (name.startswith("_") and "=" not in name) or name.startswith(".")
+
+
+def _ns_timestamp_columns(path) -> list[str]:
+    """Top-level TIMESTAMP(NANOS) columns in a parquet file's footer
+    (pyarrow; tens of ms); [] when ``path`` is None or unreadable.
+    INT96 timestamps (Spark's default output type) are not nanos:
+    Spark reads them as TIMESTAMP, so pyarrow must not report them as
+    timestamp[ns]."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    if path is None:
+        return []
+    try:
+        schema = pq.ParquetFile(path, coerce_int96_timestamp_unit="us").schema_arrow
+    except (OSError, pa.ArrowException):
+        return []
+    return [
+        f.name for f in schema if pa.types.is_timestamp(f.type) and f.type.unit == "ns"
+    ]
 
 
 def fan_out(df, min_parts: int | None = None):

@@ -23,20 +23,16 @@ def rd(col, dp: int):
 
     Unlike ``round()`` (whose half-way/ULP behavior differs between
     engines), every step here is a deterministic IEEE op — identical
-    inputs give identical doubles in Spark and DuckDB.
+    inputs give identical doubles in Spark and DuckDB (mirror:
+    :func:`rd_sql`).
 
-    Non-finite values propagate: Spark's ``floor`` returns LONG and
-    silently maps NaN→0 and ±inf→±Long.MaxValue (even under ANSI)
-    where DuckDB's floor keeps them — without the guard a stray NaN
-    quietly becomes a zero (and an inf a garbage clamp) in the output
-    instead of loudly poisoning it (r8 NaN/inf fuzz,
-    ``tools/fuzz.py nan``).
+    NaN and ±inf pass through unchanged. Spark's ``floor`` returns
+    LONG and maps NaN→0 and ±inf→±Long.MaxValue, where DuckDB's floor
+    keeps them, so non-finite inputs bypass the quantization
+    (``tools/fuzz.py nan``).
 
-    Returns DOUBLE for ANY input type (the non-finite branch forces
-    the CASE's type unification to double) — callers quantizing a
-    DECIMAL column who need a decimal-typed result must quantize
-    explicitly instead (r8 ADVICE: the cast here makes that contract
-    visible rather than an accident of branch unification)."""
+    Returns DOUBLE for any input type. Callers quantizing a DECIMAL
+    column who need a decimal-typed result must quantize explicitly."""
     from pyspark.sql import functions as F
 
     s = 10 ** dp
@@ -46,8 +42,9 @@ def rd(col, dp: int):
 
 
 def _nonfinite(d):
-    """NaN or ±inf (``d`` must already be DOUBLE). isnan misses inf;
-    equality catches it (NaN == x is false in both engines' CASE)."""
+    """True for NaN or ±inf; ``d`` must be DOUBLE. ``isnan`` misses
+    inf, so equality tests catch it (NaN == x is false in both
+    engines)."""
     from pyspark.sql import functions as F
 
     return (
@@ -63,125 +60,72 @@ def rd_sql(expr: str, dp: int) -> str:
 
 
 def qsum(col, dp: int = 4):
-    """Order-independent double sum: quantize per row to 10^-dp units
-    (exact integers), sum exactly, rescale. Immune to the summation-
-    order nondeterminism of float aggregation across engines AND
-    across Spark partitionings.
+    """Order-independent double sum: quantize each row to 10^-dp units
+    (an exact integer v = floor(x·10^dp + 0.5)), sum the integers
+    exactly, rescale. The result is the same double in Spark and
+    DuckDB (mirror: :func:`qsum_sql`) and under any partitioning or
+    row order.
 
-    EXACT-SUM MECHANISM (r10; r9 VERDICT "what's wrong" #2): until
-    r10 the quantized values were summed as ONE LONG — exact only to
-    2^52/10^dp ≈ 4.5·10¹¹ at dp=4 and ANSI-raising at ~9.2·10¹⁴,
-    bounds a 100 TB fact table's GLOBAL revenue total actually
-    crosses (TPC-H sf100k Σextendedprice ≈ 2·10¹⁶). The r10 fix
-    splits each quantized long v (|v| ≤ 2^53 by the per-row bound
-    below) into v = a·2^40 + b·2^20 + c with b, c ∈ [0, 2^20) and
-    |a| ≤ 2^13 (floor-div/pmod algebra, exact for negatives), runs
-    THREE overflow-free long sums, and reconstructs
-    Σv = 2^40·Σa + 2^20·Σb + Σc in DECIMAL(38,0) on the one-row-per-
-    group side. Exactness bound: the binding constraint is
-    Σc ≤ N·2^20 < 2^63 → N < 2^43 ≈ 8.8·10¹² rows PER GROUP — a
-    14× margin over the ~6·10¹¹ lineitem rows of a TPC-H sf100k
-    (~100 TB) corpus landing in ONE group (a global total), with ANSI
-    raising LOUDLY, never silently, if a >8-trillion-row group ever
-    crosses it. Measured cost (interleaved min-of-7 on the 4-qsum Q1
-    headliner shape at sf0.1, same session): old long 0.414 s, this
-    split 0.608 s (+47%), straight DECIMAL(38,0) sum 0.681 s (+64%;
-    other runs up to +88%) — the r9 verdict's ≲5% hope holds for NO
-    exact-beyond-long variant (a bit-shift formulation of the same
-    split measured identical to the floor-div one, so the cost is the
-    extra aggregate buffers, not per-row ops); the split is the
-    cheapest, and the only headline consumer adds ~0.2 s to an ~18 s
-    bench total. Note the double RETURN type already rounds any |Σ|
-    beyond 2^53 identically on both engines (both correctly-round
-    the same exact integer), so what this buys over LONG is precisely
-    the 2^63..10^38 range where the long sum ANSI-raises and kills a
-    100 TB job. The DuckDB mirror sums HUGEINT directly (oracle-side
-    speed is irrelevant); both sides produce the same exact integer,
-    so the final correctly-rounded double cast and 10^dp division
-    agree bit-for-bit. Per-row quantization is still double-limited:
-    |x·10^dp| must stay under 2^53 for floor to be exact — a
-    per-VALUE domain bound, not a table-size bound.
+    Exactness: the integer sum is :func:`sum_long_exact` of v, exact
+    for up to 2^43 rows per group. Quantization itself is exact while
+    |x·10^dp| < 2^53 — a per-value domain bound. The exact sum is
+    correctly rounded to double once, then divided by 10^dp, so both
+    engines produce the same bits.
 
-    Non-finite values propagate (as a DuckDB ``sum`` over them would:
-    inf, or NaN when mixed/NaN): the integer sum runs over the FINITE
-    rows only — the exact-arithmetic path, and also crash-avoidance,
-    since aggregates evaluate regardless of any CASE around them and
-    summing floor(inf) = Long.MaxValue overflows under ANSI — while a
-    parallel IEEE sum of just the non-finite doubles supplies the
-    propagated value (finite terms cannot change a sum containing an
-    inf/NaN, so the split is exact; r8 NaN/inf fuzz).
-
-    TWO aggregates, not three (r8 shipped a third ``max(_nonfinite)``
-    selector; r8 bench showed the guard cost 1.35× on the Q1
-    headliner): ``bad`` — an IEEE sum over ONLY the non-finite rows —
-    is NULL exactly when the group has no non-finite row (SQL sum over
-    zero input rows is NULL, and a sum that saw an inf/NaN is inf or
-    NaN, never NULL), so ``coalesce(bad, exact)`` IS the selector."""
+    Non-finite values propagate as a DuckDB ``sum`` over them would:
+    inf, or NaN when mixed or NaN. The exact sum runs over the finite
+    rows only (an aggregate is evaluated whatever CASE surrounds it,
+    and floor(inf) = Long.MaxValue would overflow under ANSI), while an
+    IEEE sum of the non-finite rows, ``bad``, supplies the propagated
+    value. ``bad`` is NULL exactly when the group has no non-finite
+    row, so ``coalesce(bad, exact)`` selects between them. NULL rows
+    are skipped; an all-NULL group sums to NULL."""
     from pyspark.sql import functions as F
 
     s = 10 ** dp
     d = col.cast("double")
     nf = _nonfinite(d)
     # quantize from d (the double cast), NOT col: floor() over a
-    # DECIMAL input would stay in decimal arithmetic, where Spark's
-    # division ROUNDS (HALF_UP) at the result scale and the
-    # floor-div/pmod split identity below silently breaks — the
-    # double path is the one whose exactness the proof covers
-    # (r10 ADVICE; latent: all current consumers pass doubles)
-    v = F.floor(F.when(~nf, d) * s + F.lit(0.5))  # LONG, |v| <= 2^53
-    m40, m20 = 1 << 40, 1 << 20
-    # floor-div by a power of two via double division is EXACT: the
-    # long->double conversion is exact for |v| <= 2^53 and dividing
-    # by 2^k only shifts the exponent
-    a = F.floor(v / F.lit(m40))          # |a| <= 2^13
-    r = v - a * F.lit(m40)               # pmod: r in [0, 2^40)
-    b = F.floor(r / F.lit(m20))          # b in [0, 2^20)
-    c = r - b * F.lit(m20)               # c in [0, 2^20)
-    dec = "decimal(38,0)"
-    exact = (
-        (
-            F.sum(a).cast(dec) * F.lit(m40)
-            + F.sum(b).cast(dec) * F.lit(m20)
-            + F.sum(c).cast(dec)
-        ).cast("double")
-        / F.lit(s)
-    )
+    # DECIMAL input stays in decimal arithmetic, whose division rounds
+    # HALF_UP at the result scale — the double path is the exact one
+    v = F.floor(F.when(~nf, d) * s + F.lit(0.5))  # LONG
+    exact = sum_long_exact(v).cast("double") / F.lit(s)
     bad = F.sum(F.when(nf, d))
     return F.coalesce(bad, exact)
 
 
 def sum_long_exact(v):
-    """Exact DECIMAL(38,0) aggregate sum of a LONG column — the qsum
-    3-way split (v = a·2^40 + b·2^20 + c, three overflow-free long
-    sums, reconstructed in decimal on the one-row-per-group side)
-    WITHOUT qsum's double quantization or non-finite handling, for
-    inputs that are already exact integers.
+    """Exact DECIMAL(38,0) aggregate sum of an integer column.
+
+    Each value, cast to BIGINT, is split into v = a·2^40 + b·2^20 + c
+    with a = v >> 40 (arithmetic shift, so exact for negatives) and
+    b, c ∈ [0, 2^20) the next two 20-bit fields. Three LONG sums run
+    over the rows and are recombined in DECIMAL(38,0) on the
+    one-row-per-group side. Exact for every BIGINT value in groups of
+    up to 2^40 rows (Σa, with |a| ≤ 2^23), and up to 2^43 rows when
+    |v| ≤ 2^53 as in :func:`qsum` (Σc binds). NULL rows are skipped;
+    an all-NULL group sums to NULL.
 
     Why not ``F.sum(v.cast("decimal(38,0)"))``: the decimal partial
-    aggregate runs a per-row BigDecimal accumulation — measured 2.5×
-    the whole-scan cost of this split on the ridge headliner's
-    5-sum aggregate (r12 optimization round). Same exactness bound as
-    qsum: requires |v| ≤ 2^53 PER ROW (the floor-div by 2^40 goes
-    through exact double division) and < 2^43 rows per group for the
-    Σc term; both ANSI-raise loudly, never silently, if crossed.
+    aggregate accumulates a BigDecimal per row, which costs several
+    times the whole scan on a multi-sum aggregate.
 
-    PRECONDITION (r12 ADVICE): the raise-loudly guarantee depends on
-    ``spark.sql.ansi.enabled=true`` (Spark 4's default, and this
-    engine never disables it). Under a session with ANSI explicitly
-    OFF, a long sum near the 2^43-rows-per-group bound would WRAP
-    silently and return a wrong "exact" sum — do not export results
-    from an ANSI-off session."""
+    Overflow past the row bound raises only under
+    ``spark.sql.ansi.enabled=true`` (Spark 4's default, never disabled
+    by this engine); with ANSI off a long sum would wrap silently."""
     from pyspark.sql import functions as F
 
-    m40, m20 = 1 << 40, 1 << 20
-    a = F.floor(v / F.lit(m40))
-    r = v - a * F.lit(m40)
-    b = F.floor(r / F.lit(m20))
-    c = r - b * F.lit(m20)
+    # BIGINT first: on an INT, shiftright masks its count to 5 bits
+    # (shiftright(-1000000::int, 40) is -3907, not -1)
+    v = v.cast("bigint")
+    m20 = (1 << 20) - 1
+    a = F.shiftright(v, 40)
+    b = F.shiftright(v, 20).bitwiseAND(F.lit(m20))
+    c = v.bitwiseAND(F.lit(m20))
     dec = "decimal(38,0)"
     return (
-        F.sum(a).cast(dec) * F.lit(m40)
-        + F.sum(b).cast(dec) * F.lit(m20)
+        F.sum(a).cast(dec) * F.lit(1 << 40)
+        + F.sum(b).cast(dec) * F.lit(1 << 20)
         + F.sum(c).cast(dec)
     )
 

@@ -9727,8 +9727,8 @@ def supplier_herfindahl_index(spark, sf_dir):
     # per-row BigDecimal path (measured 2.5x cheaper on the ridge
     # shape). Bounds: rev_c is one supplier's revenue in cents —
     # at TPC-H sf100k (~100 TB) ~6e4 lineitem rows/supplier x ~1.1e7
-    # max cents ≈ 6.6e11 per row, << the 2^53 per-row bound; rows per
-    # group = suppliers per nation (~4e5 at sf100k) << 2^43.
+    # max cents ≈ 6.6e11 per row, a BIGINT; rows per group =
+    # suppliers per nation (~4e5 at sf100k) << 2^40.
     t = r.groupBy(F.col("s_nationkey").alias("nk")).agg(
         sum_long_exact(F.col("rev_c")).alias("tot")
     )

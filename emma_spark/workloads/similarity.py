@@ -808,11 +808,11 @@ def embedding_outlier_zscore(spark, sf_dir):
     # sum_long_exact over the LONG product d_s*d_s, not a per-row
     # decimal product sum: same exact DECIMAL(38,0) value, three long
     # accumulators instead of the BigDecimal path (2.5x cheaper on the
-    # ridge shape, r12). Bounds: |v| <= ~1 unit-norm embeddings give
+    # ridge shape). Bounds: |v| <= ~1 unit-norm embeddings give
     # v_c <= ~1e6, so d_s = sum_64((v_c-c_q)^2) div 1e8 <= ~2.6e6 and
-    # d_s^2 <= ~7e12 — << 2^53 per row (the product itself stays in
-    # ANSI-checked long arithmetic, << 2^63); rows per group = vectors
-    # per label << 2^43 at any scale.
+    # d_s^2 <= ~7e12 (the product stays in ANSI-checked long
+    # arithmetic, << 2^63); rows per group = vectors per label << 2^40
+    # at any scale.
     stats = dist.groupBy("label").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("d_s").alias("s"),

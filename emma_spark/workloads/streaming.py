@@ -39,23 +39,6 @@ def _stage_events(spark, sf_dir: str) -> str:
     return staged
 
 
-# staged-dir schema memo: without it every streaming query re-infers
-# the pinned source schema by re-reading the staged dir's parquet
-# footer — a footer read + py4j analysis round per query BUILD. The staged dir
-# is content-stamped (mtime+size+version in its name) and written
-# exactly once by _stage_events, so its schema is immutable per path —
-# pure METADATA keyed by a content stamp, never query results.
-_staged_schemas: dict[str, object] = {}
-
-
-def _staged_schema(spark, staged: str):
-    sch = _staged_schemas.get(staged)
-    if sch is None:
-        sch = spark.read.parquet(staged).schema
-        _staged_schemas[staged] = sch
-    return sch
-
-
 @query(
     "stream_tumbling_counts",
     oracle="""
@@ -74,7 +57,7 @@ def stream_tumbling_counts(spark, sf_dir):
     in state is emitted; at scale a watermark bounds that state —
     covered in tests)."""
     staged = _stage_events(spark, sf_dir)
-    stream = S.read_stream_parquet(spark, staged, _staged_schema(spark, staged))
+    stream = S.read_stream_parquet(spark, staged, io.parquet_schema(spark, staged))
     agg = S.tumbling(stream, "ts", "1 hour", "event_type").agg(
         F.count(F.lit(1)).alias("n"),
         (F.sum(F.floor(F.col("value") * 10000 + F.lit(0.5))) / 10000).alias("total"),
@@ -145,7 +128,7 @@ def stream_watermark_append(spark, sf_dir):
     Certified by the restart tier's DRIFT pass
     (``tools/fuzz.py restart``)."""
     staged = _stage_events(spark, sf_dir)
-    stream = S.read_stream_parquet(spark, staged, _staged_schema(spark, staged))
+    stream = S.read_stream_parquet(spark, staged, io.parquet_schema(spark, staged))
     valid, _quarantine = S.quarantine_out_of_band(stream, "ts", "7 days")
     valid, _null_required = S.quarantine_required(valid, "value")
     wm = S.with_watermark(valid, "ts", "37 minutes")
@@ -176,7 +159,7 @@ def stream_keyed_state_counts(spark, sf_dir):
     import pandas as pd
 
     staged = _stage_events(spark, sf_dir)
-    schema = _staged_schema(spark, staged)
+    schema = io.parquet_schema(spark, staged)
     stream = S.read_stream_parquet(spark, staged, schema)
 
     def update(key, pdf_iter, state):
@@ -218,7 +201,7 @@ def stream_stream_interval_join(spark, sf_dir):
     drained result equals the batch interval join, which is the
     oracle."""
     staged = _stage_events(spark, sf_dir)
-    schema = _staged_schema(spark, staged)
+    schema = io.parquet_schema(spark, staged)
     p = (
         S.with_watermark(S.read_stream_parquet(spark, staged, schema), "ts", "2 hours")
         .filter(F.col("event_type") == "purchase")
@@ -278,7 +261,7 @@ def stream_session_windows(spark, sf_dir):
     is micro-second-misaligned with event times, so the boundary
     comparison cannot tie."""
     staged = _stage_events(spark, sf_dir)
-    stream = S.read_stream_parquet(spark, staged, _staged_schema(spark, staged))
+    stream = S.read_stream_parquet(spark, staged, io.parquet_schema(spark, staged))
     wm = S.with_watermark(stream, "ts", "37 minutes")
     agg = S.session(wm, "ts", "30 minutes", "user_id").agg(
         F.count(F.lit(1)).alias("n")
@@ -306,7 +289,7 @@ def stream_dedup_keys(spark, sf_dir):
     emission only for duplicates closer than the delay — duplicates
     separated further may re-emit, hence the final distinct()."""
     staged = _stage_events(spark, sf_dir)
-    stream = S.read_stream_parquet(spark, staged, _staged_schema(spark, staged))
+    stream = S.read_stream_parquet(spark, staged, io.parquet_schema(spark, staged))
     wm = S.with_watermark(stream, "ts", "2 hours").select("user_id", "event_type", "ts")
     dd = wm.dropDuplicatesWithinWatermark(["user_id", "event_type"])
     name = f"stream_dd_{uuid.uuid4().hex[:8]}"
@@ -335,7 +318,7 @@ def stream_sliding_counts(spark, sf_dir):
     each event — and must produce the identical (window, type, count)
     multiset."""
     staged = _stage_events(spark, sf_dir)
-    stream = S.read_stream_parquet(spark, staged, _staged_schema(spark, staged))
+    stream = S.read_stream_parquet(spark, staged, io.parquet_schema(spark, staged))
     agg = S.sliding(stream, "ts", "2 hours", "1 hour", "event_type").agg(
         F.count(F.lit(1)).alias("n")
     )
@@ -364,7 +347,7 @@ def stream_static_enrich(spark, sf_dir):
     shuffle before the windowed agg). Windowed counts + quantized sum
     per market segment; oracle is the batch join."""
     staged = _stage_events(spark, sf_dir)
-    stream = S.read_stream_parquet(spark, staged, _staged_schema(spark, staged))
+    stream = S.read_stream_parquet(spark, staged, io.parquet_schema(spark, staged))
     dim = F.broadcast(
         io.read_parquet(spark, f"{sf_dir}/customer.parquet").df.select(
             F.col("c_custkey"), F.col("c_mktsegment")
@@ -409,7 +392,7 @@ def stream_state_ttl_closed(spark, sf_dir):
     import pandas as pd
 
     staged = _stage_events(spark, sf_dir)
-    schema = _staged_schema(spark, staged)
+    schema = io.parquet_schema(spark, staged)
     stream = S.with_watermark(
         S.read_stream_parquet(spark, staged, schema), "ts", "1 hour"
     )
@@ -501,7 +484,7 @@ def stream_hll_windowed_distinct(spark, sf_dir):
     from ..llm.text import md5_long
 
     staged = _stage_events(spark, sf_dir)
-    stream = S.read_stream_parquet(spark, staged, _staged_schema(spark, staged))
+    stream = S.read_stream_parquet(spark, staged, io.parquet_schema(spark, staged))
     m, s_bits = 512, 48
     h = md5_long(F.col("user_id").cast("string"), salt="hll")
     # NULL keys are invisible to a distinct count (the register-table
@@ -580,7 +563,7 @@ def stream_quantile_bins_windowed(spark, sf_dir):
     from pyspark.sql import Window
 
     staged = _stage_events(spark, sf_dir)
-    stream = S.read_stream_parquet(spark, staged, _staged_schema(spark, staged))
+    stream = S.read_stream_parquet(spark, staged, io.parquet_schema(spark, staged))
     bin_col = F.least(
         F.expr("CAST(floor(value * 100 + 0.5) AS BIGINT) * 128 div 100000"),
         F.lit(127).cast("bigint"),
@@ -768,7 +751,7 @@ def stream_session_window_agg(spark, sf_dir):
     store, the one streaming aggregation whose state SHRINKS as
     windows merge."""
     staged = _stage_events(spark, sf_dir)
-    schema = _staged_schema(spark, staged)
+    schema = io.parquet_schema(spark, staged)
     stream = S.read_stream_parquet(spark, staged, schema).filter(
         F.col("user_id") < 12
     )
@@ -823,7 +806,7 @@ def stream_sliding_watermark_append(spark, sf_dir):
     SAME sliding metric, one oracle apart."""
     staged = _stage_events(spark, sf_dir)
     stream = S.read_stream_parquet(
-        spark, staged, _staged_schema(spark, staged)
+        spark, staged, io.parquet_schema(spark, staged)
     )
     # out-of-band event times quarantined ahead of the watermark (the
     # far-future side poisons the checkpointed watermark — api.py);
@@ -889,7 +872,7 @@ def stream_stream_left_outer_join(spark, sf_dir):
     watermark + interval, the production requirement for an unbounded
     join."""
     staged = _stage_events(spark, sf_dir)
-    schema = _staged_schema(spark, staged)
+    schema = io.parquet_schema(spark, staged)
     p = (
         S.with_watermark(S.read_stream_parquet(spark, staged, schema), "ts", "97 minutes")
         .filter(F.col("event_type") == "purchase")
@@ -949,7 +932,7 @@ def stream_chained_window_aggs(spark, sf_dir):
     window.start instead drops the watermark tag and append mode is
     rejected (the documented chaining contract)."""
     staged = _stage_events(spark, sf_dir)
-    stream = S.read_stream_parquet(spark, staged, _staged_schema(spark, staged))
+    stream = S.read_stream_parquet(spark, staged, io.parquet_schema(spark, staged))
     wm = S.with_watermark(stream, "ts", "37 minutes")
     hourly = S.tumbling(wm, "ts", "1 hour", "event_type").agg(
         F.count(F.lit(1)).alias("n")
@@ -1161,7 +1144,7 @@ def stream_windowed_topk_users(spark, sf_dir):
     subquery)."""
     staged = _stage_events(spark, sf_dir)
     stream = S.read_stream_parquet(
-        spark, staged, _staged_schema(spark, staged)
+        spark, staged, io.parquet_schema(spark, staged)
     )
     # out-of-band event times quarantined ahead of the watermark (the
     # far-future side poisons the checkpointed watermark — api.py)
@@ -1244,7 +1227,7 @@ def stream_scd2_temporal_enrich(spark, sf_dir):
     windowed agg). Daily counts per plan; oracle replays dim build +
     interval join + windowing in batch SQL."""
     staged = _stage_events(spark, sf_dir)
-    schema = _staged_schema(spark, staged)
+    schema = io.parquet_schema(spark, staged)
     stream = S.read_stream_parquet(spark, staged, schema)
 
     users = (

@@ -664,3 +664,21 @@ def test_temp_view_binds_at_analysis(spark):
     spark.range(0, 100).createOrReplaceTempView("v_bind_probe")
     assert df.collect()[0]["n"] == 5
     spark.catalog.dropTempView("v_bind_probe")
+
+
+def test_tools_resolve_the_checkout_from_their_own_path():
+    """Spark-free: no tool names this checkout's absolute path or puts
+    a literal absolute path on ``sys.path`` — run from another
+    worktree, a tool must import and check that worktree's engine."""
+    import pathlib
+    import re
+
+    root = pathlib.Path(__file__).resolve().parents[1]
+    literal_insert = re.compile(r"sys\.path\.insert\(\s*0\s*,\s*[\"']/")
+    bad = [
+        p.name
+        for p in sorted((root / "tools").iterdir())
+        if p.is_file()
+        and (str(root) in (text := p.read_text(errors="replace")) or literal_insert.search(text))
+    ]
+    assert not bad, bad

@@ -312,7 +312,7 @@ def test_qsum_beyond_long_ceiling(spark):
     exceeds 2^63 units (the old LONG path's ANSI-raise ceiling — the
     bound a 100 TB global revenue total actually crosses) sums
     exactly and matches DuckDB's HUGEINT mirror bit-for-bit. Negative
-    mixes exercise the floor-div/pmod identity for signed values."""
+    mixes exercise the arithmetic-shift split for signed values."""
     import duckdb
     from pyspark.sql import functions as F
 
@@ -342,8 +342,7 @@ def test_qsum_beyond_long_ceiling(spark):
 def test_qsum_decimal_input_pins_long_path(spark):
     """The r10 ADVICE latent: a DECIMAL input column must quantize
     through the DOUBLE cast, not decimal arithmetic (where Spark's
-    division ROUNDS HALF_UP at the result scale and the split-sum
-    floor-div/pmod identity silently breaks). qsum over the same
+    division ROUNDS HALF_UP at the result scale). qsum over the same
     values as DECIMAL and as DOUBLE must agree, and both must match
     the DuckDB mirror."""
     import duckdb
@@ -363,6 +362,93 @@ def test_qsum_decimal_input_pins_long_path(spark):
         + ", ".join(f"({v})" for v in vals) + ") v(x)"
     ).fetchone()[0]
     assert g_dec == g_dbl == want, (g_dec, g_dbl, want)
+
+
+# quantized values on each side of the exact-sum split's 20/40-bit
+# field boundaries, and the double-exact quantization limit
+_SPLIT_EDGES = [0, 1, 2**20 - 1, 2**20, 2**40 - 1, 2**40, 2**53]
+_SPLIT_VALUES = sorted({sign * v for v in _SPLIT_EDGES for sign in (1, -1)})
+
+
+def _float_key(x):
+    """Bit-exact comparison key for a DOUBLE result (NaN and -0.0
+    included)."""
+    import math
+    import struct
+
+    if x is None or math.isnan(x):
+        return repr(x)
+    return struct.pack(">d", x)
+
+
+def test_qsum_split_boundaries_match_duckdb(spark, tmp_path):
+    """qsum equals its DuckDB mirror bit-for-bit per group: each split
+    boundary value alone, all of them together, and groups holding
+    NaN, ±inf, NULL and -0.0 (with dp=0 the quantized value is the
+    input)."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from emma_spark.workloads import qsum, qsum_sql
+
+    rows = [(f"v{v}", float(v)) for v in _SPLIT_VALUES]
+    rows += [("all", float(v)) for v in _SPLIT_VALUES]
+    rows += [
+        ("nan", float("nan")), ("nan", 1.0),
+        ("inf", float("inf")), ("inf", -(2.0**40)),
+        ("-inf", float("-inf")), ("-inf", 2.0**53),
+        ("inf-inf", float("inf")), ("inf-inf", float("-inf")),
+        ("null", None), ("null+1", None), ("null+1", -1.0),
+        ("-0", -0.0), ("-0", -0.0),
+    ]
+    p = str(tmp_path / "split.parquet")
+    pq.write_table(
+        pa.table({"g": [g for g, _ in rows], "x": pa.array([x for _, x in rows], pa.float64())}),
+        p,
+    )
+    got = {
+        r["g"]: _float_key(r["t"])
+        for r in spark.read.parquet(p).groupBy("g").agg(qsum(F.col("x"), 0).alias("t")).collect()
+    }
+    want = {
+        g: _float_key(t)
+        for g, t in duckdb.sql(
+            f"SELECT g, {qsum_sql('x', 0)} AS t FROM read_parquet('{p}') GROUP BY g"
+        ).fetchall()
+    }
+    assert len(got) == 21
+    assert got == want, {g for g in got if got[g] != want.get(g)}
+
+
+def test_sum_long_exact_split_boundaries(spark):
+    """sum_long_exact is Python's exact integer sum on every split
+    boundary value, per value and in total, over BIGINT and over INT
+    input (an INT must be widened before the shifts)."""
+    from pyspark.sql import functions as F
+
+    from emma_spark.workloads import sum_long_exact
+
+    def sums(values, typ):
+        rows = [(str(v), v) for v in values] + [("all", v) for v in values]
+        rows += [("null", None), ("null", None)]
+        df = spark.createDataFrame(rows, f"g string, v {typ}")
+        return {
+            r["g"]: r["s"]
+            for r in df.groupBy("g").agg(sum_long_exact(F.col("v")).alias("s")).collect()
+        }
+
+    def exact(values):
+        want = {str(v): v for v in values}
+        want.update(all=sum(values), null=None)
+        return want
+
+    big = _SPLIT_VALUES + [2**63 - 1, -(2**63)]
+    assert sums(big, "bigint") == exact(big)
+    ints = [v for v in _SPLIT_VALUES if -(2**31) <= v < 2**31]
+    ints += [-1000000, 2**31 - 1, -(2**31)]
+    assert sums(ints, "int") == exact(ints)
 
 
 def test_mta_linear_credit_null_tid_tie_break(spark, tmp_path):

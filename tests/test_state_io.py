@@ -154,6 +154,137 @@ def test_parquet_ntz_normalized_nested(spark, tmp_path):
     assert row["arr"][0] == datetime.datetime(2024, 1, 1, 12, 0, 0)
 
 
+def _parquet_jobs(spark) -> int:
+    """Spark jobs so far whose name is a parquet schema inference
+    (``parquet at …``), read from the status store."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    jobs = sc.statusStore().jobsList(None)
+    return sum(jobs.apply(i).name().startswith("parquet at ") for i in range(jobs.size()))
+
+
+def test_read_parquet_memo_skips_schema_inference(spark, tmp_path):
+    """A second read of an unchanged file opens no schema-inference
+    job and returns the same rows."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from emma_spark.sources import io
+
+    p = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"a": [1, 2, 3], "s": ["x", "y", "z"]}), p)
+    before = _parquet_jobs(spark)
+    first = io.read_parquet(spark, p).df
+    assert _parquet_jobs(spark) > before
+    before = _parquet_jobs(spark)
+    second = io.read_parquet(spark, p).df
+    assert _parquet_jobs(spark) == before
+    assert second.schema == first.schema
+    assert sorted(second.collect()) == sorted(first.collect())
+
+
+def test_read_parquet_memo_reinfers_rewritten_file(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from emma_spark.sources import io
+
+    p = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"a": [1, 2]}), p)
+    assert io.read_parquet(spark, p).df.columns == ["a"]
+    pq.write_table(pa.table({"a": [1, 2], "b": ["u", "v"]}), p)
+    back = io.read_parquet(spark, p).df
+    assert back.columns == ["a", "b"]
+    assert sorted(back.collect()) == [(1, "u"), (2, "v")]
+
+
+def test_parquet_dir_stamp_covers_its_data_files(spark, tmp_path):
+    """Adding a file to a directory changes its content stamp (and so
+    the memoized metadata); hidden files do not."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from emma_spark.sources import io
+
+    d = tmp_path / "dir"
+    d.mkdir()
+    pq.write_table(pa.table({"a": [1, 2]}), str(d / "part-0.parquet"))
+    s0 = io._content_stamp(str(d))
+    assert io.read_parquet(spark, str(d)).df.count() == 2
+    (d / "_SUCCESS").write_text("")
+    (d / ".part-0.parquet.crc").write_text("")
+    assert io._content_stamp(str(d)) == s0
+    pq.write_table(pa.table({"a": [3]}), str(d / "part-1.parquet"))
+    assert io._content_stamp(str(d)) != s0
+    assert io.read_parquet(spark, str(d)).df.count() == 3
+    assert io._content_stamp(str(d / "*.parquet")) is None
+    assert io._content_stamp(str(tmp_path / "missing")) is None
+
+
+def test_read_parquet_memo_keys_inference_confs(spark, tmp_path):
+    """Flipping a conf that changes parquet inference re-infers."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import types as T
+
+    from emma_spark.sources import io
+
+    p = str(tmp_path / "b.parquet")
+    pq.write_table(pa.table({"b": pa.array([b"hi"], pa.binary())}), p)
+    key = "spark.sql.parquet.binaryAsString"
+    old = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "false")
+        assert isinstance(io.read_parquet(spark, p).df.schema["b"].dataType, T.BinaryType)
+        spark.conf.set(key, "true")
+        back = io.read_parquet(spark, p).df
+        assert isinstance(back.schema["b"].dataType, T.StringType)
+        assert back.first()["b"] == "hi"
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_read_parquet_ns_directory_matches_file(spark, tmp_path):
+    """timestamp[ns] data read from a directory comes back as the same
+    µs timestamps as the same table read from a single file."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from emma_spark.sources import io
+
+    ts = [datetime.datetime(2024, 3, 1, 8, 30, i, 123456) for i in range(4)]
+    tbl = pa.table(
+        {"id": pa.array([1, 2, 3, 4], pa.int64()), "ts": pa.array(ts, pa.timestamp("ns"))}
+    )
+    f = str(tmp_path / "one.parquet")
+    pq.write_table(tbl, f)
+    d = tmp_path / "many"
+    d.mkdir()
+    pq.write_table(tbl.slice(0, 2), str(d / "part-0.parquet"))
+    pq.write_table(tbl.slice(2), str(d / "part-1.parquet"))
+
+    from_file = io.read_parquet(spark, f).df
+    from_dir = io.read_parquet(spark, str(d)).df
+    assert from_dir.dtypes == from_file.dtypes == [("id", "bigint"), ("ts", "timestamp")]
+    assert sorted(from_dir.collect()) == sorted(from_file.collect())
+    assert sorted(r["ts"] for r in from_file.collect()) == ts
+
+    # Spark's INT96 timestamps read back as pyarrow timestamp[ns], but
+    # they are not nanos: no fixup applies to them
+    key = "spark.sql.parquet.outputTimestampType"
+    old = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "INT96")
+        from_file.write.parquet(str(tmp_path / "int96"))
+    finally:
+        spark.conf.set(key, old)
+    back = io.read_parquet(spark, str(tmp_path / "int96")).df
+    assert back.dtypes == from_file.dtypes
+    assert sorted(back.collect()) == sorted(from_file.collect())
+
+
 def test_read_text(spark, tmp_path):
     from emma_spark.sources import io
 

@@ -30,8 +30,9 @@ from __future__ import annotations
 import datetime
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from tools.typecheck import duck_output_types, pair_problems  # noqa: E402
 

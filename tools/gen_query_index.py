@@ -1,7 +1,8 @@
 """Regenerate docs/QUERIES.md from the workload registry."""
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from emma_spark.workloads import load_all  # noqa: E402
 

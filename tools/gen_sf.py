@@ -18,13 +18,14 @@ Document text is salted per copy (dedup rates must not jump from
 ~0.2% to 90% just because we replicated); embeddings get 4 copies
 with one component nudged per copy (no artificial exact-twin ties).
 
-    python tools/gen_sf.py [--out /root/repo/.local/sf1] [--copies 10]
+    python tools/gen_sf.py [--out <repo>/.local/sf1] [--copies 10]
 """
 from __future__ import annotations
 
 import argparse
 import os
 import sys
+from pathlib import Path
 
 import duckdb
 
@@ -159,7 +160,9 @@ def gen(out: str, copies: int = 10) -> None:
 
 def main() -> int:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--out", default="/root/repo/.local/sf1")
+    ap.add_argument(
+        "--out", default=str(Path(__file__).resolve().parents[1] / ".local" / "sf1")
+    )
     ap.add_argument("--copies", type=int, default=10)
     a = ap.parse_args()
     print(f"generating {a.out} ({a.copies} copies of {SRC})")

@@ -26,6 +26,7 @@ from __future__ import annotations
 
 import re
 import sys
+from pathlib import Path
 
 RULES: list[tuple[str, re.Pattern[str]]] = [
     (
@@ -93,7 +94,7 @@ def _one_arg_trim(sql: str) -> re.Match | None:
 
 
 def lint_oracles() -> list[str]:
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
     from emma_spark.workloads import load_all
 
     problems = []

@@ -16,8 +16,9 @@ from __future__ import annotations
 
 import os
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 RED_FLAGS = (
     # (marker, why it's a 100 TB problem)

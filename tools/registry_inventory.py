@@ -9,8 +9,10 @@ from __future__ import annotations
 
 import sys
 from collections import defaultdict
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 
 def main() -> None:
@@ -44,7 +46,7 @@ def main() -> None:
             star = " ★" if headline else ""
             lines.append(f"- **{name}**{star} — {first}")
         lines.append("")
-    with open("/root/repo/docs/REGISTRY.md", "w") as fh:
+    with open(ROOT / "docs" / "REGISTRY.md", "w") as fh:
         fh.write("\n".join(lines) + "\n")
     print(f"wrote docs/REGISTRY.md: {len(reg)} queries, {len(fams)} families")
 

@@ -17,8 +17,9 @@ The audit flags only same-table multiplicity in a single lazy plan.
 import re
 import sys
 from collections import Counter
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 SF_DIR = "/root/testdata/sf0.001"
 

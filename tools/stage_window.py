@@ -23,9 +23,8 @@ import subprocess
 import sys
 from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
-
-REPO = Path("/root/repo")
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
 KEEPERS = ["click_count_diffs", "groupby_agg_pricing"]
 
