@@ -515,13 +515,6 @@ class DataBag:
     def cache(self) -> "DataBag":
         return DataBag(self._df.cache())
 
-    def local_checkpoint(self) -> "DataBag":
-        """Truncate lineage inside driver loops (SURVEY §2.8): an eager
-        :func:`plans.cache.pin` under the engine-wide pin mode."""
-        from .plans.cache import pin
-
-        return DataBag(pin(self._df, eager=True))
-
     def unpersist(self) -> "DataBag":
         self._df.unpersist()
         return self

@@ -44,21 +44,13 @@ def curate(
     gated = docs.filter(
         (F.size(X.tokens(t)) >= min_tokens) & (qm["alpha_ratio"] >= min_alpha)
     )
-    # `kept` feeds BOTH the signature build and the final anti-join:
-    # pin it (lazy by default — computed once on first action, blocks
-    # GC-released; executor-local, so an executor loss fails the job
-    # instead of recomputing — configure_pinning(reliable=True, ...)
-    # flips every pin to reliable checkpoint() for multi-hour cluster
-    # runs) or the quality filter + exact-dedup shuffle would run twice. The auto-cache used-more-than-once policy
-    # (Caching.scala:57-94) applied by hand. Then REBALANCE: AQE
-    # coalesces the dedup shuffle by BYTES, but the next stage (shingle
-    # explode + md5 per shingle) is CPU-bound per row — without the
-    # re-spread the whole signature build lands on one task (measured
-    # 5x slower at sf0.1). Cheap at any scale: the deduped bag already
-    # paid a shuffle, this one moves strictly fewer rows.
-    kept = pin(
-        D.drop_exact_dups(gated, text_col=text_col, id_col=id_col)
-        .repartition(docs.sparkSession.sparkContext.defaultParallelism)
+    # REBALANCE: AQE coalesces the dedup shuffle by BYTES, but the next
+    # stage (shingle explode + md5 per shingle) is CPU-bound per row —
+    # without the re-spread the whole signature build lands on one task
+    # (measured 5x slower at sf0.1). Cheap at any scale: the deduped bag
+    # already paid a shuffle, this one moves strictly fewer rows.
+    kept = D.drop_exact_dups(gated, text_col=text_col, id_col=id_col).repartition(
+        docs.sparkSession.sparkContext.defaultParallelism
     )
     sigs = D.minhash_signature(
         kept, text_col=text_col, id_col=id_col, num_hashes=num_hashes, shingle=shingle
@@ -101,6 +93,7 @@ def curate_funnel(
     gated = docs.filter(
         (F.size(X.tokens(t)) >= min_tokens) & (qm["alpha_ratio"] >= min_alpha)
     )
+    # unpinned: 4 documents scans at sf0.001, median ×1.03 sf0.1 / ×1.05 sf1
     kept = pin(
         D.drop_exact_dups(gated, text_col=text_col, id_col=id_col)
         .repartition(docs.sparkSession.sparkContext.defaultParallelism)

@@ -397,12 +397,10 @@ def geo_dbscan_clusters(spark, sf_dir):
         DataBag(e0), lambda bag: DataBag(_small_star(_large_star(bag.df))),
         max_iter=12,
     ).df
-    lab = pin(
-        core.join(
-            star.select(F.col("src").alias("id"), F.col("dst").alias("parent")),
-            "id", "left",
-        ).select("id", F.coalesce("parent", "id").alias("comp"))
-    )
+    lab = core.join(
+        star.select(F.col("src").alias("id"), F.col("dst").alias("parent")),
+        "id", "left",
+    ).select("id", F.coalesce("parent", "id").alias("comp"))
     border = (
         pairs.join(core.withColumnRenamed("id", "a"), "a", "left_anti")
         .join(lab.select(F.col("id").alias("b"), "comp"), "b")

@@ -54,16 +54,9 @@ def graph_transitive_closure(spark, sf_dir):
     DOUBLING (paths⋈paths) — O(log diameter) rounds instead of the
     reference's linear O(diameter); each round pins its state via
     fixpoint() (the auto-cache service, Caching.scala:57-130 analog)."""
-    paths = _chain_edges(spark, sf_dir)
+    from ..lib.graphs import transitive_closure
 
-    def step(p: DataBag) -> DataBag:
-        ext = p.equi_join(p, "dst", "src").select(
-            F.col("l.src").alias("src"), F.col("r.dst").alias("dst")
-        )
-        return p.union(ext).distinct()
-
-    bag = fixpoint(paths, step, max_iter=10)
-    return bag.df
+    return transitive_closure(_chain_edges(spark, sf_dir).df, max_iter=10)
 
 
 @query(
@@ -85,31 +78,9 @@ def graph_connected_components(spark, sf_dir):
     ConnectedComponents.scala:25-53 — MutableBag + foldGroup(max) loop;
     same fixpoint semantics, min instead of max). Convergence probe =
     label-sum, one count-style action per round."""
-    e = _chain_edges(spark, sf_dir).df
-    ue = e.unionByName(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    ue = DataBag(ue).cache().df
-    labels = DataBag(
-        ue.select(F.col("src").alias("id")).distinct().withColumn("comp", F.col("id"))
-    )
+    from ..lib.graphs import connected_components
 
-    def step(lb: DataBag) -> DataBag:
-        nbr = (
-            lb.df.alias("l")
-            .join(ue.alias("e"), F.col("l.id") == F.col("e.src"))
-            .select(F.col("e.dst").alias("id"), F.col("l.comp").alias("comp"))
-        )
-        return DataBag(
-            lb.df.unionByName(nbr).groupBy("id").agg(F.min("comp").alias("comp"))
-        )
-
-    def converged(old: DataBag, new: DataBag) -> bool:
-        return (
-            new.df.agg(F.sum("comp")).collect()[0][0]
-            == old.df.agg(F.sum("comp")).collect()[0][0]
-        )
-
-    bag = fixpoint(labels, step, converged=converged, max_iter=30)
-    return bag.df
+    return connected_components(_chain_edges(spark, sf_dir).df, max_iter=30)
 
 
 SQL_HASH_EDGES = """
@@ -133,23 +104,13 @@ def graph_triangles(spark, sf_dir):
     edges u<v, 3-way self equi-join with ordering guards. At scale the
     canonical orientation halves the join input and kills duplicate
     triangles for free."""
+    from ..lib.graphs import triangles
+
     ev = io.read_parquet(spark, f"{sf_dir}/events.parquet").df
-    a = F.col("user_id") % 30
-    b = (F.col("user_id") * 7 + F.col("event_id")) % 30
-    e = (
-        ev.select(F.least(a, b).alias("u"), F.greatest(a, b).alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .cache()
-    )
-    e1 = e.select(F.col("u").alias("x"), F.col("v").alias("y"))
-    e2 = e.select(F.col("u").alias("y2"), F.col("v").alias("z"))
-    e3 = e.select(F.col("u").alias("x3"), F.col("v").alias("z3"))
-    return (
-        e1.join(e2, F.col("y") == F.col("y2"))
-        .join(e3, (F.col("x") == F.col("x3")) & (F.col("z") == F.col("z3")))
-        .select("x", "y", "z")
-    )
+    return triangles(ev.select(
+        (F.col("user_id") % 30).alias("src"),
+        ((F.col("user_id") * 7 + F.col("event_id")) % 30).alias("dst"),
+    ))
 
 
 @query(
@@ -653,10 +614,8 @@ def graph_jaccard_neighbors(spark, sf_dir):
     here); the pair agg is one hash-shuffle with map-side combine."""
 
     # ONE events pass builds the undirected adjacency (explode of both
-    # directions, not a self-union that scans the source twice), and
-    # it is PINNED: both wedge legs and the degree table consume it —
-    # unpinned this plan compiled 8 events FileScans. Degrees are
-    # pinned too (node-sized, consumed by both endpoint joins).
+    # directions, not a self-union that scans the source twice)
+    # unpinned: 4 events scans at sf0.001, median ×1.10 sf0.1 / ×1.23 sf1
     e = _hash_edges(spark, sf_dir)
     ue = pin(e.select(
         F.explode(F.array(
@@ -1649,10 +1608,7 @@ def graph_greedy_matching(spark, sf_dir):
     )
 
     matched = None
-    e = pin(edges)  # each round reads e 4x (two endpoint views, the
-    # candidate join, the shrink anti-join) and the NEXT round builds
-    # on the result — unpinned, lineage grows ~4^R and the plan
-    # explodes; pinning per round is the iterate.py auto-cache rule
+    e = pin(edges)  # unpinned: median ×1.15 sf0.1 / ×1.25 sf1
     for r in range(1, _MATCH_ROUNDS + 1):
         ends = e.select(F.col("u").alias("vtx"), "prio").unionAll(
             e.select(F.col("v").alias("vtx"), "prio")
@@ -1729,9 +1685,8 @@ def graph_degree_distribution(spark, sf_dir):
         .distinct()
     )
     # endpoint view in ONE pass (explode, not a self-union scanning e
-    # twice); the degree table is pinned — both the histogram and the
-    # vertex total consume it (4 compiled events scans unpinned, 1 now)
-    deg = pin(
+    # twice)
+    deg = (
         e.select(F.explode(F.array(F.col("u"), F.col("v"))).alias("vtx"))
         .groupBy("vtx")
         .agg(F.count(F.lit(1)).alias("degree"))
@@ -1881,7 +1836,8 @@ def graph_reciprocity(spark, sf_dir):
         .distinct()
     )
 
-    e = pin(e)  # both join sides + the total
+    # unpinned: 3 events scans at sf0.001, median ×1.07 sf0.1 / ×1.04 sf1
+    e = pin(e)
     rev = e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     r = e.join(rev, ["src", "dst"]).agg(F.count(F.lit(1)).alias("n_recip"))
     t = e.agg(F.count(F.lit(1)).alias("n_edges"))
@@ -1897,7 +1853,7 @@ def graph_reciprocity(spark, sf_dir):
     )
 
 
-def _walk_step_sql(prev: str, out: str, t: int) -> str:
+def _corpus_walk_step_sql(prev: str, out: str, t: int) -> str:
     """One hash-seeded walk hop: next = argmin over neighbors of the
     56-bit md5 draw, packed into a (hash*64 + nbr) slot so the argmin
     is a plain MIN; dead-ends stay in place via the LEFT JOIN."""
@@ -1940,10 +1896,10 @@ def _walk_step_sql(prev: str, out: str, t: int) -> str:
       SELECT u AS seed, u AS cur, CAST(u AS VARCHAR) AS path
       FROM (SELECT u FROM und UNION SELECT v FROM und) GROUP BY u
     ),
-    {_walk_step_sql('w0', 'w1', 1)},
-    {_walk_step_sql('w1', 'w2', 2)},
-    {_walk_step_sql('w2', 'w3', 3)},
-    {_walk_step_sql('w3', 'w4', 4)}
+    {_corpus_walk_step_sql('w0', 'w1', 1)},
+    {_corpus_walk_step_sql('w1', 'w2', 2)},
+    {_corpus_walk_step_sql('w2', 'w3', 3)},
+    {_corpus_walk_step_sql('w3', 'w4', 4)}
     SELECT seed, cur AS end_node, path FROM w4
     """,
 )

@@ -1825,8 +1825,7 @@ def ml_pinball_quantile_eval(spark, sf_dir):
     )
     from pyspark.sql import Window
 
-    # value histogram pinned — the totals and the cumsum both consume
-    # it (3 compiled orders scans unpinned, 2 now: histogram + eval)
+    # unpinned: 3 orders scans at sf0.001, median ×0.90 sf0.1 / ×0.96 sf1
     h = pin(o.groupBy("pri", "y").agg(F.count(F.lit(1)).alias("cnt")))
     tot = h.groupBy("pri").agg(F.sum("cnt").alias("n"))
     w = Window.partitionBy("pri").orderBy("y").rowsBetween(
@@ -2455,11 +2454,7 @@ def ml_cohens_kappa(spark, sf_dir):
     )
 
     dec = "DECIMAL(38,0)"
-    # the confusion-cell table is PINNED: it fans out to the row
-    # marginals, the column marginals, and the total/diagonal roll-up
-    # — unpinned, each branch recompiled the centroid + classify
-    # lineage (6 embeddings FileScans in this plan); pinned state is
-    # <= |classes|² rows at any data scale
+    # unpinned: 6 embeddings scans at sf0.001, median ×1.15 sf0.1 / ×1.31 sf1
     cells = pin(pred.groupBy("actual", "pred").agg(
         F.count(F.lit(1)).cast(dec).alias("n")
     ))
@@ -2550,7 +2545,6 @@ def ml_feature_hash_collision_audit(spark, sf_dir):
         ).alias("feat")
     ).distinct()
 
-    f = pin(f)  # feeds the bucket histogram and the total
     b = f.select(
         (
             F.expr(
@@ -2640,9 +2634,7 @@ def ml_lift_gains_bands(spark, sf_dir):
         .cast("bigint").alias("score_c"),
         F.when(F.col("o_orderstatus") == "F", 1).otherwise(0).alias("label"),
     )
-    # the 1-row range/census table feeds the binning AND the final
-    # ppm arithmetic — pinned so each reference reads the row instead
-    # of recompiling the scan (3 compiled orders scans unpinned, 2 now)
+    # unpinned: 3 orders scans at sf0.001, median ×1.00 sf0.1 / ×1.63 sf1
     mm = pin(scored.agg(
         F.min("score_c").alias("lo"), F.max("score_c").alias("hi"),
         F.count(F.lit(1)).alias("n_all"), F.sum("label").alias("n_pos"),

@@ -342,9 +342,7 @@ def sketch_quantile_bins_grouped(spark, sf_dir):
         .groupBy("grp", "lo", "hi", "n", "bin")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    # PINNED like the ungrouped sketch: the read-off references the
-    # histogram once per quantile, recompiling the orders scan each
-    # time when unpinned (4 FileScans); pinned state is groups × bins
+    # unpinned: 4 orders scans at sf0.001, median ×0.96 sf0.1 / ×1.01 sf1
     from ..plans.cache import pin
 
     binned = pin(binned)
@@ -437,11 +435,7 @@ def sketch_cms_merge_rollup(spark, sf_dir):
     from ..plans.cache import pin
 
     docs = io.read_parquet(spark, f"{sf_dir}/documents.parquet").df
-    # the token explosion feeds three branches (per-lang build, direct
-    # build, probe selection) — PINNED per the used-more-than-once
-    # policy: the pinned bag is two narrow columns (smaller than the
-    # raw text it came from), and unpinned this plan re-tokenized the
-    # corpus four times (4 documents FileScans)
+    # unpinned: 4 documents scans at sf0.001, median ×1.08 sf0.1 / ×0.95 sf1
     toks = pin(
         docs.select("lang", F.explode(tokens(F.col("text"))).alias("token"))
     )

@@ -8,6 +8,7 @@ so the tumbling-count query carries a full SQL oracle.
 
 from __future__ import annotations
 
+import hashlib
 import os
 import tempfile
 import uuid
@@ -20,22 +21,26 @@ from ..streaming import api as S
 from . import query
 
 
+def _staged_events_dir(src: str) -> str:
+    """Where ``src`` (an events parquet file) is staged: a temp dir
+    keyed by its content stamp and the staging format, so every
+    process resolves the same dir. ``_v3`` marks staged timestamps as
+    LTZ (io.read_parquet's NTZ→LTZ normalization); older staged dirs
+    carry NTZ columns that withWatermark rejects."""
+    stamp = io._content_stamp(src)
+    if stamp is None:
+        raise FileNotFoundError(src)
+    key = hashlib.sha256(repr((stamp[0], "_v3")).encode()).hexdigest()[:16]
+    return os.path.join(tempfile.gettempdir(), f"emma_stream_{key}")
+
+
 def _stage_events(spark, sf_dir: str) -> str:
-    """Write events to a session-scoped temp dir (streaming file
-    sources read directories)."""
+    """Write events to a temp dir shared by every process that stages
+    the same file (streaming file sources read directories)."""
     src = f"{sf_dir}/events.parquet"
-    # _v3: staged timestamp type changed (NTZ→LTZ normalization in
-    # io.read_parquet) — older staged dirs carry NTZ ts columns that
-    # withWatermark rejects, so they must not be reused
-    stamp = f"{os.path.getmtime(src):.0f}_{os.path.getsize(src)}_v3"
-    staged = os.path.join(
-        tempfile.gettempdir(), f"emma_stream_{abs(hash((sf_dir, stamp)))}"
-    )
-    marker = os.path.join(staged, "_SUCCESS")
-    if not os.path.exists(marker):
-        io.read_parquet(spark, f"{sf_dir}/events.parquet").df.write.mode(
-            "overwrite"
-        ).parquet(staged)
+    staged = _staged_events_dir(src)
+    if not os.path.exists(os.path.join(staged, "_SUCCESS")):
+        io.read_parquet(spark, src).df.write.mode("overwrite").parquet(staged)
     return staged
 
 

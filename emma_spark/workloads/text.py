@@ -2141,15 +2141,9 @@ def text_length_outliers_mad(spark, sf_dir):
     from pyspark.sql import Window
 
     docs = io.fan_out(io.read_parquet(spark, f"{sf_dir}/documents.parquet").df)
-    # the length table fans out to both median passes and the final
-    # count; each per-lang value histogram fans out to its total and
-    # its cumsum; the median itself feeds the deviation pass AND the
-    # final flagging — all PINNED (lengths: one narrow scan; the rest
-    # bounded by lang × length domain, tiny at any scale). Unpinned
-    # this plan compiled 9 documents FileScans.
-    d = pin(docs.filter(F.col("n_chars").isNotNull()).select(
+    d = docs.filter(F.col("n_chars").isNotNull()).select(
         "doc_id", "lang", F.col("n_chars").cast("bigint").alias("x")
-    ))
+    )
 
     def _median(df, col, out):
         h = pin(df.groupBy("lang", F.col(col).alias("v")).agg(
@@ -2165,7 +2159,7 @@ def text_length_outliers_mad(spark, sf_dir):
                    .alias(out))
         )
 
-    med = pin(_median(d, "x", "m"))
+    med = _median(d, "x", "m")
     dev = d.join(F.broadcast(med), "lang").select(
         "lang", F.abs(F.col("x") - F.col("m")).alias("ax"))
     mad = _median(dev, "ax", "md")
@@ -2443,7 +2437,8 @@ def text_source_vocab_overlap(spark, sf_dir):
         .distinct()
     )
 
-    v = pin(v)  # feeds sizes + both join sides
+    # unpinned: 4 documents scans at sf0.001, median ×1.11 sf0.1 / ×1.09 sf1
+    v = pin(v)
     sz = v.groupBy("source").agg(F.count(F.lit(1)).alias("n"))
     a, b = v.alias("a"), v.alias("b")
     inter = (

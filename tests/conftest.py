@@ -42,6 +42,16 @@ def tables(spark):
 
 
 @pytest.fixture(scope="session")
+def registry_builds(spark, tables):
+    """Every registry query built once per session: name -> its schema
+    (or the exception its build raised) and its build-job count. After
+    ``tables``, so the parquet metadata memo is warm."""
+    from tools.buildjobs import build_all
+
+    return build_all(spark, SF_DIR)
+
+
+@pytest.fixture(scope="session")
 def duck():
     con = duckdb.connect()
     for t in TABLES:

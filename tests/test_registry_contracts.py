@@ -238,7 +238,7 @@ def test_json_numeric_grammar_fuzz(spark, tmp_path):
         )
 
 
-def test_output_type_identity(spark):
+def test_output_type_identity(registry_builds):
     """Every oracle output column's DuckDB type must land in the SAME
     pandas dtype family as the Spark column — the r6 driver-red class.
 
@@ -254,7 +254,8 @@ def test_output_type_identity(spark):
     float-vs-int family disagreements like DOUBLE-vs-bigint."""
     from tools.typecheck import connect_views, scan_all
 
-    problems = scan_all(spark, connect_views(SF_DIR), SF_DIR)
+    schemas = {name: b.schema for name, b in registry_builds.items()}
+    problems = scan_all(connect_views(SF_DIR), schemas)
     assert not problems, "\n".join(problems)
 
 
@@ -284,26 +285,51 @@ def test_diffcheck_catches_hugeint_oracle(spark):
     assert status == "ok", (status, detail)
 
 
-def test_no_complex_output_columns(spark):
+def test_no_complex_output_columns(registry_builds):
     from pyspark.sql.types import ArrayType, MapType, StructType
-
-    from emma_spark.workloads import load_all
 
     bad: list[str] = []
     errs: list[str] = []
-    for name, q in load_all().items():
-        try:
-            schema = q.fn(spark, SF_DIR).schema
-        except Exception as ex:  # noqa: BLE001 — collect, don't abort the sweep
-            errs.append(f"{name}: {ex!r}"[:200])
+    for name, b in registry_builds.items():
+        if isinstance(b.schema, Exception):
+            errs.append(f"{name}: {b.schema!r}"[:200])
             continue
-        for f in schema.fields:
+        for f in b.schema.fields:
             if isinstance(f.dataType, (ArrayType, MapType, StructType)):
                 bad.append(f"{name}.{f.name}: {f.dataType.simpleString()}")
     assert not errs, "\n".join(errs)
     assert not bad, (
         "complex-typed output columns break the driver canonicalizer "
         "(serialize to strings/JSON on both engines):\n" + "\n".join(bad)
+    )
+
+
+def test_build_jobs_do_not_rise(registry_builds):
+    """No registry query may open more Spark jobs while it is built than
+    ``tests/build_jobs.json`` records, and every query must be listed
+    there. Jobs named ``parquet at …`` are not counted, because their
+    number depends on process history: schema-inference reads (a path
+    the process read before opens none) and parquet staging writes (a
+    staged dir that already exists needs none). When counts fall or
+    queries are added, regenerate the file with
+    ``python tools/buildjobs.py``."""
+    import json
+
+    from tools.buildjobs import CENSUS
+    from tools.buildjobs import SF_DIR as CENSUS_SF
+
+    if SF_DIR != CENSUS_SF:
+        pytest.skip(f"the census is taken at {CENSUS_SF}")
+    want = json.loads(CENSUS.read_text())
+    missing = sorted(set(registry_builds) - set(want))
+    risen = [
+        f"{name}: {b.jobs} jobs, census {want[name]}"
+        for name, b in sorted(registry_builds.items())
+        if name in want and b.jobs > want[name]
+    ]
+    assert not missing and not risen, (
+        f"missing from {CENSUS.name}: {missing}\nbuild jobs rose:\n"
+        + "\n".join(risen)
     )
 
 

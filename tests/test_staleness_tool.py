@@ -94,3 +94,61 @@ def test_release_handle_change_marks_graph_queries():
     mod, seg = qsrc["graph_kcore"]
     parts = closure_parts(idx, mod, seg)
     assert "emma_spark.plans.iterate.carry_ckpt" in parts
+
+
+def test_segments_match_ast_get_source_segment():
+    """ModuleIndex slices segments from lines split once per module;
+    each slice must equal what ``ast.get_source_segment`` returns."""
+    import ast
+    from pathlib import Path
+
+    from tools.staleness import REPO, _segment, _split_lines
+
+    pkg = Path(REPO) / "emma_spark"
+    paths = [pkg / "workloads" / "graph.py", *sorted((pkg / "plans").glob("*.py"))]
+    checked = 0
+    for path in paths:
+        src = path.read_text()
+        lines = _split_lines(src)
+        for node in ast.parse(src).body:
+            for n in [node, *getattr(node, "decorator_list", [])]:
+                assert _segment(lines, n) == ast.get_source_segment(src, n), (
+                    path.name, n.lineno)
+                checked += 1
+    assert checked > 100
+
+
+def test_no_module_defines_a_top_level_name_twice():
+    """A second top-level definition shadows the first at import time,
+    and the index keeps only the last: the first one's consumers would
+    hash the wrong source."""
+    import ast
+    from collections import Counter
+    from pathlib import Path
+
+    from tools.staleness import REPO
+
+    dupes = []
+    for path in sorted((Path(REPO) / "emma_spark").rglob("*.py")):
+        seen = Counter()
+        for node in ast.parse(path.read_text()).body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
+                                 ast.ClassDef)):
+                seen[node.name] += 1
+            elif isinstance(node, ast.Assign):
+                seen.update(t.id for t in node.targets if isinstance(t, ast.Name))
+            elif isinstance(node, ast.AnnAssign) and isinstance(
+                    node.target, ast.Name):
+                seen[node.target.id] += 1
+        dupes += [f"{path.name}:{k}" for k, v in seen.items() if v > 1]
+    assert not dupes, dupes
+
+
+def test_random_walks_closure_holds_its_own_hop():
+    """graph_random_walks' oracle is built by the 'wk|' hop helper; the
+    corpus walk's 'walk|' hop is a different helper."""
+    idx = ModuleIndex(None)
+    mod, seg = query_sources(idx)["graph_random_walks"]
+    parts = closure_parts(idx, mod, seg)
+    hop = parts["emma_spark.workloads.graph._walk_step_sql"]
+    assert "'wk|'" in hop and "'walk|'" not in hop

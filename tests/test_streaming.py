@@ -1442,3 +1442,30 @@ def test_run_to_memory_checkpoint_is_local_scratch(
     S.run_to_memory(agg, name, output_mode="complete")
     assert spark.table(name).count() == batch.select("event_type").distinct().count()
     assert list(tmp_path.iterdir()) == []
+
+
+def test_staged_events_dir_is_the_same_in_every_process():
+    """The staging dir is keyed by a content hash, not Python's salted
+    ``hash()``, so processes with different hash seeds share it instead
+    of each staging (and leaving behind) their own copy."""
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    src = f"{SF_DIR}/events.parquet"
+    code = (
+        "import sys; from emma_spark.workloads.streaming import "
+        "_staged_events_dir; print(_staged_events_dir(sys.argv[1]))"
+    )
+    dirs = {
+        subprocess.run(
+            [sys.executable, "-c", code, src],
+            cwd=Path(__file__).resolve().parents[1],
+            env={**os.environ, "PYTHONHASHSEED": seed},
+            capture_output=True, text=True, check=True,
+        ).stdout.strip()
+        for seed in ("1", "2")
+    }
+    assert len(dirs) == 1, dirs
+    (d,) = dirs
+    assert os.path.dirname(d) == tempfile.gettempdir(), d

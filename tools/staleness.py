@@ -32,7 +32,6 @@ Usage:
 from __future__ import annotations
 
 import ast
-import hashlib
 import json
 import re
 import subprocess
@@ -99,6 +98,27 @@ def last_green_round() -> dict[str, int]:
     return greens
 
 
+_LINE = re.compile(r"[^\r\n]*(?:\r\n|\r|\n)|[^\r\n]+\Z")
+
+
+def _split_lines(src: str) -> list[str]:
+    """``src`` split once into lines with their endings, on the same
+    boundaries ``ast.get_source_segment`` uses (no form feed)."""
+    return _LINE.findall(src)
+
+
+def _segment(lines: list[str], node: ast.AST) -> str:
+    """``ast.get_source_segment`` over pre-split lines: the source of
+    ``node``, whose column offsets count UTF-8 bytes."""
+    first, last = node.lineno - 1, node.end_lineno - 1
+    head = lines[first].encode()
+    if first == last:
+        return head[node.col_offset:node.end_col_offset].decode()
+    tail = lines[last].encode()[:node.end_col_offset].decode()
+    return "".join(
+        [head[node.col_offset:].decode(), *lines[first + 1:last], tail])
+
+
 class ModuleIndex:
     """Package sources at one git ref (or the working tree for ref
     None): per-module AST, top-level definition segments, and import
@@ -141,20 +161,21 @@ class ModuleIndex:
             except SyntaxError:
                 break
             is_pkg = rel.endswith("__init__.py")
+            lines = _split_lines(src)
             defs: dict[str, str] = {}
             imports: dict[str, tuple] = {}
             for node in tree.body:
                 if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
                                      ast.ClassDef)):
-                    defs[node.name] = ast.get_source_segment(src, node) or ""
+                    defs[node.name] = _segment(lines, node)
                 elif isinstance(node, ast.Assign):
-                    seg = ast.get_source_segment(src, node) or ""
+                    seg = _segment(lines, node)
                     for t in node.targets:
                         if isinstance(t, ast.Name):
                             defs[t.id] = seg
                 elif isinstance(node, ast.AnnAssign) and isinstance(
                         node.target, ast.Name):
-                    defs[node.target.id] = ast.get_source_segment(src, node) or ""
+                    defs[node.target.id] = _segment(lines, node)
                 elif isinstance(node, ast.Import):
                     for a in node.names:
                         imports[(a.asname or a.name).split(".")[0]] = (
@@ -176,7 +197,8 @@ class ModuleIndex:
                         if a.name == "*":
                             continue
                         imports[a.asname or a.name] = ("name", target, a.name)
-            info = {"defs": defs, "imports": imports, "src": src}
+            info = {"defs": defs, "imports": imports, "src": src,
+                    "tree": tree, "lines": lines}
             break
         self._mod[mod] = info or False
         return info
@@ -298,12 +320,8 @@ def query_sources(idx: ModuleIndex) -> dict[str, tuple[str, str]]:
         info = idx.module(mod)
         if not info:
             continue
-        src = info["src"]
-        try:
-            tree = ast.parse(src)
-        except SyntaxError:
-            continue
-        for node in tree.body:
+        lines = info["lines"]
+        for node in info["tree"].body:
             if not isinstance(node, ast.FunctionDef):
                 continue
             for dec in node.decorator_list:
@@ -311,8 +329,8 @@ def query_sources(idx: ModuleIndex) -> dict[str, tuple[str, str]]:
                         and isinstance(dec.func, ast.Name)
                         and dec.func.id == "query" and dec.args
                         and isinstance(dec.args[0], ast.Constant)):
-                    seg = ast.get_source_segment(src, node) or ""
-                    dseg = ast.get_source_segment(src, dec) or ""
+                    seg = _segment(lines, node)
+                    dseg = _segment(lines, dec)
                     out[dec.args[0].value] = (mod, dseg + "\n" + seg)
     return out
 

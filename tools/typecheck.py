@@ -115,23 +115,22 @@ def connect_views(sf_dir: str):
     return con
 
 
-def scan_all(spark, con, sf_dir: str, only=None) -> list[str]:
+def scan_all(con, schemas: dict) -> list[str]:
+    """Type mismatches of the oracle-carrying registry queries in
+    ``schemas``: query name -> its Spark schema, or the exception its
+    build raised."""
     from emma_spark.workloads import load_all
 
+    qs = load_all()
     out: list[str] = []
-    for name, q in load_all().items():
-        if only and name not in only:
-            continue
+    for name, schema in schemas.items():
+        q = qs[name]
         if not q.oracle:
             continue
-        try:
-            sfields = [
-                (f.name, f.dataType.simpleString())
-                for f in q.fn(spark, sf_dir).schema.fields
-            ]
-        except Exception as ex:  # noqa: BLE001 — report, keep sweeping
-            out.append(f"{name}: spark schema error: {ex!r}"[:200])
+        if isinstance(schema, Exception):
+            out.append(f"{name}: spark schema error: {schema!r}"[:200])
             continue
+        sfields = [(f.name, f.dataType.simpleString()) for f in schema.fields]
         try:
             dfields = duck_output_types(con, q.oracle)
         except Exception as ex:  # noqa: BLE001
@@ -147,8 +146,18 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     spark = get_spark("typecheck")
     spark.sparkContext.setLogLevel("ERROR")
-    con = connect_views(sf_dir)
-    problems = scan_all(spark, con, sf_dir, only=set(sys.argv[2:]) or None)
+    from emma_spark.workloads import load_all
+
+    only = set(sys.argv[2:]) or None
+    schemas: dict = {}
+    for name, q in load_all().items():
+        if only and name not in only:
+            continue
+        try:
+            schemas[name] = q.fn(spark, sf_dir).schema
+        except Exception as ex:  # noqa: BLE001 — report, keep sweeping
+            schemas[name] = ex
+    problems = scan_all(connect_views(sf_dir), schemas)
     for p in problems:
         print(p)
     print(f"\n{len(problems)} type mismatches")
