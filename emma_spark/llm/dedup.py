@@ -135,8 +135,8 @@ def lsh_candidate_pairs(
     uniquely only under this precondition: two rows for one id would
     emit that pair more than once.
 
-    FIRST-MATCHING-BAND dedup, not DISTINCT (r13 optimization, guide
-    §2.4 — remove shuffles outright): a pair that collides in several
+    FIRST-MATCHING-BAND dedup, not DISTINCT (it removes a shuffle
+    outright): a pair that collides in several
     bands used to be emitted once per band and collapsed by a
     ``.distinct()`` — a full exchange + hash-agg over the Σ|bucket|²
     candidate stream, which at sf1 was ~5 s of the query's ~7 s (the

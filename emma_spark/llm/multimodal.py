@@ -71,7 +71,7 @@ def size_bucket(meta: Column, edges: list[int] = [64, 256, 1024]) -> Column:
 
     NULL metadata buckets to NULL, not to the largest bucket: an
     unknown-size blob must be routable to a quarantine path, not
-    silently co-located with the big decodes (r8 blob fuzz)."""
+    silently co-located with the big decodes (tests/test_multimodal_fuzz.py)."""
     m = F.greatest(meta["width"], meta["height"])
     expr = F.lit(len(edges))
     for i in reversed(range(len(edges))):
@@ -135,7 +135,7 @@ def image_features(
             # undecodable rows (NULL blob / missing metadata) yield
             # NULL features instead of killing the batch — at 100 TB a
             # corpus WILL contain them, and one poison row must not
-            # fail a 10k-row Arrow batch (r8 blob fuzz)
+            # fail a 10k-row Arrow batch (tests/test_multimodal_fuzz.py)
             feats = [
                 None
                 if blob is None or m is None
@@ -164,7 +164,8 @@ def frame_sample_plan(
     n = df[meta_col]["n_frames"]
     # zero-frame and NULL-frame-count videos yield no rows; an
     # unguarded sequence(0, -1, k) is an executor-side
-    # IllegalArgumentException that fails the whole job (r8 blob fuzz)
+    # IllegalArgumentException that fails the whole job
+    # (tests/test_multimodal_fuzz.py)
     frames = F.when(
         n >= 1, F.sequence(F.lit(0), (n - 1).cast("long"), F.lit(every_n))
     )

@@ -75,7 +75,7 @@ def countmin_build(
     # weights must land as non-null BIGINT: double/decimal weights would
     # silently change countmin_estimate's min() arithmetic type, and an
     # all-NULL cell would return NULL where the count path returns a
-    # number (ADVICE r5) — cast row-side, coalesce NULL weight to 0
+    # number — cast row-side, coalesce NULL weight to 0
     wcol = (
         F.coalesce(F.col(weight_col).cast("bigint"), F.lit(0).cast("bigint"))
         if weight_col
@@ -159,8 +159,8 @@ def hll_register_table(
     # count(DISTINCT ...) convention this sketch estimates. Unfiltered,
     # a NULL key makes a NULL-register row here while DuckDB's
     # NULL-ignoring concat() hashes the bare salt into a REAL register
-    # (one phantom distinct) — both wrong, differently (r10
-    # NULL-user_id events fuzz).
+    # (one phantom distinct) — both wrong, differently (the events
+    # fuzz tier's NULL user_ids).
     base = df.filter(F.col(key_col).isNotNull()).select(
         F.col(group_col), h.alias("__h")
     )

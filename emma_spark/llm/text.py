@@ -38,7 +38,7 @@ WS_RE_EXPR = WS_RE.replace("\\", "\\\\")
 # full Unicode lowercasing is engine-sensitive — Java's toLowerCase
 # maps İ (U+0130) → "i"+combining-dot and applies Greek final-sigma
 # context (ΣΙΣΥΦΟΣ → σισυφος), while DuckDB maps İ → i and Σ → σ
-# unconditionally (probed live, r6). Any compared text therefore folds
+# unconditionally (probed live). Any compared text therefore folds
 # ONLY A-Z, via translate() — identical, locale-free semantics on both
 # engines. Non-ASCII letters pass through unchanged.
 ASCII_UPPER = "ABCDEFGHIJKLMNOPQRSTUVWXYZ"
@@ -315,7 +315,7 @@ def pack_sequences(
     else:
         offset = cum_local - F.col(token_col)
     # integer `div`, not float `/`: float division drifts past 2^53
-    # (the same exactness rule that converted KMV and pagerank in r4)
+    # (the same exactness rule the KMV sketch and pagerank follow)
     return part.select(
         F.col(id_col),
         F.col(token_col),
@@ -330,7 +330,7 @@ def quarantine_invalid_json(
 ) -> tuple[DataFrame, DataFrame]:
     """Split a frame into ``(valid, quarantine)`` on the JSON
     QUARANTINE CONTRACT (workloads udtf_expand_props /
-    variant_ops_surface, r10 exotic-props tier): a 100 TB ingest
+    variant_ops_surface; the props fuzz tier): a 100 TB ingest
     contains corrupt JSON documents — malformed fragments, empty
     strings, top-level scalars/arrays, duplicate keys — and a parser
     that meets one must SKIP the document, never kill the job and
@@ -346,7 +346,7 @@ def quarantine_invalid_json(
 
     - ``try_parse_json`` non-NULL ⇔ well-formed JSON with UNIQUE keys
       at every depth (Spark's VARIANT builder rejects duplicate-key
-      documents outright — probed live, r10);
+      documents outright — probed live);
     - ``require_object`` adds the top-level-object test: for already-
       validated JSON, "first non-whitespace byte is ``{``" is exact
       (the explicit ``[ \\t\\r\\n]`` class, same discipline as WS_RE).

@@ -43,7 +43,7 @@ def asof_join(
     same timestamp, so an exactly-simultaneous right row matches in
     both directions.
 
-    NULL keys (r10, NULL-user_id events fuzz): SQL join semantics —
+    NULL keys (the events fuzz tier's NULL user_ids): SQL join semantics —
     a right row with a NULL key never matches anything, and a left
     row with a NULL key emits with NULL right payload. This matches
     DuckDB's native ASOF JOIN (`=` equality) and pandas merge_asof;

@@ -12,9 +12,12 @@ emma's ``Meta``/``ExpressionEncoder`` derivation
 
 from __future__ import annotations
 
+import atexit
 import dataclasses
 import datetime as _dt
 import enum
+import shutil
+import tempfile
 import typing
 from typing import Optional
 
@@ -442,6 +445,23 @@ def _hidden(name: str) -> bool:
     if name.startswith(("_metadata", "_common_metadata")):
         return False
     return (name.startswith("_") and "=" not in name) or name.startswith(".")
+
+
+# the per-process root every scratch dir lives under (scratch_dir)
+_SCRATCH_ROOT: str | None = None
+
+
+def scratch_dir(prefix: str) -> str:
+    """A new empty directory for data a query stages on disk and reads
+    back lazily. Every one lives under one per-process root, made in
+    ``tempfile.gettempdir()`` on the first call and removed at
+    interpreter exit, so scratch lives exactly as long as the process
+    that can still read it. A killed process leaves its root behind."""
+    global _SCRATCH_ROOT
+    if _SCRATCH_ROOT is None:
+        _SCRATCH_ROOT = tempfile.mkdtemp(prefix="emma_scratch_")
+        atexit.register(shutil.rmtree, _SCRATCH_ROOT, ignore_errors=True)
+    return tempfile.mkdtemp(prefix=prefix, dir=_SCRATCH_ROOT)
 
 
 def _ns_timestamp_columns(path) -> list[str]:

@@ -9,7 +9,7 @@ late data, and ``applyInPandasWithState`` for arbitrary keyed state.
 Everything is executor-side; state lives in the state store (RocksDB
 on a real cluster), never the driver.
 
-WATERMARK DOMAIN CONTRACT (late r9, epoch-straddle fuzz tier): event
+WATERMARK DOMAIN CONTRACT (checked by the epoch fuzz tier): event
 times must be >= 1970-01-01T00:00Z. Spark's internal watermark metric
 is floored at epoch 0, so every pre-epoch window is silently dropped
 as late regardless of the configured delay (probed: on a
@@ -20,17 +20,17 @@ watermarked stream are upstream data corruption; quarantine them
 BEFORE the watermark — the engine cannot retain them. Full contract
 notes: docs/SCALE.md "Epoch-boundary contracts".
 
-The FUTURE side of the same contract (r10 judge find, closed r11):
-the watermark persists in the checkpoint, so one far-future event
-time (ms-parsed-as-s lands in ~2100) advances it past all real data
-and every later row in a restart-resume deployment drops silently.
+The FUTURE side of the same contract: the watermark persists in the
+checkpoint, so one far-future event time (ms-parsed-as-s lands in
+~2100) advances it past all real data and every later row in a
+restart-resume deployment drops silently.
 ``quarantine_future_skew`` / ``quarantine_out_of_band`` enforce the
 bound ahead of ``with_watermark``; the restart-resume differential
 tier (``tools/fuzz.py restart``) certifies the class.
 
-The COLUMN face of the same ingest contract (r11 judge find, closed
-r12): a producer renaming/dropping a measure column mid-stream is
-null-filled silently by the parquet file source — correct row counts,
+The COLUMN face of the same ingest contract: a producer
+renaming/dropping a measure column mid-stream is null-filled
+silently by the parquet file source — correct row counts,
 NULL aggregates, forever. ``quarantine_required`` dead-letters rows
 NULL in declared required columns (loud: a drifted producer becomes a
 100 %-quarantined batch), and ``pin_topology``'s ``source_schema``
@@ -105,7 +105,7 @@ def quarantine_future_skew(
     event time leads processing time by more than ``max_skew`` (or is
     NULL) go to the quarantine leg.
 
-    Why this bound exists (r10 judge-confirmed hazard): the watermark
+    Why this bound exists: the watermark
     is ``max(event time) - delay`` and it PERSISTS in the checkpoint.
     ONE corrupt far-future row — the classic epoch-millis-parsed-as-
     seconds artifact lands in year ~2100 — advances the checkpointed
@@ -133,7 +133,7 @@ def quarantine_future_skew(
     lazy plan — no shuffle, no extra scan beyond the second leg's
     own sink.
 
-    NULL-reference routing (r11 ADVICE): a NULL ``now_col`` value
+    NULL-reference routing: a NULL ``now_col`` value
     would make BOTH legs' predicates NULL and silently drop the row
     from both sinks — violating the no-silent-drop contract this
     operator exists for — so rows with a NULL reference ride the
@@ -168,8 +168,8 @@ def quarantine_out_of_band(
     production ingest adopts ahead of ``with_watermark``: one narrow
     filter per leg, corruption OBSERVED rather than vanishing.
 
-    A NULL ``now_col`` reference rides the quarantine leg too (r11
-    ADVICE: a three-valued ``~ok`` would otherwise be NULL on both
+    A NULL ``now_col`` reference rides the quarantine leg too (a
+    three-valued ``~ok`` would otherwise be NULL on both
     legs and the row would silently vanish from both sinks); the
     quarantine predicate is the explicit isNull-term complement, so
     valid ∪ quarantine == input holds row-for-row by construction."""
@@ -186,8 +186,8 @@ def quarantine_required(df: DataFrame, *cols: str) -> tuple[DataFrame, DataFrame
     """Split a stream (or batch frame) into ``(valid, quarantine)``
     on a REQUIRED-COLUMNS contract: rows NULL in ANY of ``cols`` ride
     the quarantine leg. This is the guard for SILENT SOURCE SCHEMA
-    DRIFT — the r11 judge-confirmed hazard that completes the
-    topology-drift table (docs/CHANGES_r11.md §10):
+    DRIFT, the hazard that completes the topology-drift table
+    (docs/CHANGES_r11.md §10):
 
     A producer renaming or dropping a measure column mid-stream (a
     routine redeploy) is ABSORBED by Spark's parquet file source with
@@ -315,8 +315,8 @@ def drain_accounting(query) -> dict:
     accounting: ``{"batches", "input_rows", "dropped_by_watermark",
     "final_watermark"}``.
 
-    THE ARRIVAL-ORDER FACE OF THE WATERMARK CONTRACT (r11, completing
-    pre-epoch and future-skew): the watermark advances BETWEEN
+    THE ARRIVAL-ORDER FACE OF THE WATERMARK CONTRACT (the third face,
+    after pre-epoch and future-skew): the watermark advances BETWEEN
     micro-batches within a single run, so when input arrives as
     multiple files whose arrival (modification-time) order disagrees
     with event-time order — a late-replicated shard, a backfill file
@@ -376,6 +376,13 @@ def drain_accounting(query) -> dict:
     return acct
 
 
+# Free space /dev/shm must have for a local drain to checkpoint there;
+# below it the checkpoint goes to tempfile.gettempdir(). Docker's
+# default /dev/shm (64 MiB) is under it, so a drain in such a
+# container checkpoints on disk instead of running out of space.
+SHM_MIN_FREE_BYTES = 256 << 20
+
+
 def run_to_memory(
     stream_df: DataFrame,
     name: str,
@@ -402,8 +409,9 @@ def run_to_memory(
     definition, so the drain's checkpoint is always scratch — it is
     deleted when the drain ends, wherever it was placed; a drain is
     never resumable. On a LOCAL master (every process on one machine)
-    it goes to a RAM-backed dir when one exists
-    (``/dev/shm``): the HDFS-backed state store writes one delta file
+    it goes to a RAM-backed dir (``/dev/shm``) when that has at least
+    ``SHM_MIN_FREE_BYTES`` free, else to ``tempfile.gettempdir()``:
+    the HDFS-backed state store writes one delta file
     per partition per batch plus offset/commit WAL files, and on a
     disk-backed ``java.io.tmpdir`` that file churn was ~30% of the
     whole drain (measured sf0.1: 1.47 s → 1.10 s). On a cluster
@@ -436,7 +444,12 @@ def run_to_memory(
     if state_partitions is not None:
         spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
     if base is None and spark.sparkContext.master.startswith("local"):
-        base = "/dev/shm" if os.path.isdir("/dev/shm") else tempfile.gettempdir()
+        try:
+            shm = os.statvfs("/dev/shm")
+            roomy = shm.f_bavail * shm.f_frsize >= SHM_MIN_FREE_BYTES
+        except OSError:
+            roomy = False
+        base = "/dev/shm" if roomy else tempfile.gettempdir()
     ckpt = (
         os.path.join(base, f"emma_drain_{_uuid.uuid4().hex}") if base else None
     )
@@ -505,8 +518,8 @@ def pin_topology(checkpoint: str, **fingerprint) -> None:
     emissions; pinned in tests/test_streaming.py::
     test_source_repoint_on_live_checkpoint_double_counts_open_windows).
 
-    Include the SINK PATH too — probed this time, not argued (r11
-    verdict ask; pinned in tests/test_streaming.py::
+    Include the SINK PATH too (probed, and pinned in
+    tests/test_streaming.py::
     test_sink_repoint_on_live_checkpoint_strands_both_outputs): the
     parquet sink's exactly-once log lives under the OUTPUT dir, so
     repointing the output path on a live checkpoint WRITES WITHOUT
@@ -531,7 +544,7 @@ def pin_topology(checkpoint: str, **fingerprint) -> None:
     refusal BEFORE the query starts (pinned in tests/test_streaming
     .py::test_pin_topology_source_schema_refuses_drifted_reinference).
 
-    FIRST-START CAVEAT (r11 ADVICE): the pin is written before the
+    FIRST-START CAVEAT: the pin is written before the
     first ``start()``, so if that first start never succeeds the pin
     persists against an empty/dead checkpoint and a corrected
     redeploy with a different fingerprint is refused; the

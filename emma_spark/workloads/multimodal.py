@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..llm import multimodal as M
-from ..plans.cache import pin
+from ..sources import io
 from . import query
 
 # FNV-1a (32-bit) over the synthesized blob string, written as a DuckDB
@@ -503,32 +503,25 @@ def io_binaryfile_ingest(spark, sf_dir):
     nondeterministic `modificationTime` column is deliberately not
     projected."""
     import os
-    import shutil
-    import tempfile
 
-    from ..sources import io as eio
-
-    d = eio.read_parquet(spark, f"{sf_dir}/documents.parquet").df
+    d = io.read_parquet(spark, f"{sf_dir}/documents.parquet").df
     # empty documents are excluded from the roundtrip contract: Spark's
     # binaryFile source silently skips zero-byte files, so an
     # empty blob cannot round-trip on any engine
     sample = d.filter(
         (F.col("doc_id") % 29 == 0) & (F.length("text") > 0)
     ).select("doc_id", "text")
-    base = tempfile.mkdtemp(prefix="emma_binfile_")
+    base = io.scratch_dir("emma_binfile_")
     for r in sample.collect():  # bounded: |documents| / 29 files
         with open(os.path.join(base, f"{r.doc_id}.txt"), "wb") as f:
             f.write(r.text.encode("utf-8"))
     files = spark.read.format("binaryFile").option(
         "pathGlobFilter", "*.txt"
     ).load(base)
-    out = files.select(
+    return files.select(
         F.regexp_extract(F.col("path"), r"(\d+)\.txt$", 1)
          .cast("bigint").alias("doc_id"),
         F.col("length").alias("n_bytes"),
         F.conv(F.substring(F.md5(F.col("content")), 1, 14), 16, 10)
          .cast("bigint").alias("h56"),
     )
-    out = pin(out, eager=True)  # detach from the temp dir
-    shutil.rmtree(base, ignore_errors=True)
-    return out

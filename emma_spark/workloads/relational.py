@@ -1287,10 +1287,8 @@ def csv_roundtrip_agg(spark, sf_dir):
     written to CSV with headers and read back with an explicit schema,
     then aggregated — hash-matching the oracle on the ORIGINAL parquet
     proves the codec loses nothing."""
-    import tempfile
-
     n = T(spark, sf_dir, "nation")["nation"]
-    path = tempfile.mkdtemp(prefix="emma_csv_rt_") + "/nation"
+    path = io.scratch_dir("emma_csv_rt_") + "/nation"
     n.write_csv(path)
     back = io.read_csv(spark, path, schema=n.df.schema, header=True)
     return (
@@ -3985,10 +3983,8 @@ def jsonl_roundtrip_agg(spark, sf_dir):
     round-trips every row, string and count losslessly. The staged
     write is partitioned (one file per task) — at scale the read back
     parallelizes per file with no single-reader choke point."""
-    import tempfile
-
     docs = io.read_parquet(spark, f"{sf_dir}/documents.parquet")
-    path = tempfile.mkdtemp(prefix="emma_jsonl_rt_") + "/documents"
+    path = io.scratch_dir("emma_jsonl_rt_") + "/documents"
     docs.write_jsonl(path)
     back = io.read_jsonl(spark, path, schema=docs.df.schema)
     return back.df.groupBy("lang", "source").agg(
@@ -4287,10 +4283,8 @@ def orc_roundtrip_agg(spark, sf_dir):
     properties — predicate pushdown, column pruning, splittable
     stripes — so swapping formats never changes a plan's scale
     behavior, only its encoding."""
-    import tempfile
-
     c = T(spark, sf_dir, "customer")["customer"]
-    path = tempfile.mkdtemp(prefix="emma_orc_rt_") + "/customer"
+    path = io.scratch_dir("emma_orc_rt_") + "/customer"
     c.write_orc(path)
     back = io.read_orc(spark, path)
     return back.df.groupBy("c_mktsegment").agg(
@@ -4709,10 +4703,8 @@ def parquet_schema_evolution(spark, sf_dir):
     no data movement. mergeSchema costs a footer read per file — on
     curated lakes pin the canonical schema instead (read_parquet's
     explicit-schema path) and keep mergeSchema for discovery."""
-    import tempfile
-
     n = T(spark, sf_dir, "nation")["nation"].df
-    base = tempfile.mkdtemp(prefix="emma_schevo_")
+    base = io.scratch_dir("emma_schevo_")
     n.filter(F.col("n_nationkey") < 13).select(
         "n_nationkey", "n_name"
     ).write.mode("overwrite").parquet(f"{base}/b1")
@@ -6636,12 +6628,10 @@ def csv_gzip_read_agg(spark, sf_dir):
     parquet/ORC with internal zstd) for anything one file large.
     Spark decompresses by extension with no config; the
     explicit-schema contract from read_csv applies unchanged."""
-    import tempfile
-
     o = T(spark, sf_dir, "orders")["orders"].df.filter(
         F.col("o_orderkey") % 11 == 0
     ).select("o_orderkey", "o_orderstatus", "o_totalprice")
-    path = tempfile.mkdtemp(prefix="emma_csvgz_") + "/orders"
+    path = io.scratch_dir("emma_csvgz_") + "/orders"
     # executor-side sharded .csv.gz write — one gz member per
     # partition, the landing-zone layout that keeps file-wise
     # parallelism despite gzip's unsplittability
@@ -7809,11 +7799,10 @@ def io_wholetext_documents(spark, sf_dir):
     of a real pipeline is exactly this read, immediately compacted
     into parquet/JSONL (jsonl_roundtrip_agg), never re-read raw."""
     import os
-    import tempfile
 
     docs = io.read_parquet(spark, f"{sf_dir}/documents.parquet").df
     sample = docs.filter(F.col("doc_id") % 100 == 3).select("doc_id", "text")
-    d = tempfile.mkdtemp(prefix="emma_wholetext_")
+    d = io.scratch_dir("emma_wholetext_")
     # bounded stage: 1% of docs, written file-per-doc (the layout
     # under test); foreachPartition keeps the write executor-side
     def write_part(rows):
@@ -8524,12 +8513,8 @@ def parquet_partitioned_roundtrip(spark, sf_dir):
     directory-name encoding. This is the table-layout contract every
     100 TB warehouse rests on: a date/tenant-partitioned fact is the
     difference between scanning 3 partitions and 3000."""
-    import tempfile
-
-    from ..core import DataBag
-
     docs = io.read_parquet(spark, f"{sf_dir}/documents.parquet")
-    path = tempfile.mkdtemp(prefix="emma_pq_part_") + "/docs"
+    path = io.scratch_dir("emma_pq_part_") + "/docs"
     DataBag(docs.df).write_parquet(path, partition_by=["lang"])
     # explicit schema: an EMPTY write leaves only _SUCCESS behind and
     # schema inference fails — the day-one-partition read-back
@@ -10193,21 +10178,15 @@ def csv_multiline_roundtrip(spark, sf_dir):
     must quote them) and a multiLine read-back; hash-matching the
     oracle built directly from the source table proves no record was
     split or joined."""
-    import tempfile
-
-    from ..sources import io as eio
-
     n = io.read_parquet(spark, f"{sf_dir}/nation.parquet").df
     memo = F.concat(
         F.col("n_name"), F.lit("\n"), F.lit("line2:"),
         F.col("n_regionkey").cast("string"),
     )
     src = n.select("n_nationkey", memo.alias("memo"))
-    path = tempfile.mkdtemp(prefix="emma_csv_ml_") + "/memos"
-    from ..core import DataBag
-
+    path = io.scratch_dir("emma_csv_ml_") + "/memos"
     DataBag(src).write_csv(path)
-    back = eio.read_csv(
+    back = io.read_csv(
         spark, path, schema="n_nationkey bigint, memo string",
         header=True, multi_line=True,
     )
@@ -10239,7 +10218,6 @@ def json_array_file_read(spark, sf_dir):
     nothing."""
     import json
     import os
-    import tempfile
 
     n = io.read_parquet(spark, f"{sf_dir}/nation.parquet").df
     rows = [
@@ -10247,7 +10225,7 @@ def json_array_file_read(spark, sf_dir):
          "n_regionkey": r.n_regionkey}
         for r in n.select("n_nationkey", "n_name", "n_regionkey").collect()
     ]
-    d = tempfile.mkdtemp(prefix="emma_json_arr_")
+    d = io.scratch_dir("emma_json_arr_")
     with open(os.path.join(d, "nations.json"), "w") as f:
         json.dump(rows, f, indent=2)  # pretty-printed: one array, many lines
     back = (
@@ -10411,12 +10389,8 @@ def join_dynamic_partition_pruning(spark, sf_dir):
     joined to dim_date rows selected by month never lists, opens, or
     reads the other 3000 day-directories. The value hash proves the
     pruned plan computes exactly the unpruned semantics."""
-    import tempfile
-
-    from ..core import DataBag
-
     docs = io.read_parquet(spark, f"{sf_dir}/documents.parquet")
-    path = tempfile.mkdtemp(prefix="emma_pq_dpp_") + "/docs"
+    path = io.scratch_dir("emma_pq_dpp_") + "/docs"
     DataBag(docs.df).write_parquet(path, partition_by=["lang"])
     # explicit schema (see parquet_partitioned_roundtrip): an empty
     # write has no files to infer from; a declared schema reads it as
@@ -10497,10 +10471,8 @@ def io_schema_evolution_merge(spark, sf_dir):
     mechanics that those systems build on). The oracle replays the
     union semantics directly; the -1 sentinel keys the driver-
     hashable census of old-batch vs new-batch rows."""
-    import tempfile
-
     n = io.read_parquet(spark, f"{sf_dir}/nation.parquet").df
-    base = tempfile.mkdtemp(prefix="emma_pq_evo_")
+    base = io.scratch_dir("emma_pq_evo_")
     n.select("n_nationkey", "n_name").write.mode("overwrite").parquet(
         f"{base}/batch=1"
     )
@@ -10538,11 +10510,9 @@ def io_parquet_zstd_roundtrip(spark, sf_dir):
     (`option("compression", "zstd")`), decode is transparent at
     scan — no reader coordination needed, old snappy files and new
     zstd files coexist in one table."""
-    import tempfile
-
     li = io.read_parquet(spark, f"{sf_dir}/lineitem.parquet").df
     sample = li.filter(F.col("l_orderkey") % 13 == 0)
-    path = tempfile.mkdtemp(prefix="emma_pq_zstd_") + "/li"
+    path = io.scratch_dir("emma_pq_zstd_") + "/li"
     sample.write.option("compression", "zstd").mode("overwrite").parquet(path)
     back = spark.read.parquet(path)
     return back.groupBy("l_returnflag").agg(

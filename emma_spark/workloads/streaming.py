@@ -1,16 +1,14 @@
 """Streaming workloads: real Structured Streaming runs drained to a
 batch result via availableNow (the driver's harness is batch-only).
 
-The stream source is the events table re-staged to a temp dir through
+The stream source is the events table re-staged to a scratch dir through
 the engine's own IO (micros timestamps); results are deterministic,
 so the tumbling-count query carries a full SQL oracle.
 """
 
 from __future__ import annotations
 
-import hashlib
 import os
-import tempfile
 import uuid
 
 from pyspark.sql import functions as F
@@ -20,28 +18,30 @@ from ..sources import io
 from ..streaming import api as S
 from . import query
 
+# staged events dirs: (events content stamp, split) -> scratch dir
+_STAGED: dict = {}
 
-def _staged_events_dir(src: str) -> str:
-    """Where ``src`` (an events parquet file) is staged: a temp dir
-    keyed by its content stamp and the staging format, so every
-    process resolves the same dir. ``_v3`` marks staged timestamps as
-    LTZ (io.read_parquet's NTZ→LTZ normalization); older staged dirs
-    carry NTZ columns that withWatermark rejects."""
+
+def _stage_events(spark, sf_dir: str, split: bool = False) -> str:
+    """The events table written once per process and file version to
+    a scratch dir (streaming file sources read directories). With
+    ``split`` the dir holds the even and odd event ids as two tables,
+    ``even`` and ``odd``."""
+    src = f"{sf_dir}/events.parquet"
     stamp = io._content_stamp(src)
     if stamp is None:
         raise FileNotFoundError(src)
-    key = hashlib.sha256(repr((stamp[0], "_v3")).encode()).hexdigest()[:16]
-    return os.path.join(tempfile.gettempdir(), f"emma_stream_{key}")
-
-
-def _stage_events(spark, sf_dir: str) -> str:
-    """Write events to a temp dir shared by every process that stages
-    the same file (streaming file sources read directories)."""
-    src = f"{sf_dir}/events.parquet"
-    staged = _staged_events_dir(src)
-    if not os.path.exists(os.path.join(staged, "_SUCCESS")):
-        io.read_parquet(spark, src).df.write.mode("overwrite").parquet(staged)
-    return staged
+    key = (stamp[0], split)
+    if key not in _STAGED:
+        staged = io.scratch_dir("emma_stream_")
+        ev = io.read_parquet(spark, src).df
+        if split:
+            ev.filter(F.col("event_id") % 2 == 0).write.parquet(f"{staged}/even")
+            ev.filter(F.col("event_id") % 2 == 1).write.parquet(f"{staged}/odd")
+        else:
+            ev.write.mode("overwrite").parquet(staged)
+        _STAGED[key] = staged
+    return _STAGED[key]
 
 
 @query(
@@ -441,8 +441,8 @@ def stream_state_ttl_closed(spark, sf_dir):
     oracle="""
     WITH hashed AS (
       -- user_id IS NOT NULL: NULL keys are invisible to a distinct
-      -- count (mirrors llm/sketches.hll_register_table; r10
-      -- NULL-user_id events fuzz)
+      -- count (mirrors llm/sketches.hll_register_table; the events
+      -- fuzz tier's NULL user_ids exercise it)
       SELECT time_bucket(INTERVAL 1 HOUR, ts) AS win_start,
              CAST(concat('0x', substr(md5(concat('hll', '|',
                CAST(user_id AS VARCHAR))), 1, 14)) AS BIGINT) AS hh
@@ -646,9 +646,7 @@ def stream_cdc_merge_snapshot(spark, sf_dir):
     proves it. At scale: snapshot and batch both hash-partition on
     user_id; state lives in files, not the state store — unbounded
     key cardinality without store memory pressure."""
-    import shutil
-
-    base = tempfile.mkdtemp(prefix="emma_cdc_snap_")
+    base = io.scratch_dir("emma_cdc_snap_")
     ckpt = os.path.join(base, "_ckpt")
     # stage the source into MULTIPLE files: one staged file would make
     # availableNow a single epoch and the merge loop would never merge
@@ -701,10 +699,7 @@ def stream_cdc_merge_snapshot(spark, sf_dir):
         if d.startswith("epoch=")
     )
     final = spark.read.parquet(os.path.join(base, f"epoch={epochs[-1]}"))
-    out = final.select("user_id", "last_type", "last_value_c", "n_events")
-    out = pin(out, eager=True)  # detach from the temp dir
-    shutil.rmtree(base, ignore_errors=True)
-    return out
+    return final.select("user_id", "last_type", "last_value_c", "n_events")
 
 
 # NOTE: Spark 4's transformWithStateInPandas (the successor to
@@ -1022,13 +1017,11 @@ def pyds_stream_sink_roundtrip(spark, sf_dir):
     commit protocol lost and duplicated NOTHING. Completes the
     Python connector matrix: batch read (with pushdown), stream read
     (checkpointed offsets), stream write (staged commit)."""
-    import tempfile
-
     from ..sources import pyds
 
     pyds.register_stream(spark)
     pyds.register_sink(spark)
-    out = tempfile.mkdtemp(prefix="emma_pyds_sink_")
+    out = io.scratch_dir("emma_pyds_sink_")
     st = (
         spark.readStream.format("emma_synth_stream")
         .option("n", "20000").option("batch", "20000")
@@ -1037,7 +1030,7 @@ def pyds_stream_sink_roundtrip(spark, sf_dir):
     q = (
         st.writeStream.format("emma_synth_sink")
         .option("path", out)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="emma_pyds_ck_"))
+        .option("checkpointLocation", io.scratch_dir("emma_pyds_ck_"))
         .outputMode("append")
         .trigger(availableNow=True)
         .start()
@@ -1072,24 +1065,10 @@ def stream_two_source_union(spark, sf_dir):
     operator, not a storage merge. This is the lambda-architecture
     collapse Structured Streaming enables: history and tail run
     through ONE query instead of two systems."""
-    import os
-    import tempfile
-
-    src = f"{sf_dir}/events.parquet"
-    stamp = f"{os.path.getmtime(src):.0f}_{os.path.getsize(src)}_split"
-    base = os.path.join(
-        tempfile.gettempdir(), f"emma_split_{abs(hash((sf_dir, stamp)))}"
-    )
-    ev = io.read_parquet(spark, src).df
-    if not (os.path.exists(os.path.join(base, "even", "_SUCCESS"))
-            and os.path.exists(os.path.join(base, "odd", "_SUCCESS"))):
-        ev.filter(F.col("event_id") % 2 == 0).write.mode("overwrite").parquet(
-            os.path.join(base, "even"))
-        ev.filter(F.col("event_id") % 2 == 1).write.mode("overwrite").parquet(
-            os.path.join(base, "odd"))
-    schema = ev.schema
-    s1 = S.read_stream_parquet(spark, os.path.join(base, "even"), schema)
-    s2 = S.read_stream_parquet(spark, os.path.join(base, "odd"), schema)
+    base = _stage_events(spark, sf_dir, split=True)
+    schema = io.read_parquet(spark, f"{sf_dir}/events.parquet").df.schema
+    s1 = S.read_stream_parquet(spark, f"{base}/even", schema)
+    s2 = S.read_stream_parquet(spark, f"{base}/odd", schema)
     u = s1.unionByName(s2)
     agg = u.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
@@ -1115,10 +1094,10 @@ def stream_two_source_union(spark, sf_dir):
                   WHERE user_id IS NOT NULL)
     ),
     ranked AS (
-      -- user_id is a REQUIRED column since r12 (quarantine_required
+      -- user_id is a REQUIRED column (quarantine_required
       -- drift guard): the anonymous NULL bucket rides the
       -- dead-letter leg, mirrored by the IS NOT NULL above — which
-      -- also retires the r10 NULLS LAST tie-break pin (no NULL can
+      -- also makes a NULLS LAST tie-break unneeded (no NULL can
       -- reach the ranking on either engine)
       SELECT win_start, user_id, n,
              row_number() OVER (PARTITION BY win_start
@@ -1182,7 +1161,7 @@ def stream_windowed_topk_users(spark, sf_dir):
       -- the = join below drops anonymous events identically on both
       -- engines, and without this WHERE the md5-tier hash of NULL
       -- crashes DuckDB one-sidedly via NULL-ignoring concat ->
-      -- CAST('0x') (r10 NULL-user_id cross fuzz)
+      -- CAST('0x') (the cross fuzz tier's NULL user_ids)
       SELECT DISTINCT user_id FROM events WHERE user_id IS NOT NULL
     ),
     dim AS (

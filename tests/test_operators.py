@@ -256,7 +256,7 @@ def test_containment_pairs_matches_bruteforce_sets(spark):
     assert (1, 2) in got and (2, 1) not in got
 
 
-def test_substring_coverage_matches_position_sets(spark):
+def test_substring_coverage_matches_position_sets(spark, tmp_path):
     """dedup_substring_coverage's window/island dataflow == brute-force
     covered-position sets (independent algorithm, no windows)."""
     from emma_spark.workloads import load_all
@@ -269,12 +269,12 @@ def test_substring_coverage_matches_position_sets(spark):
         3: "unique " * 12,                     # repeated phrase within itself
         4: "short",                            # < 40 chars: never counted
     }
-    import tempfile, os
+    import os
     import pandas as pd
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    d = tempfile.mkdtemp()
+    d = str(tmp_path)
     pdf = pd.DataFrame(
         {
             "doc_id": list(texts),

@@ -492,3 +492,67 @@ def test_python_datasource_pushdown_shrinks_generated_range(spark):
     sub = df.filter((F.col("id") >= 5000) & (F.col("id") < 6000))
     assert sub.count() == 1000
     assert sub.agg(F.sum("id")).collect()[0][0] == sum(range(5000, 6000))
+
+
+# the registry queries that stage data on disk while they are built
+STAGING_QUERIES = (
+    "csv_roundtrip_agg", "jsonl_roundtrip_agg", "orc_roundtrip_agg",
+    "parquet_schema_evolution", "csv_gzip_read_agg", "io_wholetext_documents",
+    "parquet_partitioned_roundtrip", "csv_multiline_roundtrip",
+    "json_array_file_read", "join_dynamic_partition_pruning",
+    "io_schema_evolution_merge", "io_parquet_zstd_roundtrip",
+    "stream_cdc_merge_snapshot", "pyds_stream_sink_roundtrip",
+    "io_binaryfile_ingest", "stream_two_source_union", "stream_tumbling_counts",
+)
+
+
+def test_staging_leaves_no_dir_behind(tmp_path):
+    """A process that builds every staging query stages under one
+    scratch root in its temp dir and, once it exits, leaves no
+    ``emma_*`` entry there."""
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    from tests.conftest import SF_DIR
+
+    code = (
+        "import sys\n"
+        "from emma_spark.session import get_spark\n"
+        "from emma_spark.sources import io\n"
+        "from emma_spark.workloads import load_all\n"
+        "spark = get_spark('scratch-leak')\n"
+        "spark.sparkContext.setLogLevel('ERROR')\n"
+        "qs = load_all()\n"
+        "for name in sys.argv[2:]:\n"
+        "    qs[name].fn(spark, sys.argv[1]).schema\n"
+        "print(io._SCRATCH_ROOT)\n"
+    )
+    env = {**os.environ, "TMPDIR": str(tmp_path), "SPARK_GRAFT_CPUS": "2",
+           "SPARK_GRAFT_DRIVER_MEM": "1g"}
+    out = subprocess.run(
+        [sys.executable, "-c", code, SF_DIR, *STAGING_QUERIES],
+        cwd=Path(__file__).resolve().parents[1], env=env,
+        capture_output=True, text=True, check=True,
+    ).stdout.strip().splitlines()
+    assert os.path.dirname(out[-1]) == str(tmp_path), out[-1:]
+    assert [p.name for p in tmp_path.iterdir() if p.name.startswith("emma_")] == []
+
+
+def test_only_sources_io_makes_scratch_dirs():
+    """As code, ``mkdtemp``/``gettempdir`` appear only in sources/io.py
+    (``scratch_dir``) and streaming/api.py (the drain checkpoint), so
+    every staging dir lives under the one per-process scratch root."""
+    import io
+    import pathlib
+    import tokenize
+
+    root = pathlib.Path(__file__).resolve().parents[1] / "emma_spark"
+    found = {
+        path.relative_to(root).as_posix()
+        for path in root.rglob("*.py")
+        for t in tokenize.generate_tokens(io.StringIO(path.read_text()).readline)
+        if t.type == tokenize.NAME and t.string in ("mkdtemp", "gettempdir")
+    }
+    assert found == {"sources/io.py", "streaming/api.py"}, found

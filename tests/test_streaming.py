@@ -19,10 +19,10 @@ from tests.conftest import SF_DIR, as_bag
 
 
 @pytest.fixture(scope="module")
-def staged_events(spark):
+def staged_events(spark, tmp_path_factory):
     from emma_spark.sources import io
 
-    d = os.path.join(tempfile.gettempdir(), f"ev_stream_test_{uuid.uuid4().hex[:8]}")
+    d = str(tmp_path_factory.mktemp("ev_stream_test"))
     io.read_parquet(spark, f"{SF_DIR}/events.parquet").df.write.mode("overwrite").parquet(d)
     return d
 
@@ -1444,28 +1444,59 @@ def test_run_to_memory_checkpoint_is_local_scratch(
     assert list(tmp_path.iterdir()) == []
 
 
-def test_staged_events_dir_is_the_same_in_every_process():
-    """The staging dir is keyed by a content hash, not Python's salted
-    ``hash()``, so processes with different hash seeds share it instead
-    of each staging (and leaving behind) their own copy."""
-    import subprocess
-    import sys
-    from pathlib import Path
+@pytest.mark.parametrize(
+    "free_mb, base", [(1, "tmp"), (1 << 20, "/dev/shm")], ids=["low", "roomy"]
+)
+def test_run_to_memory_checkpoint_needs_room_in_dev_shm(
+    spark, staged_events, tmp_path, monkeypatch, free_mb, base
+):
+    """On a local master the drain checkpoints in /dev/shm only when
+    ``statvfs`` reports at least ``SHM_MIN_FREE_BYTES`` free there;
+    otherwise it checkpoints in ``tempfile.gettempdir()``."""
+    import shutil
+    import types
 
-    src = f"{SF_DIR}/events.parquet"
-    code = (
-        "import sys; from emma_spark.workloads.streaming import "
-        "_staged_events_dir; print(_staged_events_dir(sys.argv[1]))"
+    if not os.path.isdir("/dev/shm"):
+        pytest.skip("no /dev/shm")
+    monkeypatch.delenv("SPARK_GRAFT_STREAM_CKPT", raising=False)
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    statvfs = os.statvfs
+    shm = types.SimpleNamespace(f_bavail=free_mb * 256, f_frsize=4096)
+    monkeypatch.setattr(
+        os, "statvfs", lambda p: shm if p == "/dev/shm" else statvfs(p)
     )
-    dirs = {
-        subprocess.run(
-            [sys.executable, "-c", code, src],
-            cwd=Path(__file__).resolve().parents[1],
-            env={**os.environ, "PYTHONHASHSEED": seed},
-            capture_output=True, text=True, check=True,
-        ).stdout.strip()
-        for seed in ("1", "2")
-    }
-    assert len(dirs) == 1, dirs
-    (d,) = dirs
-    assert os.path.dirname(d) == tempfile.gettempdir(), d
+    removed = []
+    real_rmtree = shutil.rmtree
+
+    def rmtree(path, **kw):
+        removed.append(str(path))
+        real_rmtree(path, **kw)
+
+    monkeypatch.setattr(shutil, "rmtree", rmtree)
+    batch = spark.read.parquet(staged_events)
+    stream = S.read_stream_parquet(spark, staged_events, batch.schema)
+    S.run_to_memory(
+        stream.groupBy("event_type").count(), f"shm_{uuid.uuid4().hex[:8]}",
+        output_mode="complete",
+    )
+    (ckpt,) = [p for p in removed if "emma_drain_" in p]
+    assert os.path.dirname(ckpt) == (str(tmp_path) if base == "tmp" else base)
+
+
+def test_stream_staging_runs_once_per_process(spark, tables, monkeypatch):
+    """Building stream_tumbling_counts twice in one session stages the
+    events table once: the second build reuses the first one's dir."""
+    from emma_spark.sources import io
+    from emma_spark.workloads import load_all
+    from emma_spark.workloads import streaming as ws
+
+    made = []
+    scratch_dir = io.scratch_dir
+    monkeypatch.setattr(ws, "_STAGED", {})
+    monkeypatch.setattr(
+        io, "scratch_dir", lambda prefix: made.append(prefix) or scratch_dir(prefix)
+    )
+    q = load_all()["stream_tumbling_counts"]
+    for _ in range(2):
+        q.fn(spark, SF_DIR).schema
+    assert made == ["emma_stream_"]

@@ -8,7 +8,7 @@ of them open depends on what the process did before:
 * a parquet read infers its schema with a job only the first time the
   process reads that path (``sources.io`` memoizes the metadata), and
 * a staging write such as ``workloads.streaming._stage_events`` runs
-  only when its staged dir is missing.
+  once per process, in the first build that stages that file version.
 
 ``tests/build_jobs.json`` holds the census at sf0.001, taken after the
 ten harness tables are loaded (as the tier-1 ``tables`` fixture does);

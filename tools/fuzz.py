@@ -36,7 +36,6 @@ import re
 import shutil
 import struct
 import sys
-import tempfile
 from dataclasses import dataclass
 from pathlib import Path
 from typing import Callable
@@ -1024,8 +1023,10 @@ class RestartHarness:
     passes."""
 
     def __init__(self, spark):
+        from emma_spark.sources import io as eio
+
         self.spark = spark
-        self.base = tempfile.mkdtemp(prefix="emma_restart_")
+        self.base = eio.scratch_dir("emma_restart_")
         self.staged = os.path.join(self.base, "staged")
         os.makedirs(self.staged)
         self.workload = None
@@ -1336,7 +1337,6 @@ def run_restart(spark, only=None, quiet: bool = False):
     finally:
         ws._stage_events = orig_stage
         S.run_to_memory = orig_run
-        shutil.rmtree(h.base, ignore_errors=True)
     return n_ok, n_skip, failures
 
 
