@@ -54,7 +54,7 @@ def scores_df(df: DataFrame, label_col: str = "label", pred_col: str = "predicti
     # ANSI a plain double division by zero CRASHES Spark where the
     # DuckDB oracle's `/` returns NULL — try_divide(x, 0) == NULL is
     # exactly DuckDB's contract, so the engines stay aligned on
-    # degenerate confusion tables (r9 zero-denominator sweep).
+    # degenerate confusion tables.
     prec = F.try_divide(tp, tp + fp)
     rec = F.try_divide(tp, tp + fn)
     return c.select(

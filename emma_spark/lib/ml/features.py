@@ -27,8 +27,8 @@ def tokenize(
     """(``tokenize.scala``) split + drop empties. The default pattern is
     the EXPLICIT spelling of ``\\W+`` — Java and RE2 agree on ASCII
     ``\\W`` today, but shorthand classes are exactly where engines
-    diverge (the r5 ``\\s`` driver reds), so oracles and engine share
-    one literal class."""
+    diverge (``\\s`` has split differently on the two engines), so
+    oracles and engine share one literal class."""
     t = ascii_lower(text) if lowercase else text
     return F.filter(F.split(t, pattern), lambda x: x != "")
 
@@ -50,9 +50,9 @@ def build_dict(df: DataFrame, toks_col: str = "toks") -> DataFrame:
     partitions, then ``zip_with_index`` (per-partition counts → driver
     offsets → partitioned row_number). Ascending partition ranges +
     ascending rows within each partition ⇒ the dense index IS the
-    lexicographic rank, with no unpartitioned window anywhere (the r4
-    verdict flagged the old ``Window.orderBy(term)`` as a one-task
-    sort of the whole vocabulary)."""
+    lexicographic rank, with no unpartitioned window anywhere (a
+    global ``Window.orderBy(term)`` would be a one-task sort of the
+    whole vocabulary)."""
     from ...core import DataBag
 
     terms = df.select(F.explode(F.col(toks_col)).alias("term")).distinct()

@@ -93,8 +93,8 @@ def kmeans(
             # EXPLICIT raise on an empty training set (the min/max
             # raise-on-empty contract): zero centroids would otherwise
             # surface as an opaque zero-arg array() AnalysisException
-            # deep in _nearest (r11 driver-scalar audit). Fewer points
-            # than k is fine — the run just fits fewer clusters.
+            # deep in _nearest. Fewer points than k is fine — the run
+            # just fits fewer clusters.
             if not init:
                 raise ValueError(
                     "k-means: empty training set (no rows to seed "
@@ -109,7 +109,6 @@ def kmeans(
             # all-NULL vectors leave SUM with zero finite inputs ->
             # None; score such a run +inf (never preferable) instead
             # of feeding None into the < comparison on the next run
-            # (r11 driver-scalar audit)
             if total is None:
                 total = float("inf")
             if best is None or total < best.total_distance:

@@ -84,9 +84,8 @@ def pca_power_top(
         # Degenerate matrix (all-zero embeddings, or every w floored
         # to 0 by DOWN): no direction exists — converge to the zero
         # vector instead of dividing by norm 0 (Python raises
-        # ZeroDivisionError where the DuckDB oracle would NULL — the
-        # r10 one-sided-crash mechanism sweep; oracle mirrors with
-        # CASE WHEN nrm > 0).
+        # ZeroDivisionError where the DuckDB oracle would NULL, a
+        # one-sided crash; the oracle mirrors with CASE WHEN nrm > 0).
         if norm == 0.0:
             v_c = [0] * dim
         else:

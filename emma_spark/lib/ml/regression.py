@@ -18,7 +18,7 @@ def _feature_dim(data: DataFrame) -> int:
     """Feature width from the first row — with an EXPLICIT raise on an
     empty training set (the min/max raise-on-empty contract), not the
     driver-side ``None['vec']`` TypeError ``.first()`` would otherwise
-    produce (r11 driver-scalar audit)."""
+    produce."""
     row = data.select("vec").first()
     if row is None:
         raise ValueError("training set is empty: cannot infer feature dim")
@@ -81,7 +81,7 @@ def linreg_normal(
     single-row) x is a job-killing DIVIDE_BY_ZERO, so the slope is the
     explicit cov/var ratio through ``try_divide`` — NULL on a
     degenerate fit, same values as regr_slope otherwise, still one
-    aggregation pass (r8 degenerate-group fuzz)."""
+    aggregation pass."""
     y, x = F.col(label_col), F.col(x_col)
     xpc = F.when(y.isNotNull(), x)  # pair-complete x, matching covar
     ypc = F.when(x.isNotNull(), y)

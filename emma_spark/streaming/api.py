@@ -40,7 +40,8 @@ tier's DRIFT pass certifies the class.
 
 from __future__ import annotations
 
-from typing import Callable, Iterable
+from contextlib import contextmanager
+from typing import Callable, Iterable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -310,10 +311,16 @@ def interval_join(
     return left.join(right, cond, how)
 
 
-def drain_accounting(query) -> dict:
-    """Roll a finished StreamingQuery's progress into ingest-loss
-    accounting: ``{"batches", "input_rows", "dropped_by_watermark",
-    "final_watermark"}``.
+@contextmanager
+def drain_accounting(spark: SparkSession) -> Iterator[dict]:
+    """Ingest-loss accounting for the streaming queries started inside
+    the block, filled into the yielded dict on exit:
+    ``{"batches", "input_rows", "dropped_by_watermark",
+    "final_watermark", "state_partitions"}``::
+
+        with drain_accounting(spark) as acct:
+            out = run_to_memory(agg, output_mode="append")
+        assert acct["dropped_by_watermark"] == 0
 
     THE ARRIVAL-ORDER FACE OF THE WATERMARK CONTRACT (the third face,
     after pre-epoch and future-skew): the watermark advances BETWEEN
@@ -331,14 +338,14 @@ def drain_accounting(query) -> dict:
     (b) THIS accounting, which makes the loss observable:
     ``input_rows == emitted + dropped_by_watermark + retained`` (rows
     still in unfinalized state), so a nonzero drop count is an alarm,
-    never a silent subtraction. On a cluster, feed the same sums from
-    a StreamingQueryListener into metrics instead of polling.
+    never a silent subtraction.
 
-    Reads ``recentProgress`` (ring buffer capped by
-    ``spark.sql.streaming.numRecentProgressUpdates``, default 100) —
-    call right after ``awaitTermination()`` on a bounded drain; drains
-    with more batches than the cap undercount ``batches``/``input_rows``
-    and must use a listener.
+    A ``StreamingQueryListener`` registered for the block sums the
+    progress events of the runs whose start it saw, keyed by run id,
+    so a query drained before the block is never counted and the sums
+    are exact for any batch count. On exit it waits until the listener
+    bus has delivered every posted event, then unregisters.
+    ``final_watermark`` is the last watermark reported.
 
     ``state_partitions`` reports the state store's ACTUAL partition
     count (max ``numShufflePartitions`` across state operators, None
@@ -351,29 +358,39 @@ def drain_accounting(query) -> dict:
     re-size attempt that "succeeds" without effect is worth an
     observable readback).
     """
-    acct = {
-        "batches": 0,
-        "input_rows": 0,
-        "dropped_by_watermark": 0,
-        "final_watermark": None,
-        "state_partitions": None,
-    }
-    for p in query.recentProgress:
-        acct["batches"] += 1
-        acct["input_rows"] += int(p["numInputRows"] or 0)
-        for so in p["stateOperators"] or []:
-            acct["dropped_by_watermark"] += int(
-                so.get("numRowsDroppedByWatermark", 0) or 0
-            )
-            nsp = so.get("numShufflePartitions")
-            if nsp:
-                acct["state_partitions"] = max(
-                    acct["state_partitions"] or 0, int(nsp)
-                )
-        wm = (p["eventTime"] or {}).get("watermark")
-        if wm is not None:
-            acct["final_watermark"] = wm
-    return acct
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    runs: set = set()
+    progress: list = []
+
+    class Listener(StreamingQueryListener):
+        def onQueryStarted(self, event):
+            runs.add(event.runId)
+
+        def onQueryProgress(self, event):
+            if event.progress.runId in runs:
+                progress.append(event.progress)
+
+        def onQueryTerminated(self, event):
+            pass
+
+    listener = Listener()
+    acct: dict = {}
+    spark.streams.addListener(listener)
+    try:
+        yield acct
+    finally:
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+        spark.streams.removeListener(listener)
+    ops = [so for p in progress for so in p.stateOperators]
+    wms = [p.eventTime["watermark"] for p in progress if "watermark" in p.eventTime]
+    acct.update(
+        batches=len(progress),
+        input_rows=sum(p.numInputRows for p in progress),
+        dropped_by_watermark=sum(so.numRowsDroppedByWatermark for so in ops),
+        final_watermark=wms[-1] if wms else None,
+        state_partitions=max((so.numShufflePartitions for so in ops), default=0) or None,
+    )
 
 
 # Free space /dev/shm must have for a local drain to checkpoint there;
@@ -385,17 +402,17 @@ SHM_MIN_FREE_BYTES = 256 << 20
 
 def run_to_memory(
     stream_df: DataFrame,
-    name: str,
+    name: str | None = None,
     output_mode: str = "append",
     state_partitions: int | None = None,
-) -> dict:
+) -> DataFrame:
     """Drain all available input into an in-memory table (availableNow
-    trigger) and block until done — turns a stream into a queryable
-    batch result (tests / the driver's batch-only harness). Returns
-    the drain's :func:`drain_accounting` so callers can assert the
+    trigger), block until done and return the drained table — turns a
+    stream into a queryable batch result (tests / the driver's
+    batch-only harness). The sink gets a fresh name unless ``name`` is
+    given. Wrap the call in :func:`drain_accounting` to assert the
     conservation law (nonzero ``dropped_by_watermark`` means the
-    arrival-order contract above was violated) instead of trusting
-    the sink silently.
+    arrival-order contract above was violated).
 
     ``state_partitions`` sizes the state store: a streaming query pins
     its shuffle-partition count (= number of state store instances) at
@@ -450,9 +467,9 @@ def run_to_memory(
         except OSError:
             roomy = False
         base = "/dev/shm" if roomy else tempfile.gettempdir()
-    ckpt = (
-        os.path.join(base, f"emma_drain_{_uuid.uuid4().hex}") if base else None
-    )
+    tag = f"emma_drain_{_uuid.uuid4().hex}"
+    name = name or tag
+    ckpt = os.path.join(base, tag) if base else None
     try:
         w = (
             stream_df.writeStream.format("memory")
@@ -462,14 +479,13 @@ def run_to_memory(
         )
         if ckpt is not None:
             w = w.option("checkpointLocation", ckpt)
-        q = w.start()
-        q.awaitTermination()
-        return drain_accounting(q)
+        w.start().awaitTermination()
     finally:
         if state_partitions is not None:
             spark.conf.set("spark.sql.shuffle.partitions", prev)
         if ckpt is not None:
             shutil.rmtree(ckpt, ignore_errors=True)
+    return spark.table(name)
 
 
 def pin_topology(checkpoint: str, **fingerprint) -> None:

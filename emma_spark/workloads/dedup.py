@@ -56,7 +56,7 @@ def dedup_exact(spark, sf_dir):
     No fan_out here: the pre-shuffle work is one md5 over each doc
     (trivial), and exact_groups' own groupBy shuffle spreads the rows
     anyway — the round-robin exchange only re-shuffled full text
-    payloads for nothing (r12 A/B: ~1.6 s → ~0.4 s, results identical;
+    payloads for nothing (A/B: ~1.6 s → ~0.4 s, results identical;
     contrast dedup_minhash_pairs, whose per-row signature pass is heavy
     and single-core-bound without it)."""
     docs = io.read_parquet(spark, f"{sf_dir}/documents.parquet").df

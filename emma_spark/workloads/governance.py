@@ -438,7 +438,7 @@ def events_experiment_scorecard(spark, sf_dir):
         # cast BEFORE the square: LONG v*v overflows per-row at ~3e9 cents
         F.sum(F.col("v").cast(dec) * F.col("v").cast(dec)).alias("ss"),
     )
-    # Zero-denominator guards (r9 sweep): Spark's `div`/`/` CRASH under
+    # Zero-denominator guards: Spark's `div`/`/` CRASH under
     # ANSI on a non-NULL numerator over 0 where DuckDB's `//`/`/`
     # return NULL — reachable here on degenerate corpora (no purchase
     # events -> u0+u1 = 0; an all-zero arm -> s0 = 0 or mean 0). A

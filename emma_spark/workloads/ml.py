@@ -127,13 +127,13 @@ def ml_naive_bayes_train(spark, sf_dir):
         ).alias("vec"),
     )
     model = naive_bayes(data, lam=1.0)
-    r6 = lambda c: F.floor(c * 1000000 + F.lit(0.5)) / 1000000
+    round6 = lambda c: F.floor(c * 1000000 + F.lit(0.5)) / 1000000
     return model.select(
         "label",
-        r6(F.col("pi")).alias("pi"),
-        r6(F.col("theta")[0]).alias("t0"),
-        r6(F.col("theta")[1]).alias("t1"),
-        r6(F.col("theta")[2]).alias("t2"),
+        round6(F.col("pi")).alias("pi"),
+        round6(F.col("theta")[0]).alias("t0"),
+        round6(F.col("theta")[1]).alias("t1"),
+        round6(F.col("theta")[2]).alias("t2"),
     )
 
 

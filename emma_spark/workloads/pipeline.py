@@ -58,7 +58,7 @@ def pipeline_corpus_curation(spark, sf_dir):
     gate + one content-hash md5 (cheap), and the exact-dedup groupBy
     shuffle spreads the survivors before the heavy minhash signature
     pass runs — the round-robin exchange only re-shuffled full text
-    payloads for nothing (r12 A/B: ~20% faster, results identical)."""
+    payloads for nothing (A/B: ~20% faster, results identical)."""
     docs = io.read_parquet(spark, f"{sf_dir}/documents.parquet").df
     curated = P.curate(docs, min_tokens=5, min_alpha=0.5)
     return P.corpus_stats(curated, by="lang")

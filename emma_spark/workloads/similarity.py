@@ -1044,7 +1044,7 @@ def search_hybrid_rrf(spark, sf_dir):
                                                              "doc_id")))
         .select("doc_id", "rt")
     )
-    # zero-norm gate on BOTH legs (the r7 similarity contract): a
+    # zero-norm gate on BOTH legs (the similarity zero-norm contract): a
     # zero query vector means an empty vector leg, not a 0/0 crash
     nz = S.nonzero(F.col("embedding"))
     qv = emb.filter((F.col("vec_id") == 0) & nz).select(

@@ -9,7 +9,6 @@ so the tumbling-count query carries a full SQL oracle.
 from __future__ import annotations
 
 import os
-import uuid
 
 from pyspark.sql import functions as F
 
@@ -44,6 +43,14 @@ def _stage_events(spark, sf_dir: str, split: bool = False) -> str:
     return _STAGED[key]
 
 
+def _events_stream(spark, sf_dir: str, **options):
+    """The staged events table opened as a file-source stream with its
+    inferred schema; ``options`` go to the reader."""
+    staged = _stage_events(spark, sf_dir)
+    schema = io.parquet_schema(spark, staged)
+    return S.read_stream_parquet(spark, staged, schema, **options)
+
+
 @query(
     "stream_tumbling_counts",
     oracle="""
@@ -61,13 +68,11 @@ def stream_tumbling_counts(spark, sf_dir):
     same answer as the batch/SQL oracle (complete mode: every window
     in state is emitted; at scale a watermark bounds that state —
     covered in tests)."""
-    staged = _stage_events(spark, sf_dir)
-    stream = S.read_stream_parquet(spark, staged, io.parquet_schema(spark, staged))
+    stream = _events_stream(spark, sf_dir)
     agg = S.tumbling(stream, "ts", "1 hour", "event_type").agg(
         F.count(F.lit(1)).alias("n"),
         (F.sum(F.floor(F.col("value") * 10000 + F.lit(0.5))) / 10000).alias("total"),
     )
-    name = f"stream_tc_{uuid.uuid4().hex[:8]}"
     # state keys = hourly windows x event types (~3.6k — CONSTANT in SF:
     # the corpus time range and type set are fixed, only rows/key grow,
     # and the pre-shuffle partial agg collapses those): a couple of
@@ -75,8 +80,7 @@ def stream_tumbling_counts(spark, sf_dir):
     # A/B (exclusive, min-of-4): sp4 1.08s / sp2 0.92s / sp1 0.83s —
     # per-partition store setup+commit dominates at this key count; 2
     # keeps parallel headroom at the same cost as 1.
-    S.run_to_memory(agg, name, output_mode="complete", state_partitions=2)
-    return spark.table(name).select(
+    return S.run_to_memory(agg, output_mode="complete", state_partitions=2).select(
         F.col("window.start").alias("win_start"), "event_type", "n", "total"
     )
 
@@ -132,8 +136,7 @@ def stream_watermark_append(spark, sf_dir):
     watermark subquery — the watermark advances on VALID rows only).
     Certified by the restart tier's DRIFT pass
     (``tools/fuzz.py restart``)."""
-    staged = _stage_events(spark, sf_dir)
-    stream = S.read_stream_parquet(spark, staged, io.parquet_schema(spark, staged))
+    stream = _events_stream(spark, sf_dir)
     valid, _quarantine = S.quarantine_out_of_band(stream, "ts", "7 days")
     valid, _null_required = S.quarantine_required(valid, "value")
     wm = S.with_watermark(valid, "ts", "37 minutes")
@@ -141,11 +144,9 @@ def stream_watermark_append(spark, sf_dir):
         F.count(F.lit(1)).alias("n"),
         (F.sum(F.floor(F.col("value") * 10000 + F.lit(0.5))) / 10000).alias("total"),
     )
-    name = f"stream_wm_{uuid.uuid4().hex[:8]}"
     # state_partitions: same constant-key argument and A/B as
     # stream_tumbling_counts (sp4 1.29s / sp2 1.07s / sp1 1.10s)
-    S.run_to_memory(agg, name, output_mode="append", state_partitions=2)
-    return spark.table(name).select(
+    return S.run_to_memory(agg, output_mode="append", state_partitions=2).select(
         F.col("window.start").alias("win_start"), "event_type", "n", "total"
     )
 
@@ -163,9 +164,7 @@ def stream_keyed_state_counts(spark, sf_dir):
     input. Full SQL oracle: final state == batch groupBy count."""
     import pandas as pd
 
-    staged = _stage_events(spark, sf_dir)
-    schema = io.parquet_schema(spark, staged)
-    stream = S.read_stream_parquet(spark, staged, schema)
+    stream = _events_stream(spark, sf_dir)
 
     def update(key, pdf_iter, state):
         cnt = state.get[0] if state.exists else 0
@@ -182,9 +181,8 @@ def stream_keyed_state_counts(spark, sf_dir):
         output_schema="user_id bigint, n bigint",
         output_mode="update",
     )
-    name = f"stream_ks_{uuid.uuid4().hex[:8]}"
-    S.run_to_memory(out, name, output_mode="update", state_partitions=4)
-    return spark.table(name).groupBy("user_id").agg(F.max("n").alias("n"))
+    drained = S.run_to_memory(out, output_mode="update", state_partitions=4)
+    return drained.groupBy("user_id").agg(F.max("n").alias("n"))
 
 
 @query(
@@ -205,15 +203,13 @@ def stream_stream_interval_join(spark, sf_dir):
     its interval). Inner matches emit on arrival (append mode), so the
     drained result equals the batch interval join, which is the
     oracle."""
-    staged = _stage_events(spark, sf_dir)
-    schema = io.parquet_schema(spark, staged)
     p = (
-        S.with_watermark(S.read_stream_parquet(spark, staged, schema), "ts", "2 hours")
+        S.with_watermark(_events_stream(spark, sf_dir), "ts", "2 hours")
         .filter(F.col("event_type") == "purchase")
         .select(F.col("event_id").alias("pid"), "user_id", F.col("ts").alias("p_ts"))
     )
     c = (
-        S.with_watermark(S.read_stream_parquet(spark, staged, schema), "ts", "2 hours")
+        S.with_watermark(_events_stream(spark, sf_dir), "ts", "2 hours")
         .filter(F.col("event_type") == "click")
         .select(F.col("event_id").alias("cid"), F.col("user_id").alias("c_user"),
                 F.col("ts").alias("c_ts"))
@@ -225,10 +221,9 @@ def stream_stream_interval_join(spark, sf_dir):
         & (F.col("c_ts") <= F.col("p_ts")),
         "inner",
     )
-    name = f"stream_ssj_{uuid.uuid4().hex[:8]}"
-    S.run_to_memory(j.select("pid", "user_id", "cid"), name,
-                    output_mode="append", state_partitions=4)
-    return spark.table(name)
+    return S.run_to_memory(
+        j.select("pid", "user_id", "cid"), output_mode="append", state_partitions=4
+    )
 
 
 @query(
@@ -265,15 +260,12 @@ def stream_session_windows(spark, sf_dir):
     sessions whose end clears the final watermark. The 37-minute delay
     is micro-second-misaligned with event times, so the boundary
     comparison cannot tie."""
-    staged = _stage_events(spark, sf_dir)
-    stream = S.read_stream_parquet(spark, staged, io.parquet_schema(spark, staged))
+    stream = _events_stream(spark, sf_dir)
     wm = S.with_watermark(stream, "ts", "37 minutes")
     agg = S.session(wm, "ts", "30 minutes", "user_id").agg(
         F.count(F.lit(1)).alias("n")
     )
-    name = f"stream_sw_{uuid.uuid4().hex[:8]}"
-    S.run_to_memory(agg, name, output_mode="append", state_partitions=4)
-    return spark.table(name).select(
+    return S.run_to_memory(agg, output_mode="append", state_partitions=4).select(
         "user_id", F.col("window.start").alias("win_start"), "n"
     )
 
@@ -293,14 +285,12 @@ def stream_dedup_keys(spark, sf_dir):
     the oracle. NOTE: within-watermark dedup guarantees single
     emission only for duplicates closer than the delay — duplicates
     separated further may re-emit, hence the final distinct()."""
-    staged = _stage_events(spark, sf_dir)
-    stream = S.read_stream_parquet(spark, staged, io.parquet_schema(spark, staged))
+    stream = _events_stream(spark, sf_dir)
     wm = S.with_watermark(stream, "ts", "2 hours").select("user_id", "event_type", "ts")
     dd = wm.dropDuplicatesWithinWatermark(["user_id", "event_type"])
-    name = f"stream_dd_{uuid.uuid4().hex[:8]}"
-    S.run_to_memory(dd.select("user_id", "event_type"), name,
-                    output_mode="append", state_partitions=4)
-    return spark.table(name).distinct()
+    return S.run_to_memory(
+        dd.select("user_id", "event_type"), output_mode="append", state_partitions=4
+    ).distinct()
 
 
 @query(
@@ -322,14 +312,11 @@ def stream_sliding_counts(spark, sf_dir):
     the window membership explicitly — the two window starts covering
     each event — and must produce the identical (window, type, count)
     multiset."""
-    staged = _stage_events(spark, sf_dir)
-    stream = S.read_stream_parquet(spark, staged, io.parquet_schema(spark, staged))
+    stream = _events_stream(spark, sf_dir)
     agg = S.sliding(stream, "ts", "2 hours", "1 hour", "event_type").agg(
         F.count(F.lit(1)).alias("n")
     )
-    name = f"stream_sl_{uuid.uuid4().hex[:8]}"
-    S.run_to_memory(agg, name, output_mode="complete", state_partitions=4)
-    return spark.table(name).select(
+    return S.run_to_memory(agg, output_mode="complete", state_partitions=4).select(
         F.col("window.start").alias("win_start"), "event_type", "n"
     )
 
@@ -351,8 +338,7 @@ def stream_static_enrich(spark, sf_dir):
     a broadcast hint keeps it a map-side hash join with NO stream
     shuffle before the windowed agg). Windowed counts + quantized sum
     per market segment; oracle is the batch join."""
-    staged = _stage_events(spark, sf_dir)
-    stream = S.read_stream_parquet(spark, staged, io.parquet_schema(spark, staged))
+    stream = _events_stream(spark, sf_dir)
     dim = F.broadcast(
         io.read_parquet(spark, f"{sf_dir}/customer.parquet").df.select(
             F.col("c_custkey"), F.col("c_mktsegment")
@@ -363,9 +349,7 @@ def stream_static_enrich(spark, sf_dir):
         F.count(F.lit(1)).alias("n"),
         (F.sum(F.floor(F.col("value") * 10000 + F.lit(0.5))) / 10000).alias("total"),
     )
-    name = f"stream_se_{uuid.uuid4().hex[:8]}"
-    S.run_to_memory(agg, name, output_mode="complete", state_partitions=4)
-    return spark.table(name).select(
+    return S.run_to_memory(agg, output_mode="complete", state_partitions=4).select(
         F.col("window.start").alias("win_start"), "c_mktsegment", "n", "total"
     )
 
@@ -396,11 +380,7 @@ def stream_state_ttl_closed(spark, sf_dir):
     correctness must not hang on that)."""
     import pandas as pd
 
-    staged = _stage_events(spark, sf_dir)
-    schema = io.parquet_schema(spark, staged)
-    stream = S.with_watermark(
-        S.read_stream_parquet(spark, staged, schema), "ts", "1 hour"
-    )
+    stream = S.with_watermark(_events_stream(spark, sf_dir), "ts", "1 hour")
 
     def update(key, pdf_iter, state):
         if state.hasTimedOut:
@@ -426,10 +406,8 @@ def stream_state_ttl_closed(spark, sf_dir):
         output_mode="update",
         timeout="EventTimeTimeout",
     )
-    name = f"stream_ttl_{uuid.uuid4().hex[:8]}"
-    S.run_to_memory(out, name, output_mode="update", state_partitions=4)
     return (
-        spark.table(name)
+        S.run_to_memory(out, output_mode="update", state_partitions=4)
         .filter(F.col("closed"))
         .groupBy("user_id")
         .agg(F.sum("n").alias("n"))
@@ -488,8 +466,7 @@ def stream_hll_windowed_distinct(spark, sf_dir):
     from ..llm import sketches as SK
     from ..llm.text import md5_long
 
-    staged = _stage_events(spark, sf_dir)
-    stream = S.read_stream_parquet(spark, staged, io.parquet_schema(spark, staged))
+    stream = _events_stream(spark, sf_dir)
     m, s_bits = 512, 48
     h = md5_long(F.col("user_id").cast("string"), salt="hll")
     # NULL keys are invisible to a distinct count (the register-table
@@ -507,9 +484,7 @@ def stream_hll_windowed_distinct(spark, sf_dir):
     agg = S.tumbling(hashed, "ts", "1 hour", "register").agg(
         F.max("rank").alias("max_rank")
     )
-    name = f"stream_hll_{uuid.uuid4().hex[:8]}"
-    S.run_to_memory(agg, name, output_mode="complete", state_partitions=4)
-    regs = spark.table(name).select(
+    regs = S.run_to_memory(agg, output_mode="complete", state_partitions=4).select(
         F.col("window.start").alias("win_start"), "register", "max_rank"
     )
     est = SK.hll_estimate(regs, "win_start", p=9)
@@ -567,8 +542,7 @@ def stream_quantile_bins_windowed(spark, sf_dir):
     and read-off identically."""
     from pyspark.sql import Window
 
-    staged = _stage_events(spark, sf_dir)
-    stream = S.read_stream_parquet(spark, staged, io.parquet_schema(spark, staged))
+    stream = _events_stream(spark, sf_dir)
     bin_col = F.least(
         F.expr("CAST(floor(value * 100 + 0.5) AS BIGINT) * 128 div 100000"),
         F.lit(127).cast("bigint"),
@@ -576,9 +550,7 @@ def stream_quantile_bins_windowed(spark, sf_dir):
     agg = S.tumbling(
         stream.withColumn("bin", bin_col), "ts", "1 hour", "bin"
     ).agg(F.count(F.lit(1)).alias("cnt"))
-    name = f"stream_qb_{uuid.uuid4().hex[:8]}"
-    S.run_to_memory(agg, name, output_mode="complete", state_partitions=4)
-    binned = spark.table(name).select(
+    binned = S.run_to_memory(agg, output_mode="complete", state_partitions=4).select(
         F.col("window.start").alias("win_start"), "bin", "cnt"
     )
     mm = binned.groupBy("win_start").agg(F.sum("cnt").alias("n"))
@@ -750,18 +722,12 @@ def stream_session_window_agg(spark, sf_dir):
     session state per key merges adjacent windows inside the state
     store, the one streaming aggregation whose state SHRINKS as
     windows merge."""
-    staged = _stage_events(spark, sf_dir)
-    schema = io.parquet_schema(spark, staged)
-    stream = S.read_stream_parquet(spark, staged, schema).filter(
-        F.col("user_id") < 12
-    )
+    stream = _events_stream(spark, sf_dir).filter(F.col("user_id") < 12)
     agg = (
         stream.groupBy(F.session_window("ts", "30 minutes"), "user_id")
         .agg(F.count(F.lit(1)).alias("n_events"))
     )
-    name = f"stream_sw_{uuid.uuid4().hex[:8]}"
-    S.run_to_memory(agg, name, output_mode="complete", state_partitions=4)
-    return spark.table(name).select(
+    return S.run_to_memory(agg, output_mode="complete", state_partitions=4).select(
         "user_id",
         F.unix_micros("session_window.start").alias("start_us"),
         F.unix_micros("session_window.end").alias("end_us"),
@@ -804,10 +770,7 @@ def stream_sliding_watermark_append(spark, sf_dir):
     explode-to-windows construction (events_sliding_batch_counts),
     closing the loop: batch backfill and streaming emission of the
     SAME sliding metric, one oracle apart."""
-    staged = _stage_events(spark, sf_dir)
-    stream = S.read_stream_parquet(
-        spark, staged, io.parquet_schema(spark, staged)
-    )
+    stream = _events_stream(spark, sf_dir)
     # out-of-band event times quarantined ahead of the watermark (the
     # far-future side poisons the checkpointed watermark — api.py);
     # event_type is the panel's REQUIRED dimension: a producer
@@ -821,9 +784,7 @@ def stream_sliding_watermark_append(spark, sf_dir):
     agg = S.sliding(wm, "ts", "1 hour", "30 minutes", "event_type").agg(
         F.count(F.lit(1)).alias("n")
     )
-    name = f"stream_slw_{uuid.uuid4().hex[:8]}"
-    S.run_to_memory(agg, name, output_mode="append", state_partitions=4)
-    return spark.table(name).select(
+    return S.run_to_memory(agg, output_mode="append", state_partitions=4).select(
         "event_type",
         F.unix_seconds(F.col("window.start")).alias("win_start_s"),
         "n",
@@ -871,15 +832,13 @@ def stream_stream_left_outer_join(spark, sf_dir):
     earned the right to emit. State is bounded on both sides by
     watermark + interval, the production requirement for an unbounded
     join."""
-    staged = _stage_events(spark, sf_dir)
-    schema = io.parquet_schema(spark, staged)
     p = (
-        S.with_watermark(S.read_stream_parquet(spark, staged, schema), "ts", "97 minutes")
+        S.with_watermark(_events_stream(spark, sf_dir), "ts", "97 minutes")
         .filter(F.col("event_type") == "purchase")
         .select(F.col("event_id").alias("pid"), "user_id", F.col("ts").alias("p_ts"))
     )
     c = (
-        S.with_watermark(S.read_stream_parquet(spark, staged, schema), "ts", "97 minutes")
+        S.with_watermark(_events_stream(spark, sf_dir), "ts", "97 minutes")
         .filter(F.col("event_type") == "click")
         .select(F.col("event_id").alias("cid"), F.col("user_id").alias("c_user"),
                 F.col("ts").alias("c_ts"))
@@ -891,10 +850,9 @@ def stream_stream_left_outer_join(spark, sf_dir):
         & (F.col("c_ts") <= F.col("p_ts")),
         "leftOuter",
     )
-    name = f"stream_ssloj_{uuid.uuid4().hex[:8]}"
-    S.run_to_memory(j.select("pid", "user_id", "cid"), name,
-                    output_mode="append", state_partitions=4)
-    return spark.table(name)
+    return S.run_to_memory(
+        j.select("pid", "user_id", "cid"), output_mode="append", state_partitions=4
+    )
 
 
 @query(
@@ -931,8 +889,7 @@ def stream_chained_window_aggs(spark, sf_dir):
     so the event-time watermark column propagates — passing
     window.start instead drops the watermark tag and append mode is
     rejected (the documented chaining contract)."""
-    staged = _stage_events(spark, sf_dir)
-    stream = S.read_stream_parquet(spark, staged, io.parquet_schema(spark, staged))
+    stream = _events_stream(spark, sf_dir)
     wm = S.with_watermark(stream, "ts", "37 minutes")
     hourly = S.tumbling(wm, "ts", "1 hour", "event_type").agg(
         F.count(F.lit(1)).alias("n")
@@ -943,9 +900,7 @@ def stream_chained_window_aggs(spark, sf_dir):
         )
         .agg(F.sum("n").alias("n_events"), F.count(F.lit(1)).alias("n_hours"))
     )
-    name = f"stream_chain_{uuid.uuid4().hex[:8]}"
-    S.run_to_memory(daily, name, output_mode="append", state_partitions=4)
-    return spark.table(name).select(
+    return S.run_to_memory(daily, output_mode="append", state_partitions=4).select(
         F.col("dwin.start").alias("day_start"), "event_type",
         "n_events", "n_hours",
     )
@@ -987,9 +942,7 @@ def pyds_stream_source_counts(spark, sf_dir):
     agg = st.groupBy((F.col("h") % 5).alias("g")).agg(
         F.count(F.lit(1)).alias("n"), F.sum("vc").alias("vc_sum")
     )
-    name = f"pyds_stream_{uuid.uuid4().hex[:8]}"
-    S.run_to_memory(agg, name, output_mode="complete", state_partitions=4)
-    return spark.table(name)
+    return S.run_to_memory(agg, output_mode="complete", state_partitions=4)
 
 
 @query(
@@ -1075,9 +1028,7 @@ def stream_two_source_union(spark, sf_dir):
         F.sum(F.floor(F.col("value") * 10000 + F.lit(0.5)).cast("bigint"))
           .alias("total_q"),
     )
-    name = f"stream_union_{uuid.uuid4().hex[:8]}"
-    S.run_to_memory(agg, name, output_mode="complete", state_partitions=4)
-    return spark.table(name)
+    return S.run_to_memory(agg, output_mode="complete", state_partitions=4)
 
 
 @query(
@@ -1126,10 +1077,7 @@ def stream_windowed_topk_users(spark, sf_dir):
     hitter, so NULL-user rows ride the dead-letter leg and never rank
     (the oracle mirrors with IS NOT NULL, incl. the watermark
     subquery)."""
-    staged = _stage_events(spark, sf_dir)
-    stream = S.read_stream_parquet(
-        spark, staged, io.parquet_schema(spark, staged)
-    )
+    stream = _events_stream(spark, sf_dir)
     # out-of-band event times quarantined ahead of the watermark (the
     # far-future side poisons the checkpointed watermark — api.py)
     stream, _dead = S.quarantine_out_of_band(stream, "ts", "7 days")
@@ -1138,15 +1086,13 @@ def stream_windowed_topk_users(spark, sf_dir):
     agg = S.tumbling(wm, "ts", "1 hour", "user_id").agg(
         F.count(F.lit(1)).alias("n")
     )
-    name = f"stream_topk_{uuid.uuid4().hex[:8]}"
-    S.run_to_memory(agg, name, output_mode="append", state_partitions=4)
     from pyspark.sql import Window
 
     # plain asc tie-break: quarantine_required("user_id") means no
     # NULL can reach the ranking
     w = Window.partitionBy("win_start").orderBy(F.desc("n"), F.col("user_id"))
     return (
-        spark.table(name)
+        S.run_to_memory(agg, output_mode="append", state_partitions=4)
         .select(F.col("window.start").alias("win_start"), "user_id", "n")
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= 3)
@@ -1210,12 +1156,10 @@ def stream_scd2_temporal_enrich(spark, sf_dir):
     join per micro-batch, broadcast dim, NO stream shuffle before the
     windowed agg). Daily counts per plan; oracle replays dim build +
     interval join + windowing in batch SQL."""
-    staged = _stage_events(spark, sf_dir)
-    schema = io.parquet_schema(spark, staged)
-    stream = S.read_stream_parquet(spark, staged, schema)
+    stream = _events_stream(spark, sf_dir)
 
     users = (
-        spark.read.parquet(staged)
+        spark.read.parquet(_stage_events(spark, sf_dir))
         .filter(F.col("user_id").isNotNull())  # no SCD2 history for NULL
         .select("user_id").distinct()
     )
@@ -1259,8 +1203,6 @@ def stream_scd2_temporal_enrich(spark, sf_dir):
             "total"
         ),
     )
-    name = f"stream_scd2_{uuid.uuid4().hex[:8]}"
-    S.run_to_memory(agg, name, output_mode="complete", state_partitions=4)
-    return spark.table(name).select(
+    return S.run_to_memory(agg, output_mode="complete", state_partitions=4).select(
         F.col("window.start").alias("day"), "plan_id", "n", "total"
     )

@@ -667,17 +667,19 @@ def test_temp_view_binds_at_analysis(spark):
 
 
 def test_tools_resolve_the_checkout_from_their_own_path():
-    """Spark-free: no tool names this checkout's absolute path or puts
-    a literal absolute path on ``sys.path`` — run from another
-    worktree, a tool must import and check that worktree's engine."""
+    """Spark-free: no tool or test names this checkout's absolute path
+    or puts a literal absolute path on ``sys.path`` — run from another
+    worktree, a tool or test must import and check that worktree's
+    engine."""
     import pathlib
     import re
 
     root = pathlib.Path(__file__).resolve().parents[1]
     literal_insert = re.compile(r"sys\.path\.insert\(\s*0\s*,\s*[\"']/")
     bad = [
-        p.name
-        for p in sorted((root / "tools").iterdir())
+        f"{d}/{p.name}"
+        for d in ("tools", "tests")
+        for p in sorted((root / d).iterdir())
         if p.is_file()
         and (str(root) in (text := p.read_text(errors="replace")) or literal_insert.search(text))
     ]

@@ -13,8 +13,9 @@ floats).
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from tools import fuzz  # noqa: E402
 from tools.fuzz import run_fuzz  # noqa: E402

@@ -10,10 +10,11 @@ round-close ritual; this subset exists so the worst fixed instances
 (48x, 28x, 24x, 14x compiled fact scans) fire on every commit.
 """
 import sys
+from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from tools.scanaudit import scan_counts  # noqa: E402
 

@@ -12,8 +12,9 @@ resolution semantics that broke during development:
 """
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from tools.staleness import (  # noqa: E402
     ModuleIndex, _refs_in, closure_parts, changed_deps, query_sources,

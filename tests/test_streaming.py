@@ -7,7 +7,6 @@ from __future__ import annotations
 import datetime
 import os
 import tempfile
-import uuid
 
 import pandas as pd
 import pytest
@@ -34,9 +33,9 @@ def test_stream_tumbling_equals_batch(spark, staged_events):
     agg = S.tumbling(stream, "ts", "30 minutes", "event_type").agg(
         F.count(F.lit(1)).alias("n")
     )
-    name = f"t_{uuid.uuid4().hex[:8]}"
-    S.run_to_memory(agg, name, output_mode="complete")
-    got = spark.table(name).select(F.col("window.start").alias("s"), "event_type", "n")
+    got = S.run_to_memory(agg, output_mode="complete").select(
+        F.col("window.start").alias("s"), "event_type", "n"
+    )
 
     want = (
         batch.groupBy(F.window("ts", "30 minutes").alias("w"), "event_type")
@@ -54,9 +53,9 @@ def test_stream_session_window_equals_batch(spark, staged_events):
     agg = S.session(stream, "ts", "10 minutes", "user_id").agg(
         F.count(F.lit(1)).alias("n")
     )
-    name = f"s_{uuid.uuid4().hex[:8]}"
-    S.run_to_memory(agg, name, output_mode="complete")
-    got = spark.table(name).select("user_id", F.col("window.start").alias("s"), "n")
+    got = S.run_to_memory(agg, output_mode="complete").select(
+        "user_id", F.col("window.start").alias("s"), "n"
+    )
 
     want = (
         batch.groupBy(F.session_window("ts", "10 minutes").alias("w"), "user_id")
@@ -88,9 +87,9 @@ def test_keyed_state_running_counts(spark, staged_events):
         output_schema="user_id bigint, n bigint",
         output_mode="update",
     )
-    name = f"k_{uuid.uuid4().hex[:8]}"
-    S.run_to_memory(out, name, output_mode="update")
-    got = spark.table(name).groupBy("user_id").agg(F.max("n").alias("n"))
+    got = S.run_to_memory(out, output_mode="update").groupBy("user_id").agg(
+        F.max("n").alias("n")
+    )
     want = batch.groupBy("user_id").agg(F.count(F.lit(1)).alias("n"))
     assert as_bag(got.collect()) == as_bag(want.collect())
 
@@ -123,9 +122,7 @@ def test_interval_join_helper_equals_batch(spark, staged_events):
         l, r.withColumnRenamed("c_user", "user_id"), "user_id", "p_ts", "c_ts",
         lower="1 hour", upper="0 seconds",
     ).select("pid", "cid")
-    name = f"ij_{uuid.uuid4().hex[:8]}"
-    S.run_to_memory(j, name, output_mode="append", state_partitions=2)
-    got = spark.table(name)
+    got = S.run_to_memory(j, output_mode="append", state_partitions=2)
 
     bl, br = side(batch, "p_ts", "pid"), side(batch, "c_ts", "cid").withColumnRenamed("user_id", "u2")
     want = bl.join(
@@ -229,11 +226,10 @@ def test_keyed_state_event_time_timeout(spark, staged_events):
         output_mode="update",
         timeout="EventTimeTimeout",
     )
-    name = f"ttl_{uuid.uuid4().hex[:8]}"
-    S.run_to_memory(out, name, output_mode="update", state_partitions=4)
+    drained = S.run_to_memory(out, output_mode="update", state_partitions=4)
     closed = {
         r["user_id"]: r["n"]
-        for r in spark.table(name).filter(F.col("closed")).collect()
+        for r in drained.filter(F.col("closed")).collect()
     }
     # batch replay of the eviction rule
     import pyspark.sql.functions as FF
@@ -293,8 +289,6 @@ def test_watermark_epoch_floor_contract(spark, tmp_path):
     fails with pre-1970 rows PRESENT, Spark lifted the bound: delete
     the with_watermark domain note and re-admit stream_* to
     ``tools/fuzz.py epoch``."""
-    import uuid
-
     from emma_spark.streaming import api as S
 
     src = str(tmp_path / "ev")
@@ -308,10 +302,9 @@ def test_watermark_epoch_floor_contract(spark, tmp_path):
         "ts", "10 minutes",
     )
     agg = S.tumbling(stream, "ts", "1 hour").agg(F.count(F.lit(1)).alias("n"))
-    name = f"wm_{uuid.uuid4().hex[:8]}"
-    S.run_to_memory(agg, name, output_mode="append")
+    drained = S.run_to_memory(agg, output_mode="append")
     starts = sorted(r["s"] for r in
-                    spark.table(name).select(F.col("window.start").alias("s")).collect())
+                    drained.select(F.col("window.start").alias("s")).collect())
     # 6 hourly events straddle midnight: the 2 pre-1970 windows are
     # dropped; of the 4 post-epoch ones, append mode withholds those
     # not yet below the final watermark (max(ts) - 10 min) — at least
@@ -358,10 +351,9 @@ def test_quarantine_pre_epoch_then_watermark_emits_all_valid(spark, tmp_path):
     valid, _ = S.quarantine_pre_epoch(stream, "ts")
     agg = S.tumbling(S.with_watermark(valid, "ts", "10 minutes"),
                      "ts", "1 hour").agg(F.count(F.lit(1)).alias("n"))
-    name = f"wmq_{uuid.uuid4().hex[:8]}"
-    S.run_to_memory(agg, name, output_mode="append")
+    drained = S.run_to_memory(agg, output_mode="append")
     starts = sorted(r["s"] for r in
-                    spark.table(name).select(F.col("window.start").alias("s"))
+                    drained.select(F.col("window.start").alias("s"))
                     .collect())
     assert all(s >= datetime.datetime(1970, 1, 1) for s in starts), starts
     # the quarantine leg is a batch-expressible filter: count the
@@ -676,8 +668,8 @@ def test_out_of_order_file_arrival_drops_within_single_run(spark, tmp_path):
     "b" (filter wm now 11:00 — ALL FIVE rows silently dropped).
 
     The pinned contract: (1) the loss is real — 5 of 12 valid rows
-    vanish with zero errors; (2) it is OBSERVED — run_to_memory now
-    returns drain_accounting and the conservation law holds exactly:
+    vanish with zero errors; (2) it is OBSERVED — drain_accounting
+    around the drain makes the conservation law hold exactly:
     input == emitted + dropped_by_watermark + retained-in-state;
     (3) the same corpus with arrival order matching event-time order
     loses nothing; (4) a watermark delay sized past the disorder
@@ -709,12 +701,12 @@ def test_out_of_order_file_arrival_drops_within_single_run(spark, tmp_path):
             S.tumbling(S.with_watermark(stream, "ts", delay), "ts", "1 hour")
             .agg(F.count(F.lit(1)).alias("n"))
         )
-        name = f"ooo_{uuid.uuid4().hex[:8]}"
-        acct = S.run_to_memory(agg, name, output_mode="append",
-                               state_partitions=4)
+        with S.drain_accounting(spark) as acct:
+            drained = S.run_to_memory(agg, output_mode="append",
+                                      state_partitions=4)
         emitted = {
             r["s"].hour: r["n"]
-            for r in spark.table(name)
+            for r in drained
             .select(F.col("window.start").alias("s"), "n").collect()
         }
         return emitted, acct
@@ -1141,13 +1133,14 @@ def test_source_schema_drift_null_fills_unguarded(spark, tmp_path):
         agg = S.tumbling(wm, "ts", "1 hour").agg(
             F.count(F.lit(1)).alias("n"), F.sum("value").alias("total")
         )
-        q = (
-            agg.writeStream.format("parquet")
-            .option("path", out).option("checkpointLocation", ck)
-            .outputMode("append").trigger(availableNow=True).start()
-        )
-        q.awaitTermination()
-        return S.drain_accounting(q)
+        with S.drain_accounting(spark) as acct:
+            (
+                agg.writeStream.format("parquet")
+                .option("path", out).option("checkpointLocation", ck)
+                .outputMode("append").trigger(availableNow=True).start()
+                .awaitTermination()
+            )
+        return acct
 
     drain()
     # the producer redeploy: drain-2 files carry amount, not value
@@ -1286,13 +1279,14 @@ def test_shuffle_partition_change_across_restart_is_ignored(spark, tmp_path):
             agg = S.tumbling(
                 S.with_watermark(stream, "ts", "30 minutes"), "ts", "1 hour"
             ).agg(F.count(F.lit(1)).alias("n"))
-            q = (
-                agg.writeStream.format("parquet")
-                .option("path", out).option("checkpointLocation", ck)
-                .outputMode("append").trigger(availableNow=True).start()
-            )
-            q.awaitTermination()
-            return S.drain_accounting(q)
+            with S.drain_accounting(spark) as acct:
+                (
+                    agg.writeStream.format("parquet")
+                    .option("path", out).option("checkpointLocation", ck)
+                    .outputMode("append").trigger(availableNow=True).start()
+                    .awaitTermination()
+                )
+            return acct
         finally:
             spark.conf.set("spark.sql.shuffle.partitions", prev)
 
@@ -1389,9 +1383,8 @@ def test_no_data_microbatches_off_suppresses_final_flush(spark, tmp_path):
     default). With it off, the SAME corpus and SAME query emit
     NOTHING from a bounded drain (the watermark never advances past
     the data batch), so the engine's batch-equivalence contract for
-    append drains rides on that default; docs/SCALE.md documents it
-    beside the recentProgress ring-buffer cap that drain_accounting
-    rides on."""
+    append drains rides on that default; docs/SCALE.md documents
+    it."""
     import shutil
 
     base = datetime.datetime(2024, 3, 1, 0, 30, 0)
@@ -1410,9 +1403,9 @@ def test_no_data_microbatches_off_suppresses_final_flush(spark, tmp_path):
         agg = S.tumbling(
             S.with_watermark(stream, "ts", "30 minutes"), "ts", "1 hour"
         ).agg(F.count(F.lit(1)).alias("n"))
-        name = f"nodata_{uuid.uuid4().hex[:8]}"
-        S.run_to_memory(agg, name, output_mode="append", state_partitions=4)
-        return spark.table(name).count()
+        return S.run_to_memory(
+            agg, output_mode="append", state_partitions=4
+        ).count()
 
     conf = "spark.sql.streaming.noDataMicroBatches.enabled"
     assert spark.conf.get(conf) == "true"  # the default the drains ride on
@@ -1434,13 +1427,12 @@ def test_run_to_memory_checkpoint_is_local_scratch(
     batch = spark.read.parquet(staged_events)
     stream = S.read_stream_parquet(spark, staged_events, batch.schema)
     agg = stream.groupBy("event_type").count()
-    name = f"ck_{uuid.uuid4().hex[:8]}"
     monkeypatch.setenv("SPARK_GRAFT_STREAM_CKPT", "emma-remote://bucket/ckpt")
     with pytest.raises(ValueError, match="SPARK_GRAFT_STREAM_CKPT"):
-        S.run_to_memory(agg, name, output_mode="complete")
+        S.run_to_memory(agg, output_mode="complete")
     monkeypatch.setenv("SPARK_GRAFT_STREAM_CKPT", f"file://{tmp_path}")
-    S.run_to_memory(agg, name, output_mode="complete")
-    assert spark.table(name).count() == batch.select("event_type").distinct().count()
+    drained = S.run_to_memory(agg, output_mode="complete")
+    assert drained.count() == batch.select("event_type").distinct().count()
     assert list(tmp_path.iterdir()) == []
 
 
@@ -1475,10 +1467,7 @@ def test_run_to_memory_checkpoint_needs_room_in_dev_shm(
     monkeypatch.setattr(shutil, "rmtree", rmtree)
     batch = spark.read.parquet(staged_events)
     stream = S.read_stream_parquet(spark, staged_events, batch.schema)
-    S.run_to_memory(
-        stream.groupBy("event_type").count(), f"shm_{uuid.uuid4().hex[:8]}",
-        output_mode="complete",
-    )
+    S.run_to_memory(stream.groupBy("event_type").count(), output_mode="complete")
     (ckpt,) = [p for p in removed if "emma_drain_" in p]
     assert os.path.dirname(ckpt) == (str(tmp_path) if base == "tmp" else base)
 
@@ -1500,3 +1489,63 @@ def test_stream_staging_runs_once_per_process(spark, tables, monkeypatch):
     for _ in range(2):
         q.fn(spark, SF_DIR).schema
     assert made == ["emma_stream_"]
+
+
+def test_drain_accounting_is_exact_past_100_batches(spark, tmp_path):
+    """drain_accounting counts every micro-batch of a long drain at the
+    default ``numRecentProgressUpdates`` (100): 101 single-row files
+    with maxFilesPerTrigger=1 read as 101 batches and 101 input rows,
+    and ``input == emitted + dropped + retained`` holds. Rows arrive in
+    event-time order an hour apart; the last one lands, earlier than
+    the newest row but not late, in the still open last window, so the
+    watermark does not move after it and no no-data batch follows."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    n = 101
+    conf = "spark.sql.streaming.numRecentProgressUpdates"
+    assert spark.conf.get(conf) == "100"
+    base = datetime.datetime(2024, 3, 1, 0, 30, 0)
+    ts = [base + datetime.timedelta(hours=i) for i in range(n - 1)]
+    ts.append(ts[-1] - datetime.timedelta(minutes=20))
+    src = str(tmp_path / "src"); os.makedirs(src)
+    for i, t in enumerate(ts):
+        f = f"{src}/{i:03d}.parquet"
+        pq.write_table(pa.table({
+            "id": pa.array([i], pa.int64()),
+            "ts": pa.array([t], pa.timestamp("us", tz="UTC")),
+        }), f)
+        os.utime(f, (1_000_000 + i, 1_000_000 + i))
+    stream = S.read_stream_parquet(
+        spark, src, "id bigint, ts timestamp", maxFilesPerTrigger=1)
+    agg = S.tumbling(S.with_watermark(stream, "ts", "30 minutes"),
+                     "ts", "1 hour").agg(F.count(F.lit(1)).alias("n"))
+    with S.drain_accounting(spark) as acct:
+        drained = S.run_to_memory(agg, output_mode="append", state_partitions=1)
+    emitted = drained.agg(F.sum("n")).collect()[0][0]
+    assert acct["batches"] == n and acct["input_rows"] == n, acct
+    assert acct["dropped_by_watermark"] == 0, acct
+    # the two rows of the last window are still in state
+    assert emitted == n - 2
+    assert acct["input_rows"] == emitted + acct["dropped_by_watermark"] + 2
+
+
+def test_drain_accounting_counts_only_queries_started_inside(spark, tmp_path):
+    """A query drained before the block is not counted inside it, and
+    the block leaves no listener registered behind."""
+    src = str(tmp_path / "src")
+    spark.range(5).write.parquet(src)
+    stream = S.read_stream_parquet(spark, src, "id bigint")
+    listeners = len(spark.streams._jsqm.listListeners())
+    S.run_to_memory(stream, output_mode="append")
+    with S.drain_accounting(spark) as acct:
+        drained = S.run_to_memory(stream, output_mode="append")
+    assert drained.count() == 5
+    assert acct == {
+        "batches": 1,
+        "input_rows": 5,
+        "dropped_by_watermark": 0,
+        "final_watermark": None,
+        "state_partitions": None,
+    }, acct
+    assert len(spark.streams._jsqm.listListeners()) == listeners

@@ -1121,13 +1121,16 @@ class RestartHarness:
         assert sf_dir == SRC, sf_dir
         return self.staged
 
-    def run_to_memory(self, stream_df, name, output_mode="append",
+    def run_to_memory(self, stream_df, output_mode="append",
                       state_partitions=None):
-        """Checkpointed two-run drain standing in for the memory sink.
-        append/update accumulate emissions across batches AND runs
-        (exactly the memory sink's within-run behavior, extended over
-        the restart); complete keeps the last full emission (the
-        memory sink truncates per batch in complete mode)."""
+        """Checkpointed two-run drain standing in for the memory sink;
+        returns the drained frame. append/update accumulate emissions
+        across batches AND runs (exactly the memory sink's within-run
+        behavior, extended over the restart); complete keeps the last
+        full emission (the memory sink truncates per batch in complete
+        mode)."""
+        from emma_spark.streaming.api import drain_accounting
+
         key = f"{self.workload}_{self.variant}_{self.call_idx}"
         self.call_idx += 1
         out = os.path.join(self.base, key, "out")
@@ -1144,36 +1147,33 @@ class RestartHarness:
             spark.conf.set("spark.sql.shuffle.partitions",
                            str(state_partitions))
         try:
-            q = (
-                stream_df.writeStream.foreachBatch(sink)
-                .option("checkpointLocation", ckpt)
-                .outputMode(output_mode)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-            # The split-boundary analysis (run_restart's docstring)
-            # claims NO row is ever late in either drain. MEASURE it
-            # per drain: a nonzero dropped-by-watermark count means the
-            # analysis is wrong for this workload and the comparison
-            # would pass only by luck of what the oracle keeps.
-            from emma_spark.streaming.api import drain_accounting
-
-            acct = drain_accounting(q)
-            if acct["dropped_by_watermark"]:
-                raise AssertionError(
-                    f"split-boundary claim violated: drain {key} "
-                    f"dropped {acct['dropped_by_watermark']} rows by "
-                    f"watermark ({acct})"
+            with drain_accounting(spark) as acct:
+                (
+                    stream_df.writeStream.foreachBatch(sink)
+                    .option("checkpointLocation", ckpt)
+                    .outputMode(output_mode)
+                    .trigger(availableNow=True)
+                    .start()
+                    .awaitTermination()
                 )
         finally:
             if state_partitions is not None:
                 spark.conf.set("spark.sql.shuffle.partitions", prev)
+        # The split-boundary analysis (run_restart's docstring) claims
+        # NO row is ever late in either drain. MEASURE it per drain: a
+        # nonzero dropped-by-watermark count means the analysis is
+        # wrong for this workload and the comparison would pass only
+        # by luck of what the oracle keeps.
+        if acct["dropped_by_watermark"]:
+            raise AssertionError(
+                f"split-boundary claim violated: drain {key} "
+                f"dropped {acct['dropped_by_watermark']} rows by "
+                f"watermark ({acct})"
+            )
         if glob.glob(f"{out}/*.parquet"):
-            res = spark.read.parquet(out)
-        else:  # zero emissions so far: empty frame, stream's schema
-            res = spark.createDataFrame([], stream_df.schema)
-        res.createOrReplaceTempView(name)
+            return spark.read.parquet(out)
+        # zero emissions so far: empty frame, stream's schema
+        return spark.createDataFrame([], stream_df.schema)
 
 
 def eligible_workloads(registry) -> list[str]:
@@ -1212,7 +1212,7 @@ def run_restart(spark, only=None, quiet: bool = False):
     (b) a session finalized in drain 1 ended more than the gap before
     any drain-2 event; (c) an unmatched left-outer purchase evicted at
     drain-1 end has no admissible drain-2 click. Every drain asserts
-    ``drain_accounting(...)['dropped_by_watermark'] == 0``.
+    ``dropped_by_watermark == 0`` under ``drain_accounting``.
     RESTART_EXCLUDED lists the workloads left out, with reasons; they
     are reported as SKIPs."""
     from emma_spark.streaming import api as S
