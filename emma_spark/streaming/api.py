@@ -393,11 +393,28 @@ def drain_accounting(spark: SparkSession) -> Iterator[dict]:
     )
 
 
-# Free space /dev/shm must have for a local drain to checkpoint there;
-# below it the checkpoint goes to tempfile.gettempdir(). Docker's
-# default /dev/shm (64 MiB) is under it, so a drain in such a
-# container checkpoints on disk instead of running out of space.
-SHM_MIN_FREE_BYTES = 256 << 20
+# Checkpoint manager for a drain's scratch checkpoint (see run_to_memory).
+_SCRATCH_CKPT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
+
+@contextmanager
+def _scoped_conf(spark: SparkSession, conf: dict[str, str]) -> Iterator[None]:
+    """Set ``conf`` on the session for the block; on exit put back each
+    key's previous value, unsetting the keys that were unset before."""
+    prev = {k: spark.conf.get(k, None) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def run_to_memory(
@@ -422,24 +439,26 @@ def run_to_memory(
     per-partition store setup; an unbounded production run with many
     millions of keys should pass a number sized to the cluster.
 
-    CHECKPOINT PLACEMENT: the memory sink is non-fault-tolerant by
-    definition, so the drain's checkpoint is always scratch — it is
-    deleted when the drain ends, wherever it was placed; a drain is
-    never resumable. On a LOCAL master (every process on one machine)
-    it goes to a RAM-backed dir (``/dev/shm``) when that has at least
-    ``SHM_MIN_FREE_BYTES`` free, else to ``tempfile.gettempdir()``:
-    the HDFS-backed state store writes one delta file
-    per partition per batch plus offset/commit WAL files, and on a
-    disk-backed ``java.io.tmpdir`` that file churn was ~30% of the
-    whole drain (measured sf0.1: 1.47 s → 1.10 s). On a cluster
+    CHECKPOINT: the memory sink is non-fault-tolerant by definition,
+    so the drain's checkpoint is always scratch — deleted when the
+    drain ends, never resumed. On a LOCAL master (every process on one
+    machine) it goes under ``tempfile.gettempdir()``; on a cluster
     master the default placement is unchanged (executors must reach
-    the checkpoint; node-local RAM would break that).
-    ``SPARK_GRAFT_STREAM_CKPT`` overrides the base dir everywhere; it
-    must be a local directory (a plain path or a ``file:`` URI) —
-    any other URI scheme raises ``ValueError``, because the scratch
-    checkpoint could not be deleted there. Durable, resumable
-    streaming output is ``foreach_batch_parquet`` with a
-    caller-provided checkpoint."""
+    the checkpoint). ``SPARK_GRAFT_STREAM_CKPT`` overrides the base dir
+    everywhere; it must be a local directory (a plain path or a
+    ``file:`` URI) — any other URI scheme raises ``ValueError``,
+    because the scratch checkpoint could not be deleted there.
+
+    Every local scratch checkpoint is written through Spark's
+    FileSystem checkpoint manager, set for the drain only (docs/SCALE.md
+    "Streaming drain checkpoints"). A drain checkpoint costs forked
+    processes, not bytes: without the native Hadoop library the local
+    filesystem forks a ``chmod`` for every file it writes, and the
+    default FileContext manager's rename forks four ``readlink``s more
+    per checkpoint file. Its atomic-overwrite rename buys a scratch
+    checkpoint nothing, since a local POSIX rename is atomic. Durable,
+    resumable streaming output is ``foreach_batch_parquet`` with a
+    caller-provided checkpoint, which keeps Spark's default manager."""
     import os
     import shutil
     import tempfile
@@ -457,32 +476,28 @@ def run_to_memory(
                 f"local directory, not a {url.scheme!r} URI"
             )
         base = url.path if url.scheme else base
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
     if base is None and spark.sparkContext.master.startswith("local"):
-        try:
-            shm = os.statvfs("/dev/shm")
-            roomy = shm.f_bavail * shm.f_frsize >= SHM_MIN_FREE_BYTES
-        except OSError:
-            roomy = False
-        base = "/dev/shm" if roomy else tempfile.gettempdir()
+        base = tempfile.gettempdir()
     tag = f"emma_drain_{_uuid.uuid4().hex}"
     name = name or tag
     ckpt = os.path.join(base, tag) if base else None
+    conf = {}
+    if state_partitions is not None:
+        conf["spark.sql.shuffle.partitions"] = str(state_partitions)
+    if ckpt is not None:
+        conf["spark.sql.streaming.checkpointFileManagerClass"] = _SCRATCH_CKPT_MANAGER
     try:
-        w = (
-            stream_df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-        )
-        if ckpt is not None:
-            w = w.option("checkpointLocation", ckpt)
-        w.start().awaitTermination()
+        with _scoped_conf(spark, conf):
+            w = (
+                stream_df.writeStream.format("memory")
+                .queryName(name)
+                .outputMode(output_mode)
+                .trigger(availableNow=True)
+            )
+            if ckpt is not None:
+                w = w.option("checkpointLocation", ckpt)
+            w.start().awaitTermination()
     finally:
-        if state_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
         if ckpt is not None:
             shutil.rmtree(ckpt, ignore_errors=True)
     return spark.table(name)

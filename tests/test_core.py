@@ -483,7 +483,7 @@ def test_py_fold_grouped_histogram(tables, duck):
 
 
 def test_fold_nan_is_present_null_is_absent(spark):
-    """r7 ADVICE: pandas dropna() silently dropped float NaN values,
+    """pandas dropna() would silently drop float NaN values,
     which are PRESENT bag elements (unlike SQL NULLs, which the bag
     model treats as absent). Both fold paths must see the NaN."""
     import math
@@ -570,7 +570,7 @@ def test_fixpoint_content_probe_value_propagation(spark):
 # ---------------------------------------------------------------- scale-safe global reduce
 def test_reduce_two_level_partial_aggregation(spark):
     """Global reduce/reduceOption must NOT materialize the whole bag as
-    one array in one task (VERDICT r2 #3): the plan folds each physical
+    one array in one task: the plan folds each physical
     partition first (grouped on spark_partition_id), then merges the
     bounded partials."""
     b = DataBag(spark.range(0, 1000, 1, 8).select((F.col("id") % 97).alias("value")))
@@ -600,8 +600,8 @@ def test_reduce_option_empty_and_null_partitions(spark):
 
 
 def test_zip_with_index_leaves_no_cache_entry(spark, tables):
-    """ADVICE r2: zip_with_index used persist() with no unpersist point,
-    leaking a CacheManager entry per call for the session lifetime. The
+    """zip_with_index must not persist() with no unpersist point: that
+    leaks a CacheManager entry per call for the session lifetime. The
     localCheckpoint scheme must leave the SQL cache untouched."""
     cm = spark._jsparkSession.sharedState().cacheManager()
     cm.clearCache()
@@ -627,7 +627,7 @@ def test_pair_shape_join_and_cross(spark):
 
 
 def test_sample_null_positions_not_confused(spark):
-    """ADVICE r2: concat_ws skips NULLs, so ('a',NULL,'b') and
+    """concat_ws skips NULLs, so ('a',NULL,'b') and
     ('a','b',NULL) used to hash identically (tie broken by partition
     luck). With the NULL sentinel the pick is content-deterministic
     under any partitioning."""

@@ -1,7 +1,7 @@
 """Fixed-seed subset of the adversarial fuzz harnesses, in-suite.
 
 tools/fuzzcheck.py and tools/fuzzcheck_events.py found 11 latent
-cross-engine bugs in r6 that the real testdata can never trigger (it
+cross-engine bugs that the real testdata can never trigger (it
 is pure ASCII with no empty docs and no edge timestamps) — but they
 only ran when remembered. This pins a contract-heavy subset into the
 default gate so the machinery fires on every commit; the full sweeps
@@ -20,8 +20,8 @@ sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 from tools import fuzz  # noqa: E402
 from tools.fuzz import run_fuzz  # noqa: E402
 
-# contract-heavy picks: tokenization/case-fold (the r5 seam), cumsum
-# packing (the r6 red), array HOFs on empty docs (two r6 crashes),
+# contract-heavy picks: tokenization/case-fold, cumsum
+# packing, array HOFs on empty docs (two past crashes),
 # dedup hashing, percentile/window arithmetic, PII regex classes
 _DOC_SUBSET = {
     "flatmap_wordcount", "text_clean_normalize", "text_repetition_quality",
@@ -53,7 +53,7 @@ def test_fuzz_documents_subset(spark):
 
 
 # NULLs in every nullable column + duplicate/skewed keys + edge
-# prices: the corpus that found the r7 null-ordering class (Spark ASC
+# prices: the corpus that found the null-ordering class (Spark ASC
 # = NULLS FIRST, DuckDB = NULLS LAST), the collect_list-skips-NULLs
 # window seam, the CSV NULL-vs-'' merge, and the NULL-map-key crash
 _ORD_SUBSET = {
@@ -103,7 +103,7 @@ def test_fuzz_joins_subset(spark):
 
 
 # zero-norm / duplicate / degenerate vectors: the corpus class that
-# found the 13 DIVIDE_BY_ZERO crashes (r7) — similarity ops must gate
+# found 13 DIVIDE_BY_ZERO crashes — similarity ops must gate
 # zero vectors identically on both engines
 _EMB_SUBSET = {
     "ann_topk_cosine", "ann_lsh_topk", "embedding_neardup",
@@ -134,7 +134,7 @@ def test_fuzz_events_subset(spark):
     assert n_ok >= len(_EVENT_SUBSET) - 2, f"too many skips: {n_skip}"
 
 
-# the three r9 constant-series finds (theta 0/0, empty-candidate fold
+# the three constant-series finds (theta 0/0, empty-candidate fold
 # seed, absent-arm NULL-vs-0) plus the verdict-named autocorr site —
 # pinned on the deterministic zero-variance corpus that found them
 _EVENT_CONST_SUBSET = {
@@ -146,8 +146,8 @@ _EVENT_CONST_SUBSET = {
 
 def test_fuzz_events_constant_tier(spark):
     """Zero-variance daily series: every ratio-of-moments denominator
-    is exactly 0 (r8 VERDICT ask #2 — this corpus shape found three
-    real one-sided divergences on first run, all fixed in r9)."""
+    is exactly 0 (this corpus shape found three
+    real one-sided divergences on first run, all fixed)."""
     path = fuzz.corpus("events_const")
     con = fuzz.connect(path, {"events"})
     n_ok, n_skip, failures = run_fuzz(
@@ -164,7 +164,7 @@ _ORDER_CONST_SUBSET = {
 
 
 _SPARSE_SUBSET = {
-    # the nine r9 sparse-tier finds (empty-intermediate one-sided
+    # the nine sparse-tier finds (empty-intermediate one-sided
     # crashes), pinned on the 3-row warehouse that found them
     "ml_sgd_linreg", "ml_logreg_sgd", "ml_auc_exact",
     "ml_gridsearch_ridge", "ml_learning_curve", "ml_kmeans_elbow",
@@ -174,7 +174,7 @@ _SPARSE_SUBSET = {
 
 
 def test_fuzz_sparse_subset(spark):
-    """SPARSE-warehouse tier (r9): 3-row fact slices empty out most
+    """SPARSE-warehouse tier: 3-row fact slices empty out most
     selective filters, so every raise-on-empty asymmetry fires —
     element_at/slice on empty arrays, 0-determinant OLS with lam=0,
     p*n = 0 AUC, NULL-poisoned SGD batches, empty file-staging globs.
@@ -192,7 +192,7 @@ def test_fuzz_sparse_subset(spark):
 
 def test_fuzz_orders_constant_tier(spark):
     """Constant prices + rigid weekday rhythm: within-group variance
-    and m2 are exactly 0 for the orders moment statistics (the r9
+    and m2 are exactly 0 for the orders moment statistics (the
     try_divide guards on ANOVA F and Jarque-Bera are pinned here)."""
     path = fuzz.corpus("orders_const")
     con = fuzz.connect(path, {"orders"})
@@ -207,7 +207,7 @@ def test_fuzz_orders_constant_tier(spark):
 # regressions only the UNIFIED corpus can catch: the stream_ queries
 # are excluded from the events-only harness, so stream_cdc_merge_
 # snapshot's per-field-vs-per-row arg_max divergence under NULL
-# events (r7's last find) is pinned here
+# events is pinned here
 _UNIFIED_EXTRAS = {"stream_cdc_merge_snapshot"}
 
 
@@ -229,8 +229,7 @@ def test_fuzz_cross_family(spark):
 
 
 def test_fuzz_nan_subset(spark):
-    """NaN tier on the double measures (tools/fuzzcheck_nan.py, r7
-    ADVICE): NaN is a PRESENT non-NULL value, and Spark's floor maps
+    """NaN tier on the double measures (tools/fuzzcheck_nan.py): NaN is a PRESENT non-NULL value, and Spark's floor maps
     it to 0 silently — without the rd/qsum NaN guards a stray NaN
     becomes a zero inside quantized sums instead of poisoning them.
     fold_global must MATCH (NaN-propagating qsum both engines); the
@@ -246,7 +245,7 @@ def test_fuzz_nan_subset(spark):
                  "fold_reduce_option", "agg_stats_moments"):
         # NaN/inf-TOTAL contracts: non-finite elements route to the
         # same bucket/counter in both engines instead of crashing
-        # int(); agg_stats_moments (r9) poisons the whole group's
+        # int(); agg_stats_moments poisons the whole group's
         # moments to NaN explicitly on BOTH sides — DuckDB's native
         # STDDEV_POP would raise on a NaN input where Spark NaNs, so
         # the aggregates only ever see finite-masked inputs
@@ -257,13 +256,13 @@ def test_fuzz_nan_subset(spark):
         # documented domain error: CAST(NaN AS BIGINT) inside the
         # exact-decimal product is rejected by BOTH engines — a
         # both-sided engine-error, which stays a SKIP (one-sided
-        # spark-error/duck-error would be a differential red since r9)
+        # spark-error/duck-error is a differential red)
         st, detail = compare_one(
             spark, con, name, qs[name].fn, qs[name].oracle, path)
         assert st == "engine-error", (name, st, detail[:200])
 
 
-# the 26 empty-fact-tier finds (late r9): grand-total lattice rows,
+# the 26 empty-fact-tier finds: grand-total lattice rows,
 # zero-total ppm guards, map<void,void> seeds, driver-side None
 # arithmetic, empty write->read, NULL-vs-0 empty aggregates — pinned
 # on the zero-row warehouse that found them
@@ -280,7 +279,7 @@ _EMPTY_SUBSET = {
 
 
 def test_fuzz_empty_facts_subset(spark):
-    """EMPTY-fact-tables tier (late r9): zero-row facts are the
+    """EMPTY-fact-tables tier: zero-row facts are the
     day-one-partition shape — the SQL-standard () grouping set must
     survive (one grand-total row), ppm ratios NULL out like DuckDB
     x//0, literal map/array seeds built from empty collects must not
@@ -305,7 +304,7 @@ _SKEW_SUBSET = {
 
 
 def test_fuzz_monokey_skew_subset(spark):
-    """MONOKEY-skew tier (late r9): every FK/grouping key collapsed to
+    """MONOKEY-skew tier: every FK/grouping key collapsed to
     one value — single-group aggregates (kappa's zero chance-correction
     denominator), one user's giant session window, maximal tie density
     under the widened-slot argmax rule, worst-case LSH bucket load."""
@@ -331,7 +330,7 @@ _EPOCH_SUBSET = {
 
 
 def test_fuzz_epoch_straddle_subset(spark):
-    """EPOCH-straddle tier (late r9): the corpus shifted to straddle
+    """EPOCH-straddle tier: the corpus shifted to straddle
     1970-01-01 inside its original span — negative-epoch division,
     calendar truncation, and gap arithmetic must agree cross-engine
     (the tier's first run caught unix_timestamp landing one second
@@ -356,7 +355,7 @@ _DMAX_SUBSET = {
 
 
 def test_fuzz_domain_max_subset(spark):
-    """DOMAIN-MAX tier (late r9): measures scaled to the top of their
+    """DOMAIN-MAX tier: measures scaled to the top of their
     documented input domains (value ±1e6, |embedding| <= 30, prices
     ~1e6) — the magnitude regime where a product that should be
     DECIMAL(38,0)/HUGEINT-lifted overflows LONG. First full-registry
@@ -373,7 +372,7 @@ def test_fuzz_domain_max_subset(spark):
 
 
 # ----------------------------------------------------------------------
-# NEGATIVE-ZERO tier (late r9): -0.0 in double measures and embedding
+# NEGATIVE-ZERO tier: -0.0 in double measures and embedding
 # elements — numerically equal to 0.0, distinct under the repr
 # comparator, a known grouping-key normalization seam (SPARK-32110)
 # (tools/fuzzcheck_negzero.py)
@@ -402,7 +401,7 @@ def test_fuzz_negzero_subset(spark):
     assert n_ok == len(_NEGZERO_SUBSET), (n_ok, n_skip)
 
 
-# the r10 MATCHED-SPARSE tier's fixed-seed subset: the confirmed
+# the MATCHED-SPARSE tier's fixed-seed subset: the confirmed
 # DIVIDE_BY_ZERO repro (ml_grouped_ols_slopes), its mechanism
 # siblings, and one representative per join family that the FK
 # rewrite exercises (lineitem->part/supplier/orders, orders->customer,
@@ -417,12 +416,12 @@ _MATCHED_SUBSET = {
 
 
 def test_fuzz_matched_subset(spark):
-    """MATCHED-SPARSE tier (r10): facts sliced to 3 rows with FKs
+    """MATCHED-SPARSE tier: facts sliced to 3 rows with FKs
     REWRITTEN onto kept keys — joins survive into single-row and
     constant-measure groups, the zero-variance-denominator shape the
     sparse tier (real FKs -> empty joins) and the monokey tier (one
     giant group) structurally cannot produce. Pins the
-    ml_grouped_ols_slopes DIVIDE_BY_ZERO fix (r9 judge repro: three
+    ml_grouped_ols_slopes DIVIDE_BY_ZERO fix (repro: three
     n=1 brands -> Spark crash vs DuckDB NULL) and its mechanism
     class."""
     path = fuzz.corpus("matched")
@@ -436,7 +435,7 @@ def test_fuzz_matched_subset(spark):
     assert n_ok >= len(_MATCHED_SUBSET) - 1, f"too many skips: {n_skip}"
 
 
-# the r10 TIES tier's fixed subset: every selection-among-equals
+# the TIES tier's fixed subset: every selection-among-equals
 # family — window top-n, dedup keeper, ANN top-k, argmax, as-of pick,
 # stream top-k — plus the fold/sample shapes whose determinism the
 # tier certifies under full tie ambiguity
@@ -449,7 +448,7 @@ _TIES_SUBSET = {
 
 
 def test_fuzz_ties_subset(spark):
-    """TIES tier (r10): full-cardinality corpus with every measure,
+    """TIES tier: full-cardinality corpus with every measure,
     timestamp, doc text, and embedding vector pinned to ONE constant —
     every ranking/keeper/nearest-neighbor selection faces total tie
     ambiguity. A pass certifies the selection is pinned to a
@@ -466,7 +465,7 @@ def test_fuzz_ties_subset(spark):
     assert n_ok >= len(_TIES_SUBSET) - 1, f"too many skips: {n_skip}"
 
 
-# the r10 ALL-NULL-MEASURE tier's fixed subset: the five first-contact
+# the ALL-NULL-MEASURE tier's fixed subset: the five first-contact
 # divergences (Option-seed contract, NB NULL-poison denominator,
 # list()-vs-collect_list empty/NULL seam, Croston uninitialized-state
 # forecast, UDTF NULL-row crash) plus aggregate-NULL-regime canaries
@@ -480,11 +479,11 @@ _NULLM_SUBSET = {
 
 
 def test_fuzz_nullmeasures_subset(spark):
-    """ALL-NULL-MEASURE tier (r10): rows exist at full cardinality but
+    """ALL-NULL-MEASURE tier: rows exist at full cardinality but
     every nullable measure is NULL — the third regime between the 4%-
     mixed joins corpus and the zero-row empty tier (sum/avg/corr NULL,
     count(col)=0 while count(*) is large). Pins the five first-contact
-    fixes of the r10 sweep."""
+    fixes of that tier's first sweep."""
     path = fuzz.corpus("nullmeasures")
     con = fuzz.connect(path, fuzz.ALL_TABLES)
     n_ok, n_skip, failures = run_fuzz(
@@ -496,7 +495,7 @@ def test_fuzz_nullmeasures_subset(spark):
     assert n_ok >= len(_NULLM_SUBSET) - 1, f"too many skips: {n_skip}"
 
 
-# the r10 EXOTIC-PROPS tier's fixed subset: the two JSON consumers
+# the EXOTIC-PROPS tier's fixed subset: the two JSON consumers
 # (quarantine contract) plus props-adjacent events canaries that must
 # stay insensitive to the props column's content
 _PROPS_SUBSET = {
@@ -506,7 +505,7 @@ _PROPS_SUBSET = {
 
 
 def test_fuzz_props_subset(spark):
-    """EXOTIC-PROPS tier (r10): corrupt / top-level-non-object /
+    """EXOTIC-PROPS tier: corrupt / top-level-non-object /
     duplicate-key / path-colliding-key JSON documents. Pins the
     parser-quarantine contract: both engines SKIP bad documents whole
     (json.loads worker crash and DuckDB first-occurrence duplicate
@@ -522,7 +521,7 @@ def test_fuzz_props_subset(spark):
     assert n_ok >= len(_PROPS_SUBSET) - 1, f"too many skips: {n_skip}"
 
 
-# the r11 RESTART-RESUME tier's fixed subset: one representative per
+# the RESTART-RESUME tier's fixed subset: one representative per
 # stateful class — append windowed agg (guarded: its poison pass also
 # runs), complete-mode agg, applyInPandasWithState update, session
 # merge, stream-stream outer join state, chained stateful operators
@@ -534,15 +533,15 @@ _RESTART_SUBSET = {
 
 
 def test_fuzz_restart_resume_subset(spark):
-    """RESTART-RESUME tier (r11): each stream workload drained in TWO
+    """RESTART-RESUME tier: each stream workload drained in TWO
     checkpointed availableNow runs over a staging dir that grows
     between them (the incremental-ingest deployment pattern), then
     compared against its batch oracle over the full corpus — the
     watermark carry-over / state-recovery semantics no single-run
-    harness can reach (the r10 far-future-poison class). The
+    harness can reach (the far-future-poison class). The
     guarded subset member also runs its POISON pass (one year-2100
     row in drain 1 must leave the result batch-equivalent) and its
-    DRIFT pass (r12: drain 2's part2 arrives with the required
+    DRIFT pass (drain 2's part2 arrives with the required
     column renamed away — quarantine_required must dead-letter the
     null-filled rows, leaving the output equal to the part1-only
     oracle), and the unguarded drift control must show the silent

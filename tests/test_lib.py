@@ -239,7 +239,7 @@ def test_pca_power_top_matches_numpy(spark):
 
 
 def test_ml_lib_empty_training_contracts(spark):
-    """r11 driver-scalar audit: lib trainers RAISE a named contract
+    """Driver-scalar contract: lib trainers RAISE a named contract
     error on an empty training set instead of the driver-side
     None-subscript / zero-arg-array crashes `.first()[...]` and
     `take(k)` used to produce."""

@@ -1,5 +1,5 @@
 """Adversarial blob-corpus fuzz for the multimodal + custom-datasource
-plumbing (r7 verdict ask #4): these families synthesize their
+plumbing: these families synthesize their
 registry-query inputs in-query, so the table-level fuzz harnesses
 never reach them. This suite feeds the OPERATOR layer the corpus a
 100 TB media bucket actually contains — zero-byte files, NUL bytes,

@@ -343,7 +343,7 @@ def test_grand_total_on_empty_restores_lattice_row(spark):
 
 
 def test_quarantine_invalid_json_split(spark):
-    """quarantine_invalid_json enforces the r10 JSON quarantine
+    """quarantine_invalid_json enforces the JSON quarantine
     contract at the ingest boundary: corrupt documents (malformed /
     non-object / duplicate-keyed / NULL) route to the dead-letter
     leg; both legs partition the input exactly."""

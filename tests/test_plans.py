@@ -222,7 +222,7 @@ def _unpartitioned_window_specs(plan: str) -> list[str]:
 def test_vocab_coverage_no_global_window_over_vocabulary(spark, registry):
     """text_vocab_coverage must carve the top-25 out with a distributed
     TakeOrdered FIRST; the only permissible global window runs over
-    those 25 rows (post-limit). The r4 verdict flagged the old shape —
+    those 25 rows (post-limit). The shape this forbids —
     rank over the full 10^8-token distinct table."""
     plan = _plan(registry["text_vocab_coverage"].fn(spark, SF_DIR))
     assert "TakeOrderedAndProject" in plan, plan[:800]
@@ -509,7 +509,7 @@ def _persistent_ids(spark) -> set:
     counts: earlier tests in the shared session leave lazily-pinned
     blocks that the JVM GC / ContextCleaner frees at arbitrary
     moments, and a count-based assertion flakes whenever one of those
-    evictions lands mid-test (observed twice, r9 — both times the test
+    evictions lands mid-test (observed twice — both times the test
     passed in isolation). RDD ids are monotonic and never reused, so
     the new-id set is immune to background evictions."""
     jmap = spark.sparkContext._jsc.getPersistentRDDs()
@@ -648,12 +648,12 @@ def test_iterative_workloads_do_not_accumulate_pins(spark, registry):
             gc.collect()
     # 6 query executions, ≥15 iteration states created in total; only
     # the per-query live state (plus cleaner lag) may remain at any
-    # point. Without the r8 release fix `high` reaches ~15.
+    # point. Without the release handles `high` reaches ~15.
     assert high <= 4, high
 
 
 def test_graph_workloads_expose_release_handles(spark, registry):
-    """r8 VERDICT ask #8 + ADVICE: every fixpoint-backed graph result
+    """Every fixpoint-backed graph result
     — and the workload DataFrames DERIVED from one — carries the
     checkpoint release handle (``_ckpt_ids``), so a long-lived driver
     can free the final state table once its output is materialized:

@@ -87,7 +87,7 @@ def test_sample_deterministic_under_partitioning(spark, data):
 @given(data=rows, nparts=st.integers(1, 6))
 @settings(max_examples=10, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])
 def test_two_level_reduce_partition_invariant(spark, data, nparts):
-    """The r3 two-level reduce/reduceOption must equal the Python fold
+    """The two-level reduce/reduceOption must equal the Python fold
     under ANY partitioning (lawful monoid => partition grouping is
     semantically invisible)."""
     xs = _bag(spark, data)
@@ -370,7 +370,7 @@ def test_histogram_stump_matches_exhaustive_split_search(spark, data):
 
 
 # ----------------------------------------------------------------------
-# prefix-filter losslessness (pure-Python mirror of the r5 algorithm)
+# prefix-filter losslessness (pure-Python mirror of dedup_prefix_jaccard_exact)
 # ----------------------------------------------------------------------
 _setlists = st.lists(
     st.frozensets(st.integers(0, 25), min_size=1, max_size=12),

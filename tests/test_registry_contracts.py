@@ -2,10 +2,10 @@
 
 Two hazard classes the per-query differential CANNOT catch locally:
 
-1. Version-sensitive oracle constructs (the r5 driver reds): local
+1. Version-sensitive oracle constructs (a driver-red class): local
    DuckDB accepts them, the driver's engine/data disagrees. Guarded by
    tools/oraclelint.py, run here so a new query can't merge dirty.
-2. Complex-typed output columns (the r4 ``array_hof_surface`` red):
+2. Complex-typed output columns (the ``array_hof_surface`` red):
    the driver's pandas canonicalizer mangles array/map/struct cells, so
    every registry query must serialize them to scalars (joined strings
    / JSON) before returning. Guarded by walking every query's SCHEMA
@@ -27,7 +27,7 @@ def test_oracle_lint_clean():
 
 
 def test_whitespace_tokenization_contract(spark, tmp_path):
-    """The r5 driver-red mechanism, reproduced and guarded: Java `\\s`
+    """A driver-red mechanism, reproduced and guarded: Java `\\s`
     includes \\x0B, DuckDB RE2 `\\s` does not, so documents containing
     edge whitespace tokenized differently per engine. The explicit
     WS_RE class must agree byte-for-byte on data the testdata corpus
@@ -171,7 +171,7 @@ def test_text_contract_unicode_fuzz(spark, tmp_path):
 
 def test_json_numeric_grammar_fuzz(spark, tmp_path):
     """Adversarial differential for the JSON numeric-coercion contract
-    (the r5 ``udtf_expand_props`` driver-red class): props values
+    (the ``udtf_expand_props`` driver-red class): props values
     spanning ±2^70 ints, floats, int/float/exp strings with ASCII and
     UNICODE whitespace, '9_0'/'0x10'/inf/nan, bools, nulls, nested
     objects/arrays — and keys containing dots, spaces, quotes, and
@@ -240,7 +240,7 @@ def test_json_numeric_grammar_fuzz(spark, tmp_path):
 
 def test_output_type_identity(registry_builds):
     """Every oracle output column's DuckDB type must land in the SAME
-    pandas dtype family as the Spark column — the r6 driver-red class.
+    pandas dtype family as the Spark column — the HUGEINT driver-red class.
 
     The predecessor test read the DBAPI cursor ``description``, which
     reports the generic ``'NUMBER'`` for every numeric type, so its
@@ -260,7 +260,7 @@ def test_output_type_identity(registry_builds):
 
 
 def test_diffcheck_catches_hugeint_oracle(spark):
-    """Regression for the r6 red class: the local comparator must FAIL
+    """Regression for the HUGEINT red class: the local comparator must FAIL
     a query whose oracle column is HUGEINT even when every value is
     numerically identical — ``fetchall()``-based comparison could not
     see it (HUGEINT -> Python int) and called 14 driver reds green
@@ -333,8 +333,38 @@ def test_build_jobs_do_not_rise(registry_builds):
     )
 
 
+@pytest.mark.parametrize("second", [3, 2], ids=["agree", "disagree"])
+def test_build_job_census_needs_two_agreeing_sweeps(
+    tmp_path, monkeypatch, capsys, second
+):
+    """``tools/buildjobs.py`` writes the census only when two sweeps
+    count the same jobs for every query; when one query moves it names
+    the query with both counts, exits nonzero and leaves the file as it
+    was. Spark-free: the sweep is stubbed."""
+    import json
+
+    from tools import buildjobs
+
+    sweeps = iter([
+        {"q_stable": buildjobs.Build(None, 1), "q_moving": buildjobs.Build(None, n)}
+        for n in (3, second)
+    ])
+    monkeypatch.setattr(buildjobs, "build_all", lambda spark, sf_dir: next(sweeps))
+    path = tmp_path / "build_jobs.json"
+    path.write_text("untouched\n")
+    status = buildjobs.census(None, path)
+    out = capsys.readouterr().out
+    if second == 3:
+        assert status == 0
+        assert json.loads(path.read_text()) == {"q_moving": 3, "q_stable": 1}
+    else:
+        assert status != 0
+        assert path.read_text() == "untouched\n"
+        assert "q_moving: 3 then 2 jobs" in out and "q_stable" not in out
+
+
 def test_qsum_beyond_long_ceiling(spark):
-    """The r10 split-sum contract: a global total whose quantized sum
+    """The split-sum contract: a global total whose quantized sum
     exceeds 2^63 units (the old LONG path's ANSI-raise ceiling — the
     bound a 100 TB global revenue total actually crosses) sums
     exactly and matches DuckDB's HUGEINT mirror bit-for-bit. Negative
@@ -366,7 +396,7 @@ def test_qsum_beyond_long_ceiling(spark):
 
 
 def test_qsum_decimal_input_pins_long_path(spark):
-    """The r10 ADVICE latent: a DECIMAL input column must quantize
+    """A DECIMAL input column must quantize
     through the DOUBLE cast, not decimal arithmetic (where Spark's
     division ROUNDS HALF_UP at the result scale). qsum over the same
     values as DECIMAL and as DOUBLE must agree, and both must match
@@ -478,7 +508,7 @@ def test_sum_long_exact_split_boundaries(spark):
 
 
 def test_mta_linear_credit_null_tid_tie_break(spark, tmp_path):
-    """The r10 ADVICE seam: a real touch row with NULL event_id tying
+    """A real touch row with NULL event_id tying
     on tt must take the SAME row_number on both engines (Spark ASC
     defaults NULLS FIRST, DuckDB NULLS LAST — both now pin NULLS
     LAST), so the largest-remainder +1 cent lands on the same

@@ -1,4 +1,4 @@
-"""Regression pins for the r9 redundant-scan sweep: the flagged plans
+"""Regression pins for the redundant-scan sweep: the flagged plans
 that were fixed must stay fixed. Each assertion compiles the query's
 physical plan (no execution) and checks the same-table FileScan
 multiplicity stays at the audited post-fix level — a reverted pin or a
@@ -53,7 +53,7 @@ def test_scan_multiplicity_stays_fixed(spark, name, table, max_scans):
     )
 
 
-# r11 (verdict ask #6): the BNLJ-warn adjudications claim each
+# The BNLJ-warn adjudications claim each
 # BroadcastNestedLoopJoin's build side is a bounded k-row fan-out,
 # never data-scaled. Measured at sf0.001/sf0.01/sf0.1: identical.
 # (query, expected broadcast-side row counts — one per BNLJ in plan)

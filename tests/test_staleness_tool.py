@@ -1,6 +1,6 @@
 """Unit coverage for tools/staleness.py's static analysis — the parts
 that must stay correct for the driver-window changed tier to be
-derived rather than hand-listed (r8 verdict ask #1). The git-walking
+derived rather than hand-listed. The git-walking
 end-to-end path runs in the round-close ritual; here we pin the
 resolution semantics that broke during development:
 
@@ -60,7 +60,7 @@ def test_module_relative_import_resolution_strips_module_name():
     qid, body, def_mod = idx.resolve("emma_spark.workloads.relational", "qsum")
     assert qid == "emma_spark.workloads.qsum"
     assert def_mod == "emma_spark.workloads"
-    assert body and "coalesce" in body  # the r9 two-aggregate form
+    assert body and "coalesce" in body  # the two-aggregate form
 
 
 def test_closure_reaches_shared_helpers_and_oracle():

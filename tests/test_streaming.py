@@ -6,7 +6,6 @@ from __future__ import annotations
 
 import datetime
 import os
-import tempfile
 
 import pandas as pd
 import pytest
@@ -282,7 +281,7 @@ def test_pyds_stream_resumes_from_checkpointed_offset(spark, tmp_path):
 
 
 def test_watermark_epoch_floor_contract(spark, tmp_path):
-    """DOMAIN CONTRACT (late r9, epoch-straddle tier): Spark's
+    """DOMAIN CONTRACT (epoch-straddle tier): Spark's
     watermark metric is floored at epoch 0, so a watermarked append
     aggregation SILENTLY drops every pre-1970 window as late — while
     post-epoch windows from the same corpus emit. If this test ever
@@ -490,7 +489,7 @@ def _drain_to_parquet(stream_df, out, ckpt):
 
 
 def test_far_future_poison_restart_resume(spark, tmp_path):
-    """The r10 judge-confirmed silent mass-drop, closed by
+    """The confirmed silent mass-drop, closed by
     quarantine_future_skew: two availableNow drains share a
     checkpoint (the incremental-ingest deployment pattern); drain 1
     carries 5 real hourly events plus ONE corrupt year-2100 row (the
@@ -582,7 +581,7 @@ def test_far_future_poison_restart_resume(spark, tmp_path):
 
 
 def test_late_data_across_restart_drops_per_carried_watermark(spark, tmp_path):
-    """LATE-DROP ACCOUNTING across a restart (r11, completing the
+    """LATE-DROP ACCOUNTING across a restart (completing the
     restart-resume tier: its median split avoids late rows by
     construction, so this pins the drop side explicitly). Drain 1
     carries 10 hourly events; its terminal no-data batch checkpoints
@@ -649,8 +648,8 @@ def test_late_data_across_restart_drops_per_carried_watermark(spark, tmp_path):
 
 
 def test_out_of_order_file_arrival_drops_within_single_run(spark, tmp_path):
-    """THE ARRIVAL-ORDER FACE of the watermark domain contract (r11 —
-    completing pre-epoch and future-skew, which both need a corrupt
+    """THE ARRIVAL-ORDER FACE of the watermark domain contract
+    (completing pre-epoch and future-skew, which both need a corrupt
     timestamp; this one needs NONE). The watermark advances BETWEEN
     micro-batches inside a single run, and the file source feeds
     batches in file MODIFICATION-TIME order — so when arrival order
@@ -861,7 +860,7 @@ def _stage_one(spark, tmp_path, src, rows, fname,
 def test_window_duration_change_on_live_checkpoint_is_silently_wrong(
         spark, tmp_path):
     """CHARACTERIZE the one query-evolution class Spark accepts
-    silently wrong (probed r11; the reason pin_topology exists):
+    silently wrong (probed; the reason pin_topology exists):
     restart a 1 h tumbling aggregation on its live checkpoint with the
     window widened to 2 h. No error — and the output mixes the two
     schemes: the carried 1 h state row [04:00,05:00) evicts as-is
@@ -971,7 +970,7 @@ def test_pin_topology_blocks_changed_restart(spark, tmp_path):
 
 def test_source_repoint_on_live_checkpoint_double_counts_open_windows(
         spark, tmp_path):
-    """The THIRD topology-drift case (r11, completing window-duration
+    """The THIRD topology-drift case (completing window-duration
     and group-keys): repoint the query at a directory holding the
     SAME data under a NEW path, restarting on the live checkpoint.
     The file source's seen-files log keys by absolute path, so the
@@ -1043,7 +1042,7 @@ def test_pin_topology_resolves_checkpoint_uris(spark, tmp_path):
 
 def test_quarantine_required_split(spark):
     """quarantine_required enforces the REQUIRED-COLUMNS ingest
-    contract (the r11 source-schema-drift guard): rows NULL in ANY
+    contract (the source-schema-drift guard): rows NULL in ANY
     required column ride the quarantine leg, a multi-NULL row appears
     exactly once, and valid ∪ quarantine == input row-for-row."""
     rows = [
@@ -1064,9 +1063,9 @@ def test_quarantine_required_split(spark):
 
 
 def test_quarantine_null_reference_routes_to_quarantine(spark):
-    """r11 ADVICE (medium): with an ingest-time ``now_col``, a NULL
-    reference value used to make BOTH legs' predicates NULL, so the
-    row landed on NEITHER — a silent drop inside the operator built
+    """With an ingest-time ``now_col``, a NULL reference value makes
+    BOTH legs' predicates NULL, so unguarded the row would land on
+    NEITHER — a silent drop inside the operator built
     to prevent silent drops. Pinned: NULL-reference rows ride the
     quarantine leg in both quarantine_future_skew and
     quarantine_out_of_band, and valid ∪ quarantine == input."""
@@ -1086,7 +1085,7 @@ def test_quarantine_null_reference_routes_to_quarantine(spark):
 
 
 def _schema_drift_corpus(spark, tmp_path):
-    """The r11 judge repro corpus: drain-1 files carry (k, ts, value);
+    """The schema-drift repro corpus: drain-1 files carry (k, ts, value);
     the producer then renames value→amount, so drain-2 files carry
     (k, ts, amount). Returns (src, pinned_schema_string)."""
     import shutil
@@ -1111,8 +1110,8 @@ def _schema_drift_corpus(spark, tmp_path):
 
 
 def test_source_schema_drift_null_fills_unguarded(spark, tmp_path):
-    """THE COLUMN FACE of the ingest contract, UNGUARDED — the r11
-    judge-confirmed hazard pinned exactly (so we notice if Spark ever
+    """THE COLUMN FACE of the ingest contract, UNGUARDED — the
+    confirmed hazard pinned exactly (so we notice if Spark ever
     starts rejecting it): drain 1 streams (k, ts, value) through a
     windowed sum on a checkpoint; the producer renames value→amount
     and drain 2 resumes from the same checkpoint with the same pinned
@@ -1246,7 +1245,7 @@ def test_pin_topology_source_schema_refuses_drifted_reinference(spark, tmp_path)
 
 
 def test_shuffle_partition_change_across_restart_is_ignored(spark, tmp_path):
-    """Restart-evolution knob (r11 verdict ask #4a), probed + pinned:
+    """Restart-evolution knob, probed + pinned:
     a streaming query pins its state-partition count in the
     checkpoint at FIRST start, so restarting under a changed
     ``spark.sql.shuffle.partitions`` silently keeps the original
@@ -1307,7 +1306,7 @@ def test_shuffle_partition_change_across_restart_is_ignored(spark, tmp_path):
 
 
 def test_sink_repoint_on_live_checkpoint_strands_both_outputs(spark, tmp_path):
-    """Restart-evolution knob (r11 verdict ask #4b), probed + pinned —
+    """Restart-evolution knob, probed + pinned —
     pin_topology's docstring argued the sink path belongs in the
     fingerprint; this is the measured behavior that makes it true.
     Repointing the OUTPUT path of a parquet-sink query on its live
@@ -1375,7 +1374,7 @@ def test_sink_repoint_on_live_checkpoint_strands_both_outputs(spark, tmp_path):
 
 def test_no_data_microbatches_off_suppresses_final_flush(spark, tmp_path):
     """THE CONF DEPENDENCE of every bounded append-mode drain, made
-    explicit (r11 verdict ask #5): the final-watermark flush — the
+    explicit: the final-watermark flush — the
     no-data micro-batch that runs after availableNow exhausts the
     input, advances the watermark to max(ts) − delay, and emits every
     finalized window — exists only while
@@ -1436,40 +1435,75 @@ def test_run_to_memory_checkpoint_is_local_scratch(
     assert list(tmp_path.iterdir()) == []
 
 
-@pytest.mark.parametrize(
-    "free_mb, base", [(1, "tmp"), (1 << 20, "/dev/shm")], ids=["low", "roomy"]
+_CKPT_MANAGER = "spark.sql.streaming.checkpointFileManagerClass"
+_FS_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
 )
-def test_run_to_memory_checkpoint_needs_room_in_dev_shm(
-    spark, staged_events, tmp_path, monkeypatch, free_mb, base
+_FC_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileContextBasedCheckpointFileManager"
+)
+
+
+def _conf_at_start(monkeypatch, spark, *keys):
+    """Record the session's value of each key every time a streaming
+    query starts; returns the list the records are appended to."""
+    from pyspark.sql.streaming.readwriter import DataStreamWriter
+
+    seen = []
+    start = DataStreamWriter.start
+
+    def recording_start(self, *args, **kwargs):
+        seen.append({k: spark.conf.get(k, None) for k in keys})
+        return start(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataStreamWriter, "start", recording_start)
+    return seen
+
+
+@pytest.mark.parametrize("preset", [None, _FC_MANAGER], ids=["unset", "preset"])
+def test_run_to_memory_scratch_checkpoint_uses_filesystem_manager(
+    spark, staged_events, monkeypatch, preset
 ):
-    """On a local master the drain checkpoints in /dev/shm only when
-    ``statvfs`` reports at least ``SHM_MIN_FREE_BYTES`` free there;
-    otherwise it checkpoints in ``tempfile.gettempdir()``."""
-    import shutil
-    import types
-
-    if not os.path.isdir("/dev/shm"):
-        pytest.skip("no /dev/shm")
+    """A drain's scratch checkpoint is written through the FileSystem
+    checkpoint manager (no forked ``readlink`` per rename); the
+    caller's own setting of that conf is back after the drain, unset
+    if it was unset."""
     monkeypatch.delenv("SPARK_GRAFT_STREAM_CKPT", raising=False)
-    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
-    statvfs = os.statvfs
-    shm = types.SimpleNamespace(f_bavail=free_mb * 256, f_frsize=4096)
-    monkeypatch.setattr(
-        os, "statvfs", lambda p: shm if p == "/dev/shm" else statvfs(p)
-    )
-    removed = []
-    real_rmtree = shutil.rmtree
+    if preset is not None:
+        spark.conf.set(_CKPT_MANAGER, preset)
+    try:
+        seen = _conf_at_start(monkeypatch, spark, _CKPT_MANAGER)
+        batch = spark.read.parquet(staged_events)
+        stream = S.read_stream_parquet(spark, staged_events, batch.schema)
+        drained = S.run_to_memory(
+            stream.groupBy("event_type").count(), output_mode="complete"
+        )
+        assert seen == [{_CKPT_MANAGER: _FS_MANAGER}]
+        assert spark.conf.get(_CKPT_MANAGER, None) == preset
+        assert drained.count() == batch.select("event_type").distinct().count()
+    finally:
+        spark.conf.unset(_CKPT_MANAGER)
 
-    def rmtree(path, **kw):
-        removed.append(str(path))
-        real_rmtree(path, **kw)
 
-    monkeypatch.setattr(shutil, "rmtree", rmtree)
+def test_run_to_memory_restores_conf_when_start_raises(
+    spark, staged_events, monkeypatch
+):
+    """A drain whose query fails to start (complete mode on a stream
+    with no aggregation) still puts back both confs it set for the
+    drain: the state-partition count and the checkpoint manager."""
+    monkeypatch.delenv("SPARK_GRAFT_STREAM_CKPT", raising=False)
+    partitions = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(partitions)
+    seen = _conf_at_start(monkeypatch, spark, partitions, _CKPT_MANAGER)
     batch = spark.read.parquet(staged_events)
     stream = S.read_stream_parquet(spark, staged_events, batch.schema)
-    S.run_to_memory(stream.groupBy("event_type").count(), output_mode="complete")
-    (ckpt,) = [p for p in removed if "emma_drain_" in p]
-    assert os.path.dirname(ckpt) == (str(tmp_path) if base == "tmp" else base)
+    with pytest.raises(Exception, match="(?i)complete"):
+        S.run_to_memory(stream, output_mode="complete", state_partitions=3)
+    assert seen == [{partitions: "3", _CKPT_MANAGER: _FS_MANAGER}]
+    assert spark.conf.get(partitions) == before
+    assert spark.conf.get(_CKPT_MANAGER, None) is None
 
 
 def test_stream_staging_runs_once_per_process(spark, tables, monkeypatch):

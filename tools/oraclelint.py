@@ -1,5 +1,5 @@
 """Oracle portability lint — bans the construct classes behind every
-cross-engine hash red to date (r5 verdict #4).
+cross-engine hash red to date.
 
 Each rule targets a way two engines (or two versions of one engine) can
 legally disagree while both "work":
@@ -58,7 +58,7 @@ RULES: list[tuple[str, re.Pattern[str]]] = [
 
 
 def _ungated_props_json(sql: str) -> re.Match | None:
-    """r10 exotic-props finds: ``props`` is an ingest-boundary column —
+    """Exotic-props finds: ``props`` is an ingest-boundary column —
     a 100 TB corpus contains malformed / non-object / duplicate-key
     documents, and DuckDB's ``json_*`` functions RAISE on malformed
     input (``''::JSON`` included) while Spark-side guards yield
@@ -76,7 +76,7 @@ def _ungated_props_json(sql: str) -> re.Match | None:
 def _one_arg_trim(sql: str) -> re.Match | None:
     """DuckDB's 1-arg trim strips UNICODE space characters (U+00A0,
     U+1680, U+3000, ...) while Spark's F.trim strips only ASCII space —
-    found by the r6 unicode fuzz. Require the explicit 2-arg form."""
+    found by the unicode fuzz. Require the explicit 2-arg form."""
     for m in re.finditer(r"\btrim\s*\(", sql):
         i, depth, has_second = m.end(), 1, False
         while depth and i < len(sql):

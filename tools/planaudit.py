@@ -51,7 +51,7 @@ def bnlj_broadcast_rows(df) -> list[int]:
     runtime metric). This turns the "bounded k-row fan-out" claim the
     BNLJ-warn adjudications rest on into a measurement: a documented
     bounded class must show a small, SF-invariant number here, never
-    one that scales with the data (r10 verdict ask #6)."""
+    one that scales with the data."""
     df.collect()
     out: list[int] = []
 

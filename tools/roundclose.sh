@@ -4,9 +4,9 @@
 # Each step appends to .local/roundclose_<tag>.log; the script stops
 # on the first red so a failure is the first thing in the tail.
 #
-#   bash tools/roundclose.sh r9
+#   bash tools/roundclose.sh TAG    (TAG names the log file)
 #
-# Steps (the standing ritual assembled from r7-r9 verdict asks):
+# Steps (the standing ritual):
 #   1. full pytest                      (correctness + fixed-seed fuzz)
 #   2. staleness audit                  (changed tier empty / staged)
 #   3. cross-family fuzz --all          (every table-backed oracle on
@@ -67,13 +67,13 @@ python tools/planaudit.py $HEADS 2>/dev/null | tail -25 | tee -a "$LOG"
 
 note "7a/7 BNLJ bounded-class audit at sf0.1 (measured, not asserted)"
 # every documented BroadcastNestedLoopJoin's build side must stay a
-# k-row constant at bench scale (r10 verdict ask #6)
+# k-row constant at bench scale
 SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 python tools/planaudit.py --bnlj 2>/dev/null \
   | tee -a "$LOG"
 
 note "7b/7 redundant-scan audit (full registry)"
 # same-table FileScan multiplicity in one lazy plan: the
-# 1-row-aggregate fan-out pathology (r9 found 24x/48x instances).
+# 1-row-aggregate fan-out pathology (24x/48x instances were found).
 # Dim tables (region/nation) and size-gated toy-graph unrolls are the
 # documented benign classes — judge the table named in each flag.
 python tools/scanaudit.py 2>/dev/null | tail -25 | tee -a "$LOG"

@@ -4,7 +4,7 @@ scanned. A query that scans the same table k >= THRESH times almost
 always has the 1-row-aggregate fan-out pathology (every reference to an
 unpinned aggregate recompiles its full lineage — Catalyst does not
 unify distinct plan branches), which multiplies I/O by k at 100 TB.
-ml_gbdt_residual_boost compiled 24 lineitem scans before r9 fixed it;
+ml_gbdt_residual_boost once compiled 24 lineitem scans;
 this tool exists so the next instance is found by sweep, not by
 accident.
 

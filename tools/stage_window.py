@@ -64,7 +64,7 @@ def main() -> int:
     # check=True: a staleness.py crash must ABORT the staging, not
     # silently stage an empty 'changed' tier — treating empty output
     # as 'nothing stale' is exactly the stale-green-is-not-a-green
-    # failure mode this tool exists to prevent (r9 ADVICE).
+    # failure mode this tool exists to prevent.
     proc = subprocess.run(
         [sys.executable, str(REPO / "tools" / "staleness.py"), "--list"],
         capture_output=True, text=True, cwd=REPO,

@@ -1,5 +1,5 @@
 """Stale-green detector: which driver-green rows predate the code
-they certify? (r8 VERDICT ask #1 — "a stale green is not a green",
+they certify? ("a stale green is not a green",
 and deriving the changed tier by hand each round kept missing names.)
 
 For every registry query this tool computes a CONTENT HASH of the
@@ -53,11 +53,11 @@ def round_refs() -> dict[int, str | None]:
     (the end-of-round snapshot; the verdict commit — docs only — as
     fallback for rounds whose snapshot message differs).
 
-    WORKING-TREE FALLBACK (r10 verdict "what's wrong" #2): the
+    WORKING-TREE FALLBACK: the
     CURRENT round's CORRECTNESS file lands before its snapshot commit
     exists, so mid-cycle runs used to orphan the newest greens —
     shared helpers they re-certify transiently reported
-    STALE-UNCOVERED (r10: 14 phantom names at judge time). If the
+    STALE-UNCOVERED (14 phantom names in one audit). If the
     max round seen in CORRECTNESS files has no snapshot/verdict
     commit yet, map it to ``None`` = the working tree: a green taken
     THIS round certifies the code as it is NOW, which is exactly

@@ -1,4 +1,4 @@
-"""Cross-engine output-TYPE identity scan (the r6 driver-red class).
+"""Cross-engine output-TYPE identity scan (the HUGEINT driver-red class).
 
 The driver canonicalizes BOTH result sets through pandas before
 hashing. DuckDB HUGEINT — what ``sum(BIGINT)`` and window sums
